@@ -51,14 +51,6 @@ MAX_BLOCK = 32  # LSH skew guard: cap degenerate mega-blocks
 # this is the CC analog of AQE's runtime broadcast conversion.
 DRIVER_CC_MAX_EDGES = 200_000
 
-# Optional profiling sink (tools/profile_pipeline.py): when set to a dict,
-# connected_components records sub-stage walls into it — candidate-pair
-# materialization vs the CC loop is exactly the attribution the scaling
-# gate needs, and it is invisible from outside (the eager loop runs at
-# canonical_map call time).
-PROFILE: dict | None = None
-
-
 def normalize_mentions(mentions: DataFrame) -> DataFrame:
     """Attach normalized name + content key to each mention."""
     return mentions.withColumn("name", canonical_name(F.col("surface"))).where(
@@ -66,10 +58,14 @@ def normalize_mentions(mentions: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(names: DataFrame, threshold: float = 0.30) -> DataFrame:
+def candidate_pairs(
+    names: DataFrame, threshold: float = 0.30, *, cached: list[DataFrame] | None = None
+) -> DataFrame:
     """Verified similar pairs (name_a, name_b) from LSH blocks.
 
     ``names``: one row per distinct normalized name, column ``name``.
+    ``cached``: the intermediate frames this call persists are appended
+    here, for the caller to release once the pairs are consumed.
 
     Verification is **idf-weighted shingle Jaccard**: a shingle's weight is
     ln(1 + N/df), so rare shingles ("z9a" of a malware name) dominate and
@@ -80,23 +76,14 @@ def candidate_pairs(names: DataFrame, threshold: float = 0.30) -> DataFrame:
     weighted form can.  Token containment (=1.0) additionally catches
     short-in-long variants ("zeus" ⊂ "zeus trojan").
     """
-    # persisted: every downstream branch (LSH keys, token keys, candidate
-    # feature fetch) hangs off this frame — without the persist each branch
-    # recomputes the shingle chain.  ``names`` arrives already distinct
-    # (canonical_map dedups the surface universe); re-distincting here was
-    # a full extra shuffle of the name strings.  Duplicate inputs would
-    # still be CORRECT (cand dropDuplicates + feats groupBy absorb them),
-    # just slower.
-    import time as _time  # noqa: PLC0415
+    # ``names`` arrives already distinct (canonical_map dedups the surface
+    # universe); re-distincting here was a full extra shuffle of the name
+    # strings.  Duplicate inputs would still be CORRECT (cand
+    # dropDuplicates + feats groupBy absorb them), just slower.
+    cached = [] if cached is None else cached
 
-    def _prof(df: DataFrame, tag: str) -> DataFrame:
-        """PROFILE-mode sub-attribution: force persisted frames with a
-        count barrier and record wall + cardinality.  No-op otherwise."""
-        if PROFILE is not None:
-            t0 = _time.time()
-            n = df.count()
-            PROFILE[f"cand_{tag}_s"] = round(_time.time() - t0, 2)
-            PROFILE[f"cand_{tag}_n"] = n
+    def persist(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
         return df
 
     # NOT persisted (round-5 measurement, the turns-cache lesson applied
@@ -104,11 +91,10 @@ def candidate_pairs(names: DataFrame, threshold: float = 0.30) -> DataFrame:
     # BUILD (InMemoryRelation materializes the wide array column) than
     # its consumers save — each consumer recomputes the shingle split
     # from the slim cached ``names`` frame as pure map-side codegen.
-    base = _prof(
+    base = (
         names.select("name")
         .withColumn("sh", shingles(F.col("name"), 3))
-        .where(F.size("sh") > 0),
-        "base",
+        .where(F.size("sh") > 0)
     )
 
     # Global work is ONLY the shingle document frequencies (one cheap agg
@@ -227,7 +213,7 @@ def candidate_pairs(names: DataFrame, threshold: float = 0.30) -> DataFrame:
     # persisted: both the band-size agg and the block-extraction pass read
     # this frame — without the persist the minhash/token key chain runs
     # twice
-    keys = _prof(lsh_keys.unionByName(token_keys).persist(), "keys")
+    keys = persist(lsh_keys.unionByName(token_keys))
     # LSH skew guard + singleton drop in ONE narrow aggregation: the band
     # SIZE histogram shuffles (band64, partial count) — map-side combined,
     # 8-byte keys — and the USEFUL bands (2 ≤ bn ≤ MAX_BLOCK) broadcast
@@ -251,12 +237,11 @@ def candidate_pairs(names: DataFrame, threshold: float = 0.30) -> DataFrame:
     # a<b pair triangle expands via a codegen double explode (the same
     # pair multiset the old band self-join produced, without any
     # vocabulary-scale shuffle).
-    blocks = _prof(
+    blocks = (
         keys.join(F.broadcast(useful), "band", "left_semi")
         .groupBy("band")
         .agg(F.collect_list("name").alias("ns"))
-        .where(F.size("ns") >= 2),
-        "blocked",
+        .where(F.size("ns") >= 2)
     )
     pair_src = blocks.select(F.explode("ns").alias("name_a"), "ns").select(
         "name_a", F.explode("ns").alias("name_b")
@@ -295,13 +280,13 @@ def candidate_pairs(names: DataFrame, threshold: float = 0.30) -> DataFrame:
     # Build idf-weighted features for candidate names only and re-attach
     # (two hash joins at candidate cardinality — orders of magnitude
     # smaller than the blocked frame).
-    cand = _prof(cand.persist(), "pairs")
+    cand = persist(cand)
     cand_names = (
         cand.select(F.col("name_a").alias("name"))
         .unionByName(cand.select(F.col("name_b").alias("name")))
         .distinct()
     )
-    feats = _prof(weighted_features(cand_names).persist(), "feats")
+    feats = persist(weighted_features(cand_names))
     feat_a = feats.select(
         F.col("name").alias("name_a"),
         F.col("sh").alias("sh_a"),
@@ -366,9 +351,6 @@ def connected_components(
     identical output, none of the loop's per-stage latency; pass 0 to
     force the distributed loop (tests pin its behavior that way).
     """
-    import time as _time  # noqa: PLC0415
-
-    t0 = _time.time()
     spark = edges.sparkSession
     # The similarity graph is orders of magnitude smaller than the corpus
     # (one edge per verified name pair), so the loop's shuffles are tiny —
@@ -414,10 +396,6 @@ def connected_components(
         finally:
             spark.conf.set(aqe_key, aqe_prev)
         if len(sample) <= cap:
-            if PROFILE is not None:
-                PROFILE["cc_edges_materialize_s"] = round(_time.time() - t0, 2)
-                PROFILE["cc_n_edges"] = len(sample)
-            t0 = _time.time()
             # path-halving union-find with min-root union — exactly the
             # loop's fixpoint (component = min member), zero shuffles.
             parent: dict[str, str] = {}
@@ -437,9 +415,6 @@ def connected_components(
             out_rows = [(x, find(x)) for x in parent]
             spark.conf.set(pf_key, pf_prev)
             spark.conf.set(sp_key, sp_prev)
-            if PROFILE is not None:
-                PROFILE["cc_loop_s"] = round(_time.time() - t0, 2)
-                PROFILE["cc_rounds"] = 0
             return spark.createDataFrame(out_rows, "name string, component string")
     e = e_raw.distinct().localCheckpoint(eager=True)
     # Stage-latency guard: the similarity graph is usually orders of
@@ -450,10 +425,6 @@ def connected_components(
     # run the loop's shuffles at parallelism 1; big graphs keep the full
     # width.  The count is free: e was just checkpoint-materialized.
     n_edges = e.count()
-    if PROFILE is not None:
-        PROFILE["cc_edges_materialize_s"] = round(_time.time() - t0, 2)
-        PROFILE["cc_n_edges"] = n_edges
-    t0 = _time.time()
     if n_edges < 200_000:
         e = e.coalesce(1).localCheckpoint(eager=True)
         spark.conf.set(sp_key, "1")
@@ -501,10 +472,8 @@ def connected_components(
     # serial fraction; lineage depth stays bounded at two rounds.
     try:
         prev = signature(e)
-        n_rounds = 0
         for _ in range(max_iter // 2):
             e = alternate(alternate(e)).localCheckpoint(eager=True)
-            n_rounds += 1
             cur = signature(e)
             if cur == prev:
                 break
@@ -512,9 +481,6 @@ def connected_components(
     finally:
         spark.conf.set(pf_key, pf_prev)
         spark.conf.set(sp_key, sp_prev)
-    if PROFILE is not None:
-        PROFILE["cc_loop_s"] = round(_time.time() - t0, 2)
-        PROFILE["cc_rounds"] = n_rounds
 
     # At convergence e is (node → component-min) star edges.  Component
     # roots appear only on the v side, so add their self-mapping, then take
@@ -542,10 +508,14 @@ def canonical_map(
     component graph; MinHash-LSH supplies the edges for surface variants the
     KB does not know.  Names that never match anything form singleton
     components (their own name is the canonical label).
+
+    The connected-components loop runs eagerly inside this call; the
+    returned frame is the exception set (``canonical_exceptions``) plus
+    the identity default over the name universe.
     """
-    named = normalize_mentions(mentions)
-    names = named.select("name").distinct()
-    return canonical_map_from_names(names, threshold, alias_edges)
+    names = normalize_mentions(mentions).select("name").distinct()
+    exc = canonical_exceptions(names, threshold, alias_edges)
+    return attach_canonical(names, exc).select("name", "canonical_id", "canonical_label")
 
 
 def canonical_exceptions(
@@ -559,42 +529,41 @@ def canonical_exceptions(
     This is the scale-critical observation of the whole canonicalization
     stage: the map is IDENTITY for every name that never matched anything
     (the overwhelming majority — at the bench corpus, 4M names produce a
-    few dozen verified pairs), so the full name→canonical dictionary
-    never needs to exist as data.  Consumers resolve via
+    few dozen verified pairs), so consumers resolve names through
     ``attach_canonical``: a join against this exception set (tiny →
-    AQE auto-broadcasts; degrades gracefully to a shuffle join if a
-    corpus ever yields a huge variant graph) plus an inline
-    ``sha2(coalesce(component, name))`` — no vocabulary-scale dictionary
-    shuffle anywhere on the hot path.
+    broadcast) plus an inline ``sha2(coalesce(component, name))`` — no
+    vocabulary-scale dictionary shuffle anywhere on the hot path.
+
+    Every frame persisted on the way is released before returning: the
+    components are collected (driver union-find) or checkpointed (star
+    loop), so the result no longer depends on them.
     """
-    names = names.persist()
-    pairs = candidate_pairs(names, threshold)
-    if alias_edges is not None:
-        # only keep alias edges whose endpoints actually occur in the
-        # corpus.  Broadcast DIRECTION matters at scale: the gazetteer is
-        # bounded (hundreds of rows), the name universe is vocabulary-scale
-        # (millions) — semi-joining the gazetteer against the universe
-        # shuffled the universe TWICE just to filter a static edge list
-        # (measured inside the CC-edge materialization, the pipeline's
-        # non-scaling floor).  Instead: broadcast the gazetteer's endpoint
-        # set, map-side filter the cached universe down to the occurring
-        # endpoints (tiny by construction), and broadcast THAT back against
-        # the edge list — zero vocabulary shuffles.
-        ep = alias_edges.select(
-            F.explode(F.array("name_a", "name_b")).alias("name")
-        ).distinct()
-        # not persisted (leak hygiene): the two broadcast builds each scan
-        # the CACHED name universe map-side with a broadcast-hash filter —
-        # sub-second at vocabulary scale, no shuffle either way.
-        occ = names.join(F.broadcast(ep), "name", "left_semi")
-        occ_a = occ.select(F.col("name").alias("name_a"))
-        occ_b = occ.select(F.col("name").alias("name_b"))
-        pairs = pairs.unionByName(
-            alias_edges.join(F.broadcast(occ_a), "name_a", "left_semi")
-            .join(F.broadcast(occ_b), "name_b", "left_semi")
-            .select("name_a", "name_b")
-        )
-    comp = connected_components(pairs)
+    cached = [names.persist()]
+    try:
+        pairs = candidate_pairs(names, threshold, cached=cached)
+        if alias_edges is not None:
+            # only keep alias edges whose endpoints actually occur in the
+            # corpus.  Broadcast DIRECTION matters at scale: the gazetteer
+            # is bounded (hundreds of rows), the name universe is
+            # vocabulary-scale — so broadcast the gazetteer's endpoint set,
+            # map-side filter the cached universe down to the occurring
+            # endpoints (tiny by construction), and broadcast THAT back
+            # against the edge list — zero vocabulary shuffles.
+            ep = alias_edges.select(
+                F.explode(F.array("name_a", "name_b")).alias("name")
+            ).distinct()
+            occ = names.join(F.broadcast(ep), "name", "left_semi")
+            occ_a = occ.select(F.col("name").alias("name_a"))
+            occ_b = occ.select(F.col("name").alias("name_b"))
+            pairs = pairs.unionByName(
+                alias_edges.join(F.broadcast(occ_a), "name_a", "left_semi")
+                .join(F.broadcast(occ_b), "name_b", "left_semi")
+                .select("name_a", "name_b")
+            )
+        comp = connected_components(pairs)
+    finally:
+        for df in cached:
+            df.unpersist()
     return comp.where(F.col("component") != F.col("name"))
 
 
@@ -613,21 +582,4 @@ def attach_canonical(
         .withColumn("canonical_label", F.coalesce(F.col(tmp), F.col(name_col)))
         .withColumn("canonical_id", F.sha2(F.col("canonical_label"), 256))
         .drop(tmp)
-    )
-
-
-def canonical_map_from_names(
-    names: DataFrame,
-    threshold: float = 0.55,
-    alias_edges: DataFrame | None = None,
-) -> DataFrame:
-    """``canonical_map`` taking the distinct-name universe directly —
-    callers that already materialized normalized mentions feed their
-    names frame here instead of paying a second normalize+distinct over
-    the full mention stream.  Materialized form of the exception set +
-    identity default (kept for the checkpointed pipeline, which persists
-    the full map as a resumable lineage table)."""
-    exc = canonical_exceptions(names, threshold, alias_edges)
-    return attach_canonical(names, exc).select(
-        "name", "canonical_id", "canonical_label"
     )

@@ -6,16 +6,16 @@ relationship_type, target_ref}`` (testfull.json:108-115) becomes an
 extracted triple (subj, pred, obj) (SURVEY §1.4).  The per-object type
 dispatch + projection (A6/A7) becomes batched pattern extraction.
 
-Two implementations, same output contract:
+- ``extract_fused`` — the pipeline's S2: one ``mapInPandas`` pass runs
+  both extractors over each Arrow batch and emits a tagged mention ∪
+  triple stream; ``split_fused`` projects it into the two tables.
+- ``detect_mentions`` — scalar pandas UDF running one compiled gazetteer
+  alternation per text; the streaming sink's extractor.
+- ``extract_triples`` — the standalone triple extractor, kept as the
+  reference the fused pass is tested against.
 
-- ``detect_mentions_udf`` — scalar pandas UDF (Arrow batches) running a
-  compiled gazetteer alternation over a text Series.  The gazetteer regex is
-  built once per Python worker, then applied with ``Series.str.findall``.
-- ``extract_triples`` — grouped-map ``applyInPandas`` per conv_id: receives
-  all turns of a conversation (with stable ordering restored inside the
-  batch), emits (conv_id, turn_idx, subj_text, pred, obj_text, confidence).
-
-No per-row Python anywhere (input_hint): both paths are Arrow-batched.
+No per-row Python UDF calls anywhere (input_hint): every path is
+Arrow-batched.
 """
 
 from __future__ import annotations
@@ -265,41 +265,6 @@ def detect_mentions(turns: DataFrame) -> DataFrame:
     )
 
 
-def _extract_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-conversation triple extraction (runs inside applyInPandas).
-
-    Restores stable turn ordering inside the batch, then pattern-extracts
-    triples per turn; multi-turn context (previous turn text) is available
-    here for richer extractors.
-    """
-    pdf = pdf.sort_values("turn_idx")
-    pat = _triple_pattern()
-    rows = []
-    for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-        if not isinstance(text, str) or not text:
-            continue
-        for m in pat.finditer(text):
-            rows.append((conv_id, int(turn_idx), m.group(1), m.group(2).lower(), m.group(3), 1.0))
-    return pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "subj_text", "pred", "obj_text", "confidence"]
-    )
-
-
-def extract_triples_grouped(turns: DataFrame) -> DataFrame:
-    """Grouped-map form: one pandas frame PER CONVERSATION via
-    ``groupBy(conv_id).applyInPandas`` — the shape context-dependent
-    extractors need (previous-turn text in hand).  Reuses the pipeline's
-    conv_id partitioning, so no extra exchange — but at transcript scale
-    the per-group overhead is real: millions of conversations mean
-    millions of tiny pandas frames (one sort + one construction each).
-    Use this form only when the extractor genuinely consumes cross-turn
-    context; ``extract_triples`` is the batch-vectorized default with
-    identical output (tests assert the equality)."""
-    return turns.select("conv_id", "turn_idx", "text").groupBy("conv_id").applyInPandas(
-        _extract_conv, TRIPLE_SCHEMA
-    )
-
-
 def _extract_batches(batches):
     """mapInPandas body: vectorized extractall per Arrow batch."""
     pat = _triple_pattern()
@@ -338,80 +303,14 @@ def _extract_batches(batches):
 def extract_triples(turns: DataFrame) -> DataFrame:
     """Raw triples: (conv_id, turn_idx, subj_text, pred, obj_text, confidence).
 
-    Batch-vectorized default: the extractor is per-turn, so it needs no
-    per-conversation grouping — ``mapInPandas`` keeps Arrow batches whole
-    and runs ONE pandas ``str.extractall`` (C-level match loop) per batch.
-    The grouped-map form (``extract_triples_grouped``) produced one tiny
-    pandas frame per conversation — at 432k conversations that per-group
-    construction+sort overhead dominated the entire pipeline's S2 cost
-    (73s of a 170s local[16] wall); the vectorized form emits the
-    identical triple set (asserted by tests/test_pipeline.py).
+    ``mapInPandas`` keeps Arrow batches whole and runs ONE pandas
+    ``str.extractall`` (C-level match loop) per batch — the extractor is
+    per-turn, so it needs no per-conversation grouping.  The pipeline
+    extracts through ``extract_fused``; this standalone form is the
+    reference its triple rows are tested against.
     """
     return turns.select("conv_id", "turn_idx", "text").mapInPandas(
         _extract_batches, TRIPLE_SCHEMA
-    )
-
-
-# -- UDTF surface (SURVEY §2 UDF/UDAF/UDTF table) -----------------------------
-
-SENTENCE_SPLIT_RE = r"(?<=[.!?]) +"
-
-
-def make_sentences_udtf():
-    """Python UDTF (Spark 4 table function): one turn row → one row per
-    sentence, with its index — the lateral-expansion shape (SQL
-    ``FROM turns, LATERAL split_sentences(...)``).
-
-    This exists to prove the UDTF API surface end-to-end (registration,
-    LATERAL join, multi-column yield); it is NOT the production path —
-    UDTF ``eval`` runs per input row in Python, which violates the
-    pipeline's no-per-row-Python rule, so hot paths use the equivalent
-    built-in ``explode(split(...))`` (``split_sentences_builtin``, proven
-    identical by test).  Built lazily inside a factory because the
-    ``@udtf`` decorator needs a live Spark-configured environment.
-    """
-    import re as _re  # noqa: PLC0415 — serialized into the UDTF closure
-
-    from pyspark.sql.functions import udtf  # noqa: PLC0415
-
-    pattern = SENTENCE_SPLIT_RE
-
-    @udtf(returnType="sentence_idx int, sentence string")
-    class SplitSentences:
-        def eval(self, text: str):
-            if not text:
-                return
-            for i, s in enumerate(_re.split(pattern, text)):
-                if s:
-                    yield i, s
-
-    return SplitSentences
-
-
-def split_sentences_builtin(turns: DataFrame) -> DataFrame:
-    """Production sentence expansion: explode(split(...)) with posexplode
-    for the index — whole-stage-codegen JVM path, zero Python."""
-    return turns.select(
-        "conv_id",
-        "turn_idx",
-        F.posexplode(F.split(F.col("text"), SENTENCE_SPLIT_RE)).alias(
-            "sentence_idx", "sentence"
-        ),
-    ).where(F.length("sentence") > 0)
-
-
-def split_sentences_udtf(turns: DataFrame) -> DataFrame:
-    """UDTF-powered variant of split_sentences_builtin (same output
-    contract; test-asserted equal).  Registers the TVF and applies it as a
-    SQL LATERAL join."""
-    spark = turns.sparkSession
-    spark.udtf.register("split_sentences", make_sentences_udtf())
-    turns.select("conv_id", "turn_idx", "text").createOrReplaceTempView(
-        "_udtf_turns"
-    )
-    return spark.sql(
-        "SELECT conv_id, turn_idx, s.sentence_idx, s.sentence "
-        "FROM _udtf_turns, LATERAL split_sentences(text) AS s"
     )
 
 
@@ -425,6 +324,7 @@ FUSED_SCHEMA = T.StructType(
         T.StructField("a", T.StringType()),          # surface / subj_text
         T.StructField("b", T.StringType()),          # entity_type / pred
         T.StructField("c", T.StringType()),          # null / obj_text
+        T.StructField("start", T.IntegerType()),     # start / null
         T.StructField("confidence", T.DoubleType()), # null / confidence
     ]
 )
@@ -448,6 +348,7 @@ def _fused_batches(batches):
             "a": pd.Series(dtype="object"),
             "b": pd.Series(dtype="object"),
             "c": pd.Series(dtype="object"),
+            "start": pd.Series(dtype="Int32"),
             "confidence": pd.Series(dtype="float64"),
         }
     )
@@ -458,7 +359,7 @@ def _fused_batches(batches):
         pdf = pdf.reset_index(drop=True)
         frames = []
         # -- mentions: identical scan to detect_mentions_udf ------------
-        m_conv, m_turn, m_a, m_b = [], [], [], []
+        m_conv, m_turn, m_a, m_b, m_start = [], [], [], [], []
         for conv, turn, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
             if not isinstance(text, str) or not text:
                 continue
@@ -469,6 +370,7 @@ def _fused_batches(batches):
                 m_turn.append(turn)
                 m_a.append(text[m.start(m.lastgroup) : m.end(m.lastgroup)])
                 m_b.append(group_types[m.lastgroup])
+                m_start.append(m.start(m.lastgroup))
         if m_conv:
             frames.append(
                 pd.DataFrame(
@@ -479,6 +381,7 @@ def _fused_batches(batches):
                         "a": m_a,
                         "b": m_b,
                         "c": None,
+                        "start": pd.Series(m_start, dtype="Int32"),
                         "confidence": np.nan,
                     }
                 )
@@ -496,6 +399,7 @@ def _fused_batches(batches):
                         "a": hits[0].to_numpy(),
                         "b": hits[1].str.lower().to_numpy(),
                         "c": hits[2].to_numpy(),
+                        "start": pd.Series(pd.NA, index=range(len(hits)), dtype="Int32"),
                         "confidence": 1.0,
                     }
                 )
@@ -505,8 +409,29 @@ def _fused_batches(batches):
 
 def extract_fused(turns: DataFrame) -> DataFrame:
     """Tagged mention ∪ triple stream from ONE corpus pass (see
-    ``_fused_batches``).  kind='m' rows: (a=surface, b=entity_type);
-    kind='t' rows: (a=subj_text, b=pred, c=obj_text, confidence)."""
+    ``_fused_batches``).  kind='m' rows: (a=surface, b=entity_type,
+    start); kind='t' rows: (a=subj_text, b=pred, c=obj_text, confidence)."""
     return turns.select("conv_id", "turn_idx", "text").mapInPandas(
         _fused_batches, FUSED_SCHEMA
     )
+
+
+def split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(mentions, triples) projections of an ``extract_fused`` stream, in
+    exactly ``detect_mentions``' and ``extract_triples``' schemas."""
+    mentions = fused.where(F.col("kind") == "m").select(
+        "conv_id",
+        "turn_idx",
+        F.col("a").alias("surface"),
+        F.col("b").alias("entity_type"),
+        "start",
+    )
+    triples = fused.where(F.col("kind") == "t").select(
+        "conv_id",
+        "turn_idx",
+        F.col("a").alias("subj_text"),
+        F.col("b").alias("pred"),
+        F.col("c").alias("obj_text"),
+        "confidence",
+    )
+    return mentions, triples

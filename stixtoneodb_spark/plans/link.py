@@ -1,18 +1,16 @@
-"""S4 — triple linking: resolve subj/obj text against the canonical map.
+"""S4 — triple linking: resolve subj/obj text against the canonical names.
 
 Reference correspondence: ref resolution is the reference's core relational
 content — SRO ``source_ref``/``target_ref`` looked up by id against the
 node index (A10), with dangling refs *skipped, logged, and the load
-continues* (A11; /root/reference/README.md:83-85; golden dangling cases
-testfull.json:3759-3781).  Here the id index becomes two hash joins against
-the canonical map, and the dangling skip becomes a left_anti side output
-that is counted, never fatal.
+continues* (A11; reference README.md:83-85; golden dangling cases
+testfull.json:3759-3781).  Here the id index becomes a membership join of
+each endpoint against the name universe plus an inline canonical id, and
+the dangling skip becomes a side output that is counted, never fatal.
 
-Scale notes: the canonical map (distinct entity names) is orders of
-magnitude smaller than the triple stream → broadcast it explicitly.  If the
-map outgrows broadcast (10^9 entities), drop the hint and let AQE pick SMJ
-with skew-split; hot canonical ids on the triple side are handled by
-AQE skew join plus optional salting (functions.ids.salt_col).
+Scale notes: the name universe is orders of magnitude smaller than the
+triple stream, so the pipeline broadcasts it when it fits; past that
+bound the joins shuffle, with hot names salted (``salted_dict_join``).
 """
 
 from __future__ import annotations
@@ -27,31 +25,40 @@ from stixtoneodb_spark.functions.textfns import canonical_name
 
 @dataclass
 class LinkResult:
-    linked: DataFrame   # (conv_id, turn_idx, subj_id, pred, obj_id, subj_label, obj_label, confidence)
-    dropped: DataFrame  # triples with >=1 unresolvable endpoint + reason
+    """Every raw triple with its endpoints resolved (``subj_id``/``obj_id``
+    null where unresolvable).  ``linked`` and ``dropped`` are filters over
+    ``joined``, so persisting ``joined`` once serves both."""
 
+    joined: DataFrame
 
-@dataclass
-class SplitDict:
-    """A dictionary pre-split on a bounded hot-key set — build ONCE per
-    pipeline run (``split_dict``), reuse across every stream join.  The
-    split is two vocabulary-scale jobs; rebuilding it inside each join
-    call would repeat them (and their broadcasts) per consumer."""
+    @property
+    def linked(self) -> DataFrame:
+        """(conv_id, turn_idx, subj_id, pred, obj_id, subj_label, obj_label, confidence)"""
+        return self.joined.where(
+            F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
+        ).select(
+            "conv_id", "turn_idx", "subj_id", "pred", "obj_id", "subj_label", "obj_label", "confidence"
+        )
 
-    key: str
-    hot: DataFrame   # dictionary rows whose key is hot (bounded → broadcast)
-    cold: DataFrame  # the long tail — no per-key hotspot by construction
-
-    def project(self, rename: dict[str, str]) -> "SplitDict":
-        """Column-renamed view of both slices (free — pure projection);
-        lets one expensive split serve several join shapes (subj/obj)."""
-
-        def rn(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[F.col(c).alias(rename.get(c, c)) for c in df.columns]
-            )
-
-        return SplitDict(rename.get(self.key, self.key), rn(self.hot), rn(self.cold))
+    @property
+    def dropped(self) -> DataFrame:
+        """Triples with >=1 unresolvable endpoint + reason.  The reason
+        string mirrors the reference's log lines ("references to
+        non-existent objects", README.md:84) — the dangling side output
+        (A11)."""
+        return self.joined.where(
+            F.col("subj_id").isNull() | F.col("obj_id").isNull()
+        ).select(
+            "conv_id",
+            "turn_idx",
+            "subj_text",
+            "pred",
+            "obj_text",
+            F.when(F.col("subj_id").isNull() & F.col("obj_id").isNull(), "both_unresolved")
+            .when(F.col("subj_id").isNull(), "subj_unresolved")
+            .otherwise("obj_unresolved")
+            .alias("reason"),
+        )
 
 
 def salted_dict_join(
@@ -122,79 +129,31 @@ def salted_dict_join(
     return s.join(m, [key, "_salt"], how).drop("_salt")
 
 
-def split_dict(mapdf: DataFrame, key: str, hot_keys: DataFrame) -> SplitDict:
-    hk = hot_keys.select(F.col(hot_keys.columns[0]).alias(key))
-    return SplitDict(
-        key=key,
-        hot=mapdf.join(F.broadcast(hk), key, "left_semi"),
-        cold=mapdf.join(F.broadcast(hk), key, "left_anti"),
-    )
-
-
-def hot_cold_join(stream: DataFrame, d: SplitDict, how: str = "left") -> DataFrame:
-    """Skew-safe stream ⋈ dictionary join on a hot-key-prone column.
-
-    The north rule demands explicit handling of hot entities: a plain
-    shuffle join on entity name puts every mention of a popular entity
-    into one task (AQE's skew split does not fire below its byte
-    thresholds, so mid-sized skew silently serializes).  Standard split:
-
-    - the HOT dictionary slice (keys above a corpus-relative frequency
-      floor) is bounded by construction, so it broadcasts: hot stream
-      rows — the bulk of the VOLUME — join map-side and never reach an
-      exchange;
-    - rows the broadcast probe leaves unmatched are cold by construction
-      (the slices partition the dictionary's key set), so only the long
-      tail shuffle-joins the cold slice, and no partition can be
-      dominated by one key.
-
-    One broadcast probe + one tail-only shuffle; ``how`` semantics are
-    preserved exactly because the key slices are disjoint.
-    """
-    value_cols = [c for c in d.hot.columns if c != d.key]
-    probe = F.broadcast(d.hot.withColumn("_hot", F.lit(True)))
-    s = stream.join(probe, d.key, "left")
-    hot_rows = s.where(F.col("_hot").isNotNull()).drop("_hot")
-    cold_rows = (
-        s.where(F.col("_hot").isNull())
-        .drop("_hot", *value_cols)
-        .join(d.cold, d.key, how)
-    )
-    return hot_rows.unionByName(cold_rows, allowMissingColumns=False)
-
-
 def link_triples(
     triples: DataFrame,
-    canon: DataFrame | None = None,
-    broadcast_map: bool = False,
+    name_universe: DataFrame,
+    exceptions: DataFrame,
     hot_names: DataFrame | None = None,
     n_salt: int = 16,
-    name_universe: DataFrame | None = None,
-    exceptions: DataFrame | None = None,
     broadcast_universe: bool = False,
 ) -> LinkResult:
     """Join raw triples to canonical ids on both endpoints.
 
-    Two dictionary representations are accepted:
+    Membership is tested against ``name_universe`` (one column, ``name``)
+    — the narrowest possible dictionary, no 64-char ids riding an
+    exchange — and the canonical id/label are then computed INLINE
+    (``sha2(coalesce(exception_component, name))``), with ``exceptions``
+    (name, component) joined small-side.  See
+    canonicalize.canonical_exceptions.
 
-    - ``canon``: the materialized (name, canonical_id, canonical_label)
-      map.  Default is NO forced broadcast: the map grows with the corpus
-      — AQE still converts to broadcast at runtime when it is actually
-      small; pass ``broadcast_map=True`` only for fixed, known-tiny maps.
-    - ``name_universe`` + ``exceptions`` (the scale path): membership is
-      tested against the 1-column name universe — the narrowest possible
-      dictionary shuffle, no 64-char ids riding the exchange — and the
-      canonical id/label are then computed INLINE
-      (``sha2(coalesce(exception_component, name))``), with the
-      exception set joined small-side (AQE broadcast).  See
-      canonicalize.canonical_exceptions.
-
-    ``hot_names``: when given, the dictionary joins run TARGET-SALTED
-    (``salted_dict_join``): popular entities — the overwhelming majority
-    of triple endpoints, since triples are about the entities people talk
-    about — spread over ``n_salt`` tasks instead of serializing the
-    exchange on the hot name.  The plan stays linear: exactly one pass
-    over the triple stream per endpoint, same as the plain join.
+    ``broadcast_universe``: the caller's data-dependent plan choice — when
+    the measured vocabulary fits a broadcast, both membership joins run
+    map-side and the triple stream never shuffles in S4 (a broadcast hash
+    join is skew-immune by construction).  Otherwise the joins shuffle;
+    ``hot_names``, when given, makes them TARGET-SALTED
+    (``salted_dict_join``): popular entities spread over ``n_salt`` tasks
+    instead of serializing the exchange on the hot name, and the plan
+    stays one pass over the triple stream per endpoint.
     """
     t = triples.withColumn("subj_name", canonical_name(F.col("subj_text"))).withColumn(
         "obj_name", canonical_name(F.col("obj_text"))
@@ -202,91 +161,40 @@ def link_triples(
 
     def _dict_join(stream: DataFrame, mapdf: DataFrame, key: str) -> DataFrame:
         if broadcast_universe:
-            # a broadcast hash join is skew-immune by construction — the
-            # hot-name salting machinery only exists for the shuffle path
             return stream.join(F.broadcast(mapdf), key, "left")
         if hot_names is not None:
             return salted_dict_join(stream, mapdf, key, hot_names, "left", n_salt)
         return stream.join(mapdf, key, "left")
 
-    if name_universe is not None:
-        assert exceptions is not None, "name_universe requires exceptions"
-        # ``broadcast_universe``: data-dependent plan choice made by the
-        # caller (AQE-spirit): when the measured vocabulary fits a
-        # broadcast, both membership joins run map-side and the triple
-        # stream NEVER shuffles in S4 — the measured alternative (two
-        # vocabulary-scale shuffle joins) scaled at only 1.18x from 4→16
-        # cores (exchange-bound, tools/profile_last_*.json).  Past the
-        # broadcast bound (10^9-entity vocabularies) the caller keeps the
-        # shuffle path with targeted salting.
-        #
-        # Shape note (round 4, measured): keep the per-endpoint projected
-        # frames + USING-style joins.  A rewrite to one shared (name, _in)
-        # projection with explicit-condition joins — aiming at broadcast
-        # ReuseExchange — regressed the UN-BARRIERED fused tail job by
-        # ~30s@16 on 27.9M turns (55-67s -> 87.9s, reproduced twice),
-        # while per-stage profile mode showed NO regression; and reuse
-        # doesn't fire anyway under AQE because TableCacheQueryStage gives
-        # each branch's cached scan a distinct stage identity (stage-cache
-        # canonicalization miss; verified — non-AQE plans DO reuse).  The
-        # duplicate vocabulary-scale broadcast build is the accepted flat
-        # cost of this shape.
-        subj_u = name_universe.select(F.col("name").alias("subj_name")).withColumn(
-            "_subj_in", F.lit(True)
-        )
-        obj_u = name_universe.select(F.col("name").alias("obj_name")).withColumn(
-            "_obj_in", F.lit(True)
-        )
-        joined = _dict_join(_dict_join(t, subj_u, "subj_name"), obj_u, "obj_name")
-        for end in ("subj", "obj"):
-            exc = exceptions.select(
-                F.col("name").alias(f"{end}_name"),
-                F.col("component").alias(f"_comp_{end}"),
-            )
-            joined = (
-                joined.join(exc, f"{end}_name", "left")
-                .withColumn(
-                    f"{end}_label",
-                    F.when(
-                        F.col(f"_{end}_in").isNotNull(),
-                        F.coalesce(F.col(f"_comp_{end}"), F.col(f"{end}_name")),
-                    ),
-                )
-                .withColumn(f"{end}_id", F.sha2(F.col(f"{end}_label"), 256))
-                .drop(f"_comp_{end}", f"_{end}_in")
-            )
-    else:
-        cmap = F.broadcast(canon) if broadcast_map else canon
-        subj_map = cmap.select(
-            F.col("name").alias("subj_name"),
-            F.col("canonical_id").alias("subj_id"),
-            F.col("canonical_label").alias("subj_label"),
-        )
-        obj_map = cmap.select(
-            F.col("name").alias("obj_name"),
-            F.col("canonical_id").alias("obj_id"),
-            F.col("canonical_label").alias("obj_label"),
-        )
-        joined = _dict_join(_dict_join(t, subj_map, "subj_name"), obj_map, "obj_name")
-
-    linked = joined.where(
-        F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
-    ).select(
-        "conv_id", "turn_idx", "subj_id", "pred", "obj_id", "subj_label", "obj_label", "confidence"
+    # Shape note (measured): keep the per-endpoint projected frames +
+    # USING-style joins.  A rewrite to one shared (name, _in) projection
+    # with explicit-condition joins — aiming at broadcast ReuseExchange —
+    # regressed the un-barriered tail job by ~30s@16 on 27.9M turns, and
+    # reuse does not fire under AQE anyway (TableCacheQueryStage gives each
+    # branch's cached scan a distinct stage identity).  The duplicate
+    # vocabulary-scale broadcast build is the accepted flat cost.
+    subj_u = name_universe.select(F.col("name").alias("subj_name")).withColumn(
+        "_subj_in", F.lit(True)
     )
-    # Dangling side output (A11): reason string mirrors the reference's log
-    # lines ("references to non-existent objects", README.md:84).
-    dropped = joined.where(
-        F.col("subj_id").isNull() | F.col("obj_id").isNull()
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "subj_text",
-        "pred",
-        "obj_text",
-        F.when(F.col("subj_id").isNull() & F.col("obj_id").isNull(), "both_unresolved")
-        .when(F.col("subj_id").isNull(), "subj_unresolved")
-        .otherwise("obj_unresolved")
-        .alias("reason"),
+    obj_u = name_universe.select(F.col("name").alias("obj_name")).withColumn(
+        "_obj_in", F.lit(True)
     )
-    return LinkResult(linked=linked, dropped=dropped)
+    joined = _dict_join(_dict_join(t, subj_u, "subj_name"), obj_u, "obj_name")
+    for end in ("subj", "obj"):
+        exc = exceptions.select(
+            F.col("name").alias(f"{end}_name"),
+            F.col("component").alias(f"_comp_{end}"),
+        )
+        joined = (
+            joined.join(exc, f"{end}_name", "left")
+            .withColumn(
+                f"{end}_label",
+                F.when(
+                    F.col(f"_{end}_in").isNotNull(),
+                    F.coalesce(F.col(f"_comp_{end}"), F.col(f"{end}_name")),
+                ),
+            )
+            .withColumn(f"{end}_id", F.sha2(F.col(f"{end}_label"), 256))
+            .drop(f"_comp_{end}", f"_{end}_in")
+        )
+    return LinkResult(joined=joined)

@@ -24,29 +24,17 @@ from pyspark.sql import functions as F
 from stixtoneodb_spark.functions.ids import edge_id
 
 
-def entity_nodes(linked: DataFrame, mentions_canon: DataFrame) -> DataFrame:
-    """Canonical entity nodes: (id, node_type, label, n_mentions).
-
-    ``mentions_canon``: mentions joined to canonical map —
-    (conv_id, turn_idx, surface, entity_type, canonical_id, canonical_label).
-    Majority entity_type per canonical id becomes the node label (the SDO
-    type analog); ties broken deterministically by type name.
-    """
-    by_type = mentions_canon.groupBy("canonical_id", "canonical_label", "entity_type").agg(
-        F.count("*").alias("cnt")
-    )
-    return entity_nodes_from_type_counts(by_type)
-
-
 def entity_nodes_from_type_counts(type_counts: DataFrame) -> DataFrame:
-    """``entity_nodes`` from pre-aggregated
-    (canonical_id, canonical_label, entity_type, cnt) rows.
+    """Canonical entity nodes (id, node_type, label, n_mentions) from
+    (canonical_id, canonical_label, entity_type, cnt) mention counts.
 
-    The aggregate form is the scale path: the pipeline counts mentions by
-    (name, entity_type) FIRST — a partial aggregation whose map-side
-    combine absorbs hot-entity skew — and joins the canonical map at
-    vocabulary cardinality, so node materialization never shuffles the
-    full mention stream on the skewed name key.
+    Majority entity_type per canonical id becomes the node label (the SDO
+    type analog); ties broken deterministically by type name.  The
+    pipeline counts mentions by (name, entity_type) FIRST — a partial
+    aggregation whose map-side combine absorbs hot-entity skew — and
+    resolves canonical ids at vocabulary cardinality, so node
+    materialization never shuffles the full mention stream on the skewed
+    name key.
     """
     w_type = F.struct(F.col("cnt"), F.col("entity_type"))
     top_type = type_counts.groupBy("canonical_id", "canonical_label").agg(

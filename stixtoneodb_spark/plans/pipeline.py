@@ -1,23 +1,39 @@
-"""End-to-end KG construction pipeline S0→S5 with checkpoints + metrics.
+"""End-to-end KG construction pipeline S0→S5: one lazily planned dataflow
+with a resumable table per stage.
 
-The reference lifecycle is: parse → dispatch → project → resolve refs →
-write, single-threaded, with skip-and-continue error tolerance and logged
-counts (/root/reference/StixToNeoDB.scala:32-58, README.md:83-85,
-changes.md:39).  This module is the distributed equivalent: each stage is a
-DataFrame transformation; materialization points double as resumable
-checkpoints with per-stage lineage + metrics rows (north_rule).
+The reference loader's lifecycle is parse → dispatch → project → resolve
+refs → write, single-threaded, with skip-and-continue error tolerance and
+logged counts (StixToNeoDB.scala:32-58, README.md:83-85).  Here each stage
+is a DataFrame transformation whose output is written through the catalog
+and read back, so every stage table doubles as a resume point:
+
+- S0 ``s0_ingest`` → ``turns``: normalized turns, clustered by conv_id
+  (optionally ingested per conv_id-hash bucket, one checkpoint each);
+- S2 ``s2_mentions`` / ``s2_triples`` → ``mentions`` / ``triples_raw``:
+  ONE fused extraction pass (``extract.extract_fused``), persisted once,
+  both tables written from it;
+- S3 ``s3_canonical_map`` → ``canonical_map``: LSH blocking + connected
+  components over the distinct mention names;
+- S4 ``s4_link`` / ``s4_dropped`` → ``linked_triples`` /
+  ``dropped_triples``: ONE ``link.link_triples`` evaluation against the
+  name universe and the exception set (``canonical_label != name``) of the
+  canonical map, persisted once, both tables written from it;
+- S5 ``s5_nodes`` / ``s5_edges`` → ``nodes`` / ``edges``: insert-if-absent
+  MERGE, so appending a run adds to the graph.
 
 Resume contract: every stage writes its output table plus a
-``_checkpoints`` row (run_id, stage, status, rows, wall_s).  ``run()`` with
-the same run_id skips stages whose checkpoint row is 'done' and whose table
-exists — kill-after-S2-and-resume yields byte-identical outputs because all
-keys are content-derived (functions.ids).
+``_checkpoints`` row (run_id, stage, part, status, rows, wall_s).  ``run()``
+with the same run_id skips stages whose checkpoint row is 'done' and whose
+table exists — kill-and-resume yields identical outputs because all keys
+are content-derived (functions.ids).  The checkpoint table is read once per
+run; row counts ride the stage writes as Observations.  Every frame a run
+persists is released before it returns, so no cache keyed on a warehouse
+path outlives the run that wrote the path.
 """
 
 from __future__ import annotations
 
-import os
-import threading
+import functools
 import time
 from dataclasses import dataclass, field
 
@@ -27,6 +43,24 @@ from pyspark.sql import functions as F
 from stixtoneodb_spark.plans import assemble, canonicalize, extract, link, materialize
 from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
 
+# Targeted-salting parameters for the S4 name-keyed joins when they
+# shuffle (link.salted_dict_join): a name is HOT when it carries
+# ≥ 1/HOT_NAME_TARGET of all mentions AND ≥ HOT_NAME_FLOOR absolute, so the
+# hot set holds ≤ HOT_NAME_TARGET names regardless of corpus size (always
+# broadcastable) and the dictionary replicates only those names
+# SALT_BUCKETS ways.  A hot entity's stream rows spread across SALT_BUCKETS
+# tasks instead of serializing one exchange partition (AQE's skew split
+# does not fire below its byte thresholds, so mid-sized skew silently
+# serializes).  16 bounds any key to 1/16 of an exchange.
+SALT_BUCKETS = 16
+HOT_NAME_TARGET = 100_000
+HOT_NAME_FLOOR = 1000
+# S4 join strategy bound: vocabularies of at most this many distinct names
+# broadcast (the triple stream never shuffles to resolve endpoints, and a
+# broadcast hash join is skew-immune); larger ones take the shuffle join
+# with targeted salting.  ~8M names ≈ a few hundred MB hashed relation.
+BROADCAST_UNIVERSE_MAX = 8_000_000
+
 
 @dataclass
 class PipelineResult:
@@ -34,6 +68,22 @@ class PipelineResult:
     edges: DataFrame
     dropped_triples: DataFrame
     metrics: dict[str, float] = field(default_factory=dict)
+
+
+def hot_names(name_type_counts: DataFrame) -> DataFrame:
+    """Names above the corpus-relative frequency floor (see HOT_NAME_*),
+    from (name, entity_type, cnt) counts — a vocabulary-scale aggregate
+    plus a broadcast one-row total, no driver barrier."""
+    totals = name_type_counts.groupBy("name").agg(F.sum("cnt").alias("n_tot"))
+    total = name_type_counts.agg(F.sum("cnt").alias("_t"))
+    return (
+        totals.crossJoin(F.broadcast(total))
+        .where(
+            (F.col("n_tot") >= HOT_NAME_FLOOR)
+            & (F.col("n_tot") * HOT_NAME_TARGET >= F.col("_t"))
+        )
+        .select("name")
+    )
 
 
 class KgPipeline:
@@ -56,14 +106,13 @@ class KgPipeline:
         self.run_id = run_id
         self.ingest_buckets = ingest_buckets
         self.metrics: dict[str, float] = {}
+        self._done: dict[tuple[str, int], int] | None = None
 
     # Every table this pipeline writes through the catalog — the scope of
     # its staging sweep on resume.  A run killed mid-stage leaves
-    # ``_staging/<table>.tmp-*`` dirs for whichever _stage was in flight
-    # (round-3 advice: sweeping only 'turns' let mentions/triples/nodes/
-    # edges staging grow unboundedly across crashed runs); tables of
-    # CONCURRENT writers sharing the warehouse (the streaming merge sink)
-    # are deliberately NOT in this list.
+    # ``_staging/<table>.tmp-*`` dirs for whichever _stage was in flight;
+    # tables of CONCURRENT writers sharing the warehouse (the streaming
+    # merge sink) are deliberately NOT in this list.
     OWNED_TABLES = (
         "turns",
         "mentions",
@@ -76,32 +125,32 @@ class KgPipeline:
     )
 
     # -- checkpoint bookkeeping ------------------------------------------
-    def _ckpt_table(self) -> str:
-        return "_checkpoints"
-
+    CKPT_TABLE = "_checkpoints"
     CKPT_SCHEMA = (
         "run_id string, stage string, part long, status string, rows long, wall_s double"
     )
 
-    def _done(self, stage: str, part: int = -1) -> bool:
-        if not self.catalog.exists(self._ckpt_table()):
-            return False
-        df = self.catalog.read(self._ckpt_table())
-        n = (
-            df.where(
-                (F.col("run_id") == self.run_id)
-                & (F.col("stage") == stage)
-                & (F.col("part") == part)
-                & (F.col("status") == "done")
-            ).count()
-        )
-        return n > 0
+    def _finished(self) -> dict[tuple[str, int], int]:
+        """(stage, part) → rows for every stage this run_id has finished:
+        one read of the checkpoint table, kept current by ``_mark``."""
+        if self._done is None:
+            self._done = {}
+            if self.catalog.exists(self.CKPT_TABLE):
+                rows = (
+                    self.catalog.read(self.CKPT_TABLE)
+                    .where((F.col("run_id") == self.run_id) & (F.col("status") == "done"))
+                    .select("stage", "part", "rows")
+                    .collect()
+                )
+                self._done = {(r["stage"], r["part"]): r["rows"] for r in rows}
+        return self._done
 
     def _mark(self, stage: str, rows: int, wall_s: float, part: int = -1) -> None:
         row = self.spark.createDataFrame(
             [(self.run_id, stage, part, "done", rows, float(wall_s))], self.CKPT_SCHEMA
         )
-        self.catalog.append(self._ckpt_table(), row)
+        self.catalog.append(self.CKPT_TABLE, row)
+        self._finished()[(stage, part)] = rows
         suffix = f"_p{part}" if part >= 0 else ""
         self.metrics[f"{stage}{suffix}_rows"] = rows
         self.metrics[f"{stage}{suffix}_wall_s"] = wall_s
@@ -119,12 +168,12 @@ class KgPipeline:
         # are never referenced by a 'done' checkpoint row, so sweep first
         # scoped to this pipeline's own tables: a concurrent writer
         # sharing the warehouse (streaming merge sink) keeps its tmp dirs
-        self.catalog.sweep_staging(tables=[*self.OWNED_TABLES, self._ckpt_table()])
+        self.catalog.sweep_staging(tables=[*self.OWNED_TABLES, self.CKPT_TABLE])
         norm = assemble.normalize_turns(transcripts)
         todo = range(nb) if max_buckets is None else range(min(nb, max_buckets))
         for b in todo:
             part_dir = f"bucket={b}"
-            if self._done(name, part=b) and self.catalog.partition_exists(table, part_dir):
+            if (name, b) in self._finished() and self.catalog.partition_exists(table, part_dir):
                 continue
             t0 = time.time()
             # observe() rides the write job itself — no second scan of the
@@ -139,507 +188,133 @@ class KgPipeline:
             self._mark(name, int(obs.get["rows"]), time.time() - t0, part=b)
         return self.catalog.read_partitioned(table).drop("bucket")
 
-    def _stage(self, name: str, df_fn, table: str, key_col: str | None = None) -> DataFrame:
-        """Run one stage with checkpoint/resume: if done, read the table
-        back (resume path); else compute, persist, mark done."""
-        if self._done(name) and self.catalog.exists(table):
+    def _stage(self, name: str, table: str, build, key_col: str | None = None) -> DataFrame:
+        """One resumable stage: a stage this run already finished is read
+        back; otherwise ``build()`` is written (MERGEd on ``key_col`` when
+        given), its row count observed on the write job, marked done, and
+        the table read back."""
+        if (name, -1) in self._finished() and self.catalog.exists(table):
             return self.catalog.read(table)
         t0 = time.time()
-        df = df_fn()
+        obs = Observation(name)
+        df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
         if key_col is not None:
             self.catalog.merge_upsert(table, df, key_col)
         else:
             self.catalog.overwrite(table, df)
-        out = self.catalog.read(table)
-        self._mark(name, out.count(), time.time() - t0)
-        return out
+        self._mark(name, int(obs.get["rows"]), time.time() - t0)
+        return self.catalog.read(table)
 
     # -- the pipeline -----------------------------------------------------
     def run(
         self, transcripts: DataFrame, alias_edges: DataFrame | None = None
     ) -> PipelineResult:
-        spark = self.spark
-
+        self._done = None  # this run's view of the checkpoint table
         # Sweep THIS pipeline's staging leftovers before any stage runs —
         # covers the non-bucketed path too (ingest_partitioned repeats the
         # sweep for direct callers; it is idempotent and cheap).
-        self.catalog.sweep_staging(tables=[*self.OWNED_TABLES, self._ckpt_table()])
+        self.catalog.sweep_staging(tables=[*self.OWNED_TABLES, self.CKPT_TABLE])
+        cached: list[DataFrame] = []
 
-        # S0: normalize + repartition by conv_id — the pipeline's one
-        # deliberate up-front shuffle, reused by the window/groupBy/
-        # applyInPandas stages downstream.  With ingest_buckets set, the
-        # stage checkpoints per conv_id-hash bucket (north-rule lineage).
-        if self.ingest_buckets:
-            turns = self.ingest_partitioned(transcripts)
-        else:
-            turns = self._stage(
-                "s0_ingest",
-                lambda: assemble.normalize_turns(transcripts).repartition("conv_id"),
-                "turns",
+        def keep(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            # S0: normalize + repartition by conv_id (the bucketed
+            # checkpoint writes need conv_id clustering).
+            if self.ingest_buckets:
+                turns = self.ingest_partitioned(transcripts)
+            else:
+                turns = self._stage(
+                    "s0_ingest",
+                    "turns",
+                    lambda: assemble.normalize_turns(transcripts).repartition("conv_id"),
+                )
+
+            # S2: the text column crosses the Python boundary once; the
+            # persisted tagged stream feeds both table writes.
+            fused = keep(extract.extract_fused(turns))
+            f_mentions, f_triples = extract.split_fused(fused)
+            mentions = self._stage("s2_mentions", "mentions", lambda: f_mentions)
+            triples_raw = self._stage("s2_triples", "triples_raw", lambda: f_triples)
+
+            # S3: canonical map (its connected-components loop runs
+            # eagerly inside the call).  S4 and S5 resolve names through
+            # the exception set: the map is identity for every other name.
+            canon = self._stage(
+                "s3_canonical_map",
+                "canonical_map",
+                lambda: canonicalize.canonical_map(mentions, alias_edges=alias_edges),
+            )
+            exceptions = canon.where(F.col("canonical_label") != F.col("name")).select(
+                "name", F.col("canonical_label").alias("component")
+            )
+            named = canonicalize.normalize_mentions(mentions)
+            # (name, entity_type) counts: map-side combine absorbs hot-name
+            # skew; nodes and the hot-name set work at vocabulary size.
+            name_type_counts = named.groupBy("name", "entity_type").agg(
+                F.count("*").alias("cnt")
             )
 
-        # S1 is a view over S0 (window/assembly) — validated in tests; the
-        # materialized artifacts the rest of the pipeline needs are the
-        # mention and triple streams.
+            # S4: join strategy from the measured vocabulary (the S3 row
+            # count, no extra job); the hot-name set exists only for the
+            # shuffle plan, whose salting it drives.
+            @functools.cache
+            def resolved() -> link.LinkResult:
+                broadcast = self._finished()[("s3_canonical_map", -1)] <= BROADCAST_UNIVERSE_MAX
+                hot = None
+                if not broadcast:
+                    hot = keep(hot_names(name_type_counts))
+                    if hot.limit(1).count() == 0:
+                        hot = None
+                lr = link.link_triples(
+                    triples_raw,
+                    name_universe=canon.select("name"),
+                    exceptions=exceptions,
+                    hot_names=hot,
+                    n_salt=SALT_BUCKETS,
+                    broadcast_universe=broadcast,
+                )
+                return link.LinkResult(keep(lr.joined))
 
-        # S2: mentions + raw triples (Arrow-vectorized extraction).
-        mentions = self._stage(
-            "s2_mentions", lambda: extract.detect_mentions(turns), "mentions"
-        )
-        triples_raw = self._stage(
-            "s2_triples", lambda: extract.extract_triples(turns), "triples_raw"
-        )
+            linked = self._stage("s4_link", "linked_triples", lambda: resolved().linked)
+            dropped = self._stage("s4_dropped", "dropped_triples", lambda: resolved().dropped)
 
-        # S3: canonical map (LSH + connected components).
-        canon = self._stage(
-            "s3_canonical_map",
-            lambda: canonicalize.canonical_map(mentions, alias_edges=alias_edges),
-            "canonical_map",
-        )
+            # S5: nodes from vocabulary-scale type counts; provenance edges
+            # resolve each mention name inline (exception join + sha2).
+            def _nodes() -> DataFrame:
+                type_counts = (
+                    canonicalize.attach_canonical(name_type_counts, exceptions)
+                    .groupBy("canonical_id", "canonical_label", "entity_type")
+                    .agg(F.sum("cnt").alias("cnt"))
+                )
+                return materialize.entity_nodes_from_type_counts(type_counts).unionByName(
+                    materialize.conversation_nodes(turns)
+                )
 
-        # S4: link triples on both endpoints; dangling side output.
-        def _link():
-            return link.link_triples(triples_raw, canon).linked
+            def _edges() -> DataFrame:
+                mentions_canon = canonicalize.attach_canonical(
+                    named.select("name", "conv_id", "turn_idx"), exceptions
+                )
+                return materialize.triple_edges(linked).unionByName(
+                    materialize.mention_edges(mentions_canon)
+                )
 
-        def _dropped():
-            return link.link_triples(triples_raw, canon).dropped
-
-        linked = self._stage("s4_link", _link, "linked_triples")
-        dropped = self._stage("s4_dropped", _dropped, "dropped_triples")
-
-        # S5: materialize nodes/edges with MERGE semantics.
-        mentions_canon = (
-            mentions.withColumn("name", canonicalize.canonical_name(F.col("surface")))
-            .join(canon, "name", "inner")
-        )
-
-        def _nodes():
-            ent = materialize.entity_nodes(linked, mentions_canon)
-            conv = materialize.conversation_nodes(turns)
-            return ent.unionByName(conv)
-
-        def _edges():
-            return materialize.triple_edges(linked).unionByName(
-                materialize.mention_edges(mentions_canon)
-            )
-
-        nodes = self._stage("s5_nodes", _nodes, "nodes", key_col="id")
-        edges = self._stage("s5_edges", _edges, "edges", key_col="id")
+            nodes = self._stage("s5_nodes", "nodes", _nodes, key_col="id")
+            edges = self._stage("s5_edges", "edges", _edges, key_col="id")
+        finally:
+            for df in cached:
+                df.unpersist()
 
         # metrics table (reference A14: counting + logging)
-        self._write_metrics(spark)
+        self._write_metrics()
         return PipelineResult(nodes=nodes, edges=edges, dropped_triples=dropped, metrics=dict(self.metrics))
 
-    def _write_metrics(self, spark: SparkSession) -> None:
+    def _write_metrics(self) -> None:
         mrows = [(self.run_id, k, float(v)) for k, v in self.metrics.items()]
         if mrows:
             self.catalog.append(
                 "_metrics",
-                spark.createDataFrame(mrows, "run_id string, metric string, value double"),
+                self.spark.createDataFrame(mrows, "run_id string, metric string, value double"),
             )
-
-
-# Targeted-salting parameters for the name-keyed stream⋈dictionary joins
-# (link.salted_dict_join): a name is HOT when it carries ≥ 1/HOT_NAME_TARGET
-# of all mentions AND ≥ HOT_NAME_FLOOR absolute, so the hot set holds
-# ≤ HOT_NAME_TARGET names regardless of corpus size (always broadcastable)
-# and the dictionary replicates only those names SALT_BUCKETS ways.  A hot
-# entity's stream rows spread across SALT_BUCKETS tasks instead of
-# serializing one exchange partition — the explicit hot-entity handling
-# the north rule requires (AQE's skew split does not fire below its byte
-# thresholds, so mid-sized skew silently serializes).  On a 1000-executor
-# cluster raise SALT_BUCKETS toward the per-key row share / per-task
-# target; 16 bounds any key to 1/16 of an exchange.
-SALT_BUCKETS = 16
-HOT_NAME_TARGET = 100_000
-HOT_NAME_FLOOR = 1000
-# S4 membership-join strategy bound: vocabularies at or below this many
-# distinct names broadcast (the stream never shuffles to resolve
-# endpoints); larger ones take the shuffle join with targeted salting.
-# ~8M names ≈ a few hundred MB hashed relation — comfortably inside a
-# cluster executor's broadcast budget; 10^9-entity vocabularies are not.
-BROADCAST_UNIVERSE_MAX = int(os.environ.get("SPARK_GRAFT_BCAST_NAMES_MAX", "8000000"))
-
-
-def _graph_frames(
-    turns: DataFrame,
-    mentions: DataFrame,
-    triples_raw: DataFrame,
-    alias_edges: DataFrame | None,
-    persist,
-    stage_walls: dict[str, float] | None = None,
-    conversation_nodes: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """Shared S3→S5 dataflow (run_volatile / run_volatile_frames).
-
-    Scale shape: the mention stream is touched exactly twice after S2 —
-    one partial aggregation to (name, entity_type) counts (map-side
-    combine absorbs hot-name skew; the shuffle carries vocabulary-sized
-    rows) and one SALTED name→canonical join for provenance edges; the
-    triple stream likewise resolves its endpoints through salted joins
-    (link.salted_dict_join — hot entities spread across SALT_BUCKETS
-    tasks, plan stays linear).  Everything else (canonicalization, node
-    materialization) runs at vocabulary cardinality.  The round-2 design
-    instead repartition()ed the full stream on the skewed name key and
-    cached it: measured 53s at local[16] vs 57s at local[4] — a
-    non-scaling stage this dataflow deletes outright.  A hot/cold
-    broadcast-split variant (link.hot_cold_join) was measured too: its
-    branch-and-union legs each re-scan the stream, quadrupling S4 wall —
-    salting keeps one pass per join.
-    """
-    profiling = stage_walls is not None
-    # mentions may arrive pre-normalized (run_volatile persists the slim
-    # (conv_id, turn_idx, name, entity_type) form — see there); raw
-    # mention streams are normalized here.
-    named = (
-        mentions
-        if "name" in mentions.columns
-        else canonicalize.normalize_mentions(mentions)
-    )
-    ntc = persist(
-        named.groupBy("name", "entity_type").agg(F.count("*").alias("cnt")),
-        "s3_name_type_counts",
-    )
-    # canonical EXCEPTION set over the distinct-name universe (eager CC
-    # loop inside) — tiny: only names whose canonical label differs from
-    # themselves.  The full name→canonical dictionary never materializes;
-    # every consumer resolves via attach_canonical (exception join +
-    # inline sha2) — see canonicalize.canonical_exceptions.
-    # persisted HERE (not only inside canonical_exceptions): the link
-    # stage's two endpoint-membership joins re-read this universe — an
-    # explicit persist on the same plan guarantees the cache hit.
-    # Derived from name_totals (below), NOT a separate distinct(): the
-    # per-name SUM aggregation already shuffles ntc on name, so the name
-    # universe rides that one shuffle — a standalone distinct() was a
-    # second vocabulary-scale shuffle that even anti-scaled (4.5s@4 →
-    # 5.5s@16, tools/profile_last_*.json: tiny rows, task overhead).
-    # name_totals is itself persisted: both its consumers (the name
-    # universe and the hot-name filter) otherwise re-run the same
-    # vocabulary-scale aggregation from the ntc cache.
-    name_totals = persist(
-        ntc.groupBy("name").agg(F.sum("cnt").alias("n_tot")), "s3_name_totals"
-    )
-    names = persist(name_totals.select("name"), "s3_names")
-    t_cc = time.time()
-    exc_frame = canonicalize.canonical_exceptions(names, alias_edges=alias_edges)
-    if profiling:
-        stage_walls["s3_cc_loop_eager"] = round(time.time() - t_cc, 2)
-    exc = persist(exc_frame, "s3_exceptions")
-
-    # hot-name set for targeted salting: corpus-relative frequency floor,
-    # so |hot| ≤ HOT_NAME_TARGET regardless of corpus size (always
-    # broadcastable) while any name below the absolute floor stays cold.
-    # Derived from the cached (name, type) counts — a vocabulary-scale agg
-    # plus a broadcast 1-row total, no driver barrier.  (name_totals is
-    # built above so the name universe shares its shuffle.)
-    # corpus total straight off the cached (name, type) counts — no
-    # second pass through the name-keyed aggregation for a 1-row frame
-    tot = ntc.agg(F.sum("cnt").alias("_t"))
-    # persisted: the probe broadcasts in the link + mention joins each
-    # materialize this frame; uncached, every broadcast exchange re-runs
-    # the vocabulary aggregation chain (one extra job per join side).
-    hot_names = persist(
-        name_totals.crossJoin(F.broadcast(tot))
-        .where(
-            (F.col("n_tot") >= HOT_NAME_FLOOR)
-            & (F.col("n_tot") * HOT_NAME_TARGET >= F.col("_t"))
-        )
-        .select("name"),
-        "s3_hot_names",
-    )
-
-    # Pay-for-what-you-use salting: when the frequency floor yields NO hot
-    # names (near-uniform vocabularies — measured ~9% wall at local[4] for
-    # the probe broadcasts + per-row salt branches that then do nothing),
-    # hand link_triples no hot set and the joins collapse to the plain
-    # single-pass plan.  The emptiness probe is one limit(1) job on the
-    # persisted, ≤HOT_NAME_TARGET-row frame — it only ADVANCES the
-    # materialization the probe broadcasts would do anyway; a data-
-    # dependent plan choice in the same spirit as AQE's runtime re-plan.
-    hot_arg = hot_names if hot_names.limit(1).count() > 0 else None
-
-    # Data-dependent join strategy for the S4 membership joins (the
-    # AQE-spirit runtime choice, like the hot-name probe above): when the
-    # measured vocabulary fits a broadcast, the triple stream resolves both
-    # endpoints map-side and never shuffles — the shuffle variant scaled at
-    # only 1.18x from 4→16 cores (exchange-bound).  The count is a cheap
-    # cached-frame job: the CC chain above already materialized the name
-    # universe.  Past the bound (10^9-entity vocabularies) the shuffle path
-    # with targeted salting remains the plan.
-    bcast_universe = names.count() <= BROADCAST_UNIVERSE_MAX
-
-    lr = link.link_triples(
-        triples_raw,
-        name_universe=names,
-        exceptions=exc,
-        hot_names=hot_arg,
-        n_salt=SALT_BUCKETS,
-        broadcast_universe=bcast_universe,
-    )
-    linked = persist(lr.linked, "s4_linked")
-
-    # S5 nodes: vocabulary-scale inline resolution + aggregate — the
-    # stream never re-shuffles for node materialization.
-    type_counts = (
-        canonicalize.attach_canonical(ntc, exc)
-        .groupBy("canonical_id", "canonical_label", "entity_type")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    conv_nodes = (
-        conversation_nodes
-        if conversation_nodes is not None
-        else materialize.conversation_nodes(turns)
-    )
-    nodes = materialize.entity_nodes_from_type_counts(type_counts).unionByName(
-        conv_nodes
-    )
-
-    # S5 provenance edges: INLINE name→canonical resolution over the raw
-    # mention stream — every mention name is in the universe by
-    # construction, so no membership join at all: one exception
-    # (broadcast) join + sha2 per row, zero stream shuffles until
-    # mention_edges' single dedup at the (canonical_id, conv_id,
-    # turn_idx) granularity (the edge id's determinant set).
-    mc = canonicalize.attach_canonical(
-        named.select("name", "conv_id", "turn_idx"), exc
-    )
-    edges = materialize.triple_edges(linked).unionByName(materialize.mention_edges(mc))
-    return {"nodes": nodes, "edges": edges, "linked": linked, "exceptions": exc}
-
-
-def run_volatile_frames(
-    spark: SparkSession, transcripts: DataFrame, alias_edges: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """S0→S5 with no persistence, returning the (nodes, edges) frames —
-    the composable form used by exports and ad-hoc analysis."""
-    turns = assemble.normalize_turns(transcripts)
-    mentions = extract.detect_mentions(turns)
-    triples_raw = extract.extract_triples(turns)
-    frames = _graph_frames(
-        turns, mentions, triples_raw, alias_edges, persist=lambda df, _stage=None: df
-    )
-    return frames["nodes"], frames["edges"]
-
-
-def run_volatile(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    alias_edges: DataFrame | None = None,
-    stage_walls: dict[str, float] | None = None,
-) -> dict[str, int]:
-    """Benchmark path: the full S0→S5 dataflow with no per-stage
-    persistence — one Catalyst job graph end-to-end (plus the driver-side
-    CC loop), measuring engine throughput rather than local-disk writes.
-    The production path (``KgPipeline.run``) adds checkpointed tables; on a
-    real cluster those land in Iceberg, so disk cost is cluster-storage-
-    bound, not part of the engine comparison.
-
-    ``stage_walls``: when a dict is passed, PROFILE mode — each persisted
-    stage is forced (count) as soon as it is declared and its wall-clock
-    recorded under a stage name.  This adds one driver barrier per stage,
-    so profile runs attribute time but are NOT the timed configuration;
-    timed runs pass None and keep the single-job-graph shape.
-    """
-    cached: list[DataFrame] = []
-    profiling = stage_walls is not None
-
-    def _persist(df: DataFrame, stage: str | None = None) -> DataFrame:
-        cached.append(df.persist())
-        if profiling and stage is not None:
-            t0 = time.time()
-            df.count()
-            stage_walls[stage] = round(time.time() - t0, 2)
-        return df
-
-    # NO repartition("conv_id") here: every volatile-path consumer is
-    # partitioning-agnostic — the extractors are per-row (scalar pandas
-    # UDF / mapInPandas), and conversation_nodes' groupBy partial-aggs
-    # map-side.  The round-2 design shuffled the full turn stream up
-    # front to feed a window that this path never runs; at 27.9M turns
-    # that was a memory-bandwidth-bound exchange with no consumer.
-    # (KgPipeline.run keeps the repartition — its bucketed checkpoint
-    # writes genuinely need conv_id clustering.)
-    #
-    # And NO persist() on the turn stream either (round-4 measurement):
-    # caching the widest frame in the pipeline costs far more than its
-    # three consumers save.  The InMemoryRelation build materializes ALL
-    # columns (defeating parquet column pruning for every consumer) and
-    # holds ~0.5 KB/turn of heap for the entire run — measured at 27.9M
-    # turns: wall@16 208.7s cached vs 109.8s uncached (the cache build +
-    # the GC pressure it exerts on every later stage), while wall@4 was
-    # unchanged (308.5 vs 306.6 — four slow tasks hide the cache cost).
-    # Uncached, each consumer re-scans parquet with ITS OWN pruned
-    # columns + pushed filters — columnar scans are cheap; heap is not.
-    # SPARK_GRAFT_TURNS_CACHE=1 re-enables the cache for A/B runs.
-    cache_turns = os.environ.get("SPARK_GRAFT_TURNS_CACHE", "0") == "1"
-    if cache_turns:
-        turns = _persist(assemble.normalize_turns(transcripts), "s0_normalize")
-    else:
-        turns = assemble.normalize_turns(transcripts)
-        if profiling:
-            t0 = time.time()
-            turns.count()
-            stage_walls["s0_scan_only"] = round(time.time() - t0, 2)
-    try:
-        # Persist the SLIM normalized mention stream, not the raw one: the
-        # two consumers (the (name, type) count agg and the provenance-edge
-        # pass) both key on the normalized name, never on surface/start —
-        # normalizing before the persist computes canonical_name once
-        # instead of once per consumer and drops two columns from the
-        # cached bytes (the heap-residency lesson of the turns cache,
-        # applied to the one cache that must stay: recomputing mentions
-        # means re-running the extraction UDF).
-        # FUSED S2 (round 5): mentions and triples come from ONE corpus
-        # pass (extract.extract_fused) and ONE cache — the previous shape
-        # ran two whole-corpus jobs (one per extractor), each paying the
-        # parquet scan + Arrow text transfer.  Mention surfaces are
-        # normalized pre-persist exactly as before (same codegen
-        # canonical_name, same empty-name drop — here expressed as a
-        # conditional on the tagged rows); triple endpoints stay RAW (S4
-        # canonicalizes them itself, and the dangling side-output carries
-        # original text).  The two consumer frames are cache-backed
-        # filters, so downstream plans are unchanged.
-        from stixtoneodb_spark.functions.textfns import canonical_name  # noqa: PLC0415
-
-        # n_raw (raw triple count) rides the fused cache build as an
-        # Observation — it fires on whatever action first materializes
-        # the cache (the CC chain's first eager job in timed mode), so
-        # the count costs ZERO extra barriers or scans.
-        fused_obs = Observation("s2_fused")
-        fused = (
-            extract.extract_fused(turns)
-            .withColumn(
-                "a",
-                F.when(F.col("kind") == "m", canonical_name(F.col("a"))).otherwise(
-                    F.col("a")
-                ),
-            )
-            .where((F.col("kind") != "m") | (F.length("a") > 0))
-            .observe(
-                fused_obs,
-                F.sum((F.col("kind") == "t").cast("long")).alias("n_t"),
-            )
-        )
-        fused = _persist(fused, "s2_extract_fused")
-        mentions = fused.where(F.col("kind") == "m").select(
-            "conv_id",
-            "turn_idx",
-            F.col("a").alias("name"),
-            F.col("b").alias("entity_type"),
-        )
-        triples_raw = fused.where(F.col("kind") == "t").select(
-            "conv_id",
-            "turn_idx",
-            F.col("a").alias("subj_text"),
-            F.col("b").alias("pred"),
-            F.col("c").alias("obj_text"),
-            "confidence",
-        )
-        # Overlap the triple-extraction cache build with the S3
-        # vocabulary/CC chain: the two are INDEPENDENT subgraphs (triples
-        # are consumed only by S4), and the CC chain's vocabulary-scale
-        # stages under-fill the task slots (its data is orders of
-        # magnitude smaller than the corpus) — a concurrent driver job is
-        # how a real cluster driver keeps executors busy through a
-        # low-parallelism phase.  Standard multi-job Spark: FIFO
-        # scheduling still runs later jobs' tasks in whatever slots the
-        # head job leaves idle.  Profile mode stays sequential so stage
-        # attribution remains meaningful.
-        prefetch_err: list[BaseException] = []
-        prefetch = None
-        conv_nodes_arg = None
-        if profiling:
-            # sequential in profile mode, but persisted + attributed so the
-            # tail's conversation leg is visible as its own stage
-            conv_nodes_arg = _persist(
-                materialize.conversation_nodes(turns), "s5_conv_nodes"
-            )
-        elif os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "1":
-            # ONE background lane: the conversation-node cache — the tail
-            # action's only S0-rooted leg; prefetching it removes a whole
-            # corpus scan from the serial tail.  (The triples cache needs
-            # no lane anymore: it IS the fused S2 cache, built by the CC
-            # chain's first eager job.)  One background scan at a time —
-            # two parallel lanes measured slower at local[16] (memory-
-            # bandwidth thrash against the fused extraction build).
-            if os.environ.get("SPARK_GRAFT_CONV_PREFETCH", "1") == "1":
-                conv_nodes_arg = _persist(materialize.conversation_nodes(turns))
-
-                def _build_prefetch_lane() -> None:
-                    try:
-                        conv_nodes_arg.count()
-                    except BaseException as e:  # noqa: BLE001 — re-raised at join
-                        prefetch_err.append(e)
-
-                prefetch = threading.Thread(
-                    target=_build_prefetch_lane, daemon=True
-                )
-                prefetch.start()
-        frames = _graph_frames(
-            turns,
-            mentions,
-            triples_raw,
-            alias_edges,
-            persist=_persist,
-            stage_walls=stage_walls,
-            conversation_nodes=conv_nodes_arg,
-        )
-        nodes, edges, linked = frames["nodes"], frames["edges"], frames["linked"]
-        if prefetch is not None:
-            # plan construction (and the CC chain's eager jobs) are done;
-            # the prefetch has had the whole window — surface any failure
-            # before the tail action consumes the cache it built
-            prefetch.join()
-        if prefetch_err:
-            raise prefetch_err[0]
-        # one action for the graph counts: tag-and-union instead of two
-        # counts — every Spark action is a driver barrier, and barriers
-        # are the part of the wall that does not shrink with cores.  The
-        # total turn count rides the SAME action: conversation nodes carry
-        # their per-conv turn count in n_mentions, so sum(w) over the 'n'
-        # tag IS n_turns — a separate turns.count() was one more barrier
-        # (and, uncached, one more full corpus scan).
-        t_tail = time.time()
-        counted = (
-            nodes.select(
-                F.lit("n").alias("k"),
-                F.when(F.col("node_type") == "conversation", F.col("n_mentions"))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("w"),
-            )
-            .unionAll(
-                # the edge leg's weight counts LINKED edges (everything
-                # except provenance edges), so n_linked rides this same
-                # action too — a separate linked.count() was one more
-                # driver barrier
-                edges.select(
-                    F.lit("e").alias("k"),
-                    (F.col("rel_type") != "mentioned_in").cast("long").alias("w"),
-                )
-            )
-            .groupBy("k")
-            .agg(F.count("*").alias("cnt"), F.sum("w").alias("w"))
-            .collect()
-        )
-        if profiling:
-            stage_walls["s5_materialize"] = round(time.time() - t_tail, 2)
-        by_k = {r["k"]: (r["cnt"], r["w"]) for r in counted}
-        # rode the fused-cache build (Observation) — zero extra barriers
-        n_raw = int(fused_obs.get["n_t"] or 0)
-        n_linked = int(by_k.get("e", (0, 0))[1] or 0)
-        return {
-            "n_turns": int(by_k.get("n", (0, 0))[1] or 0),
-            "n_nodes": int(by_k.get("n", (0, 0))[0]),
-            "n_edges": int(by_k.get("e", (0, 0))[0]),
-            # every raw triple lands in exactly one of linked/dropped, so
-            # the dangling count is arithmetic — no third join pass
-            "n_dropped": n_raw - n_linked,
-        }
-    finally:
-        # every intermediate this function persisted — including linked /
-        # mentions_canon — is released here, so repeated invocations (the
-        # bench's min-of-N loop, the oracle sweep) cannot accumulate
-        # cached RDDs and skew later timings
-        for df in cached:
-            df.unpersist()

@@ -31,6 +31,43 @@ def parallel_gc_threads(cores: int) -> int:
     return cores if cores <= 8 else 8 + (cores - 8) * 5 // 8
 
 
+def host_cores() -> int:
+    """CPUs this process may run on (its affinity mask, which container
+    CPU sets narrow), not the machine's full count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _memory_limit_bytes() -> int:
+    """Memory this process can use: the smaller of the cgroup limit (v2
+    ``memory.max`` or v1 ``memory.limit_in_bytes``; unlimited reads as
+    "max" or a near-2^63 sentinel) and MemAvailable (physical memory
+    where /proc is absent)."""
+    try:
+        with open("/proc/meminfo") as f:
+            avail = next(int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemAvailable:"))
+    except OSError:
+        avail = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            avail = min(avail, int(raw))
+    return avail
+
+
+def default_driver_memory() -> str:
+    """Default heap: 40% of the memory this process can use (floor 1g).
+    Local mode runs executors inside the driver JVM, whose RSS sits well
+    above -Xmx (metaspace, Arrow and shuffle buffers), and Python workers
+    plus a second JVM (e.g. a spark-submit child) need room beside it."""
+    return f"{max(1024, int(_memory_limit_bytes() * 0.4) >> 20)}m"
+
+
 def _master_cores(master: str) -> int:
     """Executor-core count implied by a local[N] master (the emulated
     node width); local[*] and non-local masters fall back to the host
@@ -39,7 +76,7 @@ def _master_cores(master: str) -> int:
     m = re.match(r"local\[(\d+)\]", master)
     if m:
         return int(m.group(1))
-    return os.cpu_count() or 8
+    return host_cores()
 
 
 def _local_dir() -> str:
@@ -62,13 +99,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the KG pipeline.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) in
-    the sandbox; on a real cluster callers pass ``None`` and let
-    ``spark-submit`` supply the master.  ``shuffle_partitions`` defaults to
-    the core count locally; on a 1000-executor cluster set it to ~2-3x total
-    cores (or rely on AQE coalescing, which is enabled here).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    CPUs this process may run on); on a real cluster ``spark-submit``
+    supplies the master.  ``shuffle_partitions`` defaults to the core
+    count locally; on a 1000-executor cluster set it to ~2-3x total cores
+    (or rely on AQE coalescing, which is enabled here).  The heap is
+    ``$SPARK_DRIVER_MEM``, default ``default_driver_memory()``.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -130,7 +168,7 @@ def get_spark(
         # working set, or GC becomes a shared bottleneck that caps scaling
         # (more cores → more concurrent allocation → more GC of the same
         # heap).  On a real cluster this is per-executor memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "56g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # Throughput collector: G1's concurrent cycles compete with the 16+
         # executor threads for cores and its region management fragments
         # under heavy task allocation; ParallelGC measured ~2x faster on
@@ -145,14 +183,15 @@ def get_spark(
         # holds for concurrent collectors, not for stop-the-world
         # ParallelGC — measured at local[16] the flat cap was the single
         # largest non-scaling cost; see parallel_gc_threads.)
-        # Long-lived workloads (and the bench, bench.py) additionally set
-        # -Xms=-Xmx + AlwaysPreTouch via $SPARK_DRIVER_JAVA_OPTS: a GROWING
-        # heap is the dominant first-run cost (ParallelGC collects+resizes
-        # while committed heap climbs toward -Xmx — measured @16 cores,
-        # 27.9M turns: 177s growing vs 91s pre-sized).  Not the library
-        # default: short-lived test sessions would commit 56g each, and two
-        # coexisting JVMs (e.g. the spark-submit e2e test under pytest)
-        # would pre-touch past the box's RAM.
+        # Long-lived workloads (and the benchmark, kgbench/run.py)
+        # additionally set -Xms=-Xmx + AlwaysPreTouch via
+        # $SPARK_DRIVER_JAVA_OPTS: a GROWING heap is the dominant first-run
+        # cost (ParallelGC collects+resizes while committed heap climbs
+        # toward -Xmx — measured @16 cores, 27.9M turns: 177s growing vs
+        # 91s pre-sized).  Not the library default: short-lived test
+        # sessions would commit the whole heap each, and two coexisting
+        # JVMs (e.g. the spark-submit e2e test under pytest) would
+        # pre-touch past the box's RAM.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(

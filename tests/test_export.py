@@ -9,15 +9,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from stixtoneodb_spark.operators import export
-from stixtoneodb_spark.plans.pipeline import run_volatile_frames
+from stixtoneodb_spark.plans.pipeline import KgPipeline
 from stixtoneodb_spark.sources.transcripts import alias_edges_df, transcripts_df
 
 
 @pytest.fixture(scope="module")
-def graph(spark):
+def graph(spark, tmp_path_factory):
+    # the frames the batch CLI hands its exporters
     tr = transcripts_df(spark, 30)
-    nodes, edges = run_volatile_frames(spark, tr, alias_edges=alias_edges_df(spark))
-    return nodes.persist(), edges.persist()
+    wh = str(tmp_path_factory.mktemp("wh_export"))
+    res = KgPipeline(spark, wh).run(tr, alias_edges=alias_edges_df(spark))
+    return res.nodes, res.edges
 
 
 def test_csv_round_trip(spark, graph, tmp_path):

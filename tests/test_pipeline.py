@@ -1,5 +1,6 @@
 """End-to-end pipeline properties: P/R gate, dangling accounting,
-idempotence, permutation invariance, resume-equals-fresh."""
+idempotence, permutation invariance, resume-equals-fresh, append-equals-
+union, and graph rows pinned to recorded values."""
 
 import pytest
 import pyspark.sql.functions as F
@@ -13,6 +14,28 @@ from stixtoneodb_spark.sources.transcripts import (
 )
 
 N_CONV = 50
+
+# Order-independent full-row signatures of this corpus's graph tables,
+# recorded from the pipeline before S2-S5 were fused into one dataflow:
+# (row count, sum of xxhash64 over every column in name order).
+PINNED_GRAPH = {
+    "nodes": (233, "48602461411194325506"),
+    "edges": (761, "-47546874977041585874"),
+    "dropped_triples": (2, "1467615144263229416"),
+}
+
+
+def rows_signature(df) -> tuple[int, str]:
+    cols = [F.col(c) for c in sorted(df.columns)]
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*cols).cast("decimal(20,0)")).alias("h"),
+    ).first()
+    return int(row["n"]), str(row["h"])
+
+
+def graph_signature(catalog) -> dict[str, tuple[int, str]]:
+    return {t: rows_signature(catalog.read(t)) for t in PINNED_GRAPH}
 
 
 @pytest.fixture(scope="module")
@@ -129,64 +152,6 @@ def test_resume_sweeps_staging_of_every_owned_table(spark, corpus, tmp_path_fact
     assert os.path.exists(foreign), "sweep deleted a concurrent writer's staging dir"
 
 
-def test_volatile_path_equals_checkpointed_run(spark, corpus, result):
-    """The bench/export dataflow (_graph_frames: aggregate-first nodes,
-    hot/cold dictionary joins) must produce EXACTLY the graph the
-    checkpointed production path produces — full-row equality, not just
-    ids, so a skew-optimization can never drift the semantics."""
-    from stixtoneodb_spark.plans.pipeline import run_volatile_frames
-
-    tr, _, aliases = corpus
-    pipe, res = result
-    nodes_v, edges_v = run_volatile_frames(spark, tr, alias_edges=aliases)
-    # read the tables back rather than res.* (earlier tests may have
-    # idempotently rewritten the warehouse files under the lazy frames)
-    nodes_t = pipe.catalog.read("nodes").select(*nodes_v.columns)
-    edges_t = pipe.catalog.read("edges").select(*edges_v.columns)
-    assert sorted(map(tuple, nodes_v.collect())) == sorted(
-        map(tuple, nodes_t.collect())
-    )
-    assert sorted(map(tuple, edges_v.collect())) == sorted(
-        map(tuple, edges_t.collect())
-    )
-
-
-def test_hot_cold_join_equals_plain_join(spark):
-    """hot_cold_join == plain join for every `how`, including rows whose
-    key is absent from the dictionary (left) and hot/cold boundary keys."""
-    from stixtoneodb_spark.plans.link import hot_cold_join, split_dict
-
-    stream = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 3), ("c", 4), ("zz", 5)], "name string, v int"
-    )
-    mapdf = spark.createDataFrame(
-        [("a", "A"), ("b", "B"), ("d", "D")], "name string, canonical_id string"
-    )
-    hot = spark.createDataFrame([("a",), ("d",)], "name string")
-    d = split_dict(mapdf, "name", hot)
-    for how in ("left", "inner"):
-        got = sorted(map(tuple, hot_cold_join(stream, d, how).collect()))
-        want = sorted(map(tuple, stream.join(mapdf, "name", how).collect()))
-        assert got == want, how
-    # renamed projection serves a differently-keyed stream off the same split
-    stream2 = stream.withColumnRenamed("name", "subj_name")
-    d2 = d.project({"name": "subj_name", "canonical_id": "subj_id"})
-    got2 = sorted(map(tuple, hot_cold_join(stream2, d2, "left").collect()))
-    want2 = sorted(
-        map(
-            tuple,
-            stream2.join(
-                mapdf.select(
-                    F.col("name").alias("subj_name"), F.col("canonical_id").alias("subj_id")
-                ),
-                "subj_name",
-                "left",
-            ).collect(),
-        )
-    )
-    assert got2 == want2
-
-
 def test_salted_dict_join_equals_plain_join(spark):
     """Targeted salting is result-identical to the plain join for both
     `how`s: hot keys match at the stream row's salt (dict replicated),
@@ -216,19 +181,47 @@ def test_metrics_recorded_per_stage(spark, result):
     assert {"s0_ingest", "s2_mentions", "s2_triples", "s3_canonical_map", "s4_link", "s5_nodes", "s5_edges"} <= stages
 
 
-def test_vectorized_triples_equal_grouped_map(spark):
-    """The batch-vectorized extractor (mapInPandas + extractall) must emit
-    exactly the grouped-map extractor's triples — the equality that lets
-    the pipeline skip 1-frame-per-conversation overhead by default."""
-    from stixtoneodb_spark.plans import assemble, extract
-    from stixtoneodb_spark.sources.transcripts import transcripts_df
+def test_stage_rows_come_from_the_writes(spark, result):
+    """Stage row counts ride the writes as Observations; each must equal
+    the table it describes (S4 splits every raw triple exactly once)."""
+    pipe, res = result
+    m = res.metrics
+    for stage, table in (
+        ("s0_ingest", "turns"),
+        ("s2_mentions", "mentions"),
+        ("s2_triples", "triples_raw"),
+        ("s3_canonical_map", "canonical_map"),
+        ("s4_link", "linked_triples"),
+        ("s4_dropped", "dropped_triples"),
+    ):
+        assert m[f"{stage}_rows"] == pipe.catalog.read(table).count(), stage
+    assert m["s4_link_rows"] + m["s4_dropped_rows"] == m["s2_triples_rows"]
 
-    turns = assemble.normalize_turns(transcripts_df(spark, 80)).repartition("conv_id")
-    fast = extract.extract_triples(turns)
-    slow = extract.extract_triples_grouped(turns)
-    assert fast.count() == slow.count() > 0
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
+
+def test_graph_matches_pinned_rows(spark, result):
+    """Full-row content of nodes, edges and dropped triples equals the
+    values recorded before the dataflow was rewritten."""
+    pipe, _ = result
+    assert graph_signature(pipe.catalog) == PINNED_GRAPH
+
+
+def test_append_equals_union_build(spark, corpus, tmp_path_factory):
+    """Build A, then append a disjoint B under a new run_id in the same
+    session and warehouse: the node and edge id sets must equal one build
+    over A∪B.  Guards against a cache from run A (keyed on a warehouse
+    path that run B rewrites) serving run B's reads."""
+    tr, _, aliases = corpus
+    in_a = F.pmod(F.xxhash64("conv_id"), F.lit(3)) != 0
+    wh = str(tmp_path_factory.mktemp("wh_append"))
+    KgPipeline(spark, wh, run_id="a").run(tr.where(in_a), alias_edges=aliases)
+    appended = KgPipeline(spark, wh, run_id="b").run(tr.where(~in_a), alias_edges=aliases)
+    union = KgPipeline(spark, str(tmp_path_factory.mktemp("wh_union")), run_id="ab").run(
+        tr, alias_edges=aliases
+    )
+    for table in ("nodes", "edges"):
+        got = {r.id for r in getattr(appended, table).select("id").collect()}
+        want = {r.id for r in getattr(union, table).select("id").collect()}
+        assert got == want, (table, len(got), len(want))
 
 
 def test_combined_mention_pass_equals_per_type(spark):
@@ -284,57 +277,51 @@ def test_cross_type_overlap_guard_catches_all_shapes():
     _assert_cross_type_nonoverlap({"a": ["acme corp", "corp"]})
 
 
-def test_salted_pipeline_equals_plain_pipeline(spark, corpus):
-    """End-to-end equality of the two link-join plans run_volatile can
-    pick (round-4): the default corpus has NO hot names (the frequency
-    floor is corpus-relative), so the plain single-pass plan runs; with
-    the floors forced down every name is hot and the whole pipeline runs
-    through salted_dict_join.  Both must produce identical graph stats —
-    the salt is an equi-key satisfied by construction, so any divergence
-    is a bug in the salting machinery, not a tuning choice."""
+def test_salted_pipeline_equals_plain_pipeline(spark, corpus, result, tmp_path_factory, monkeypatch):
+    """End-to-end equality of the three S4 join plans KgPipeline.run can
+    pick: the default broadcast join (the test vocabulary fits), the plain
+    shuffle join (broadcast bound forced to 0; the corpus-relative floor
+    finds no hot name) and the target-salted shuffle join (floors forced
+    down so every name is hot).  The salt is an equi-key satisfied by
+    construction, so any divergence is a bug in the salting machinery."""
+    import stixtoneodb_spark.plans.link as L
     import stixtoneodb_spark.plans.pipeline as P
 
     tr, _, aliases = corpus
-    stats_plain = P.run_volatile(spark, tr, alias_edges=aliases)
-    orig = (P.HOT_NAME_FLOOR, P.HOT_NAME_TARGET)
-    P.HOT_NAME_FLOOR, P.HOT_NAME_TARGET = 1, 10**9
-    try:
-        stats_salted = P.run_volatile(spark, tr, alias_edges=aliases)
-    finally:
-        P.HOT_NAME_FLOOR, P.HOT_NAME_TARGET = orig
-    assert stats_salted == stats_plain
+    pipe, _ = result
+    want = graph_signature(pipe.catalog)
+    salted_calls = []
+    orig = L.salted_dict_join
 
+    def counting_salted_join(*args, **kwargs):
+        salted_calls.append(args[2])
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(L, "salted_dict_join", counting_salted_join)
+    monkeypatch.setattr(P, "BROADCAST_UNIVERSE_MAX", 0)
+    for floor, target, n_salted in ((P.HOT_NAME_FLOOR, P.HOT_NAME_TARGET, 0), (1, 10**9, 2)):
+        monkeypatch.setattr(P, "HOT_NAME_FLOOR", floor)
+        monkeypatch.setattr(P, "HOT_NAME_TARGET", target)
+        salted_calls.clear()
+        run = KgPipeline(spark, str(tmp_path_factory.mktemp("wh_salt")), run_id="salt")
+        run.run(tr, alias_edges=aliases)
+        assert len(salted_calls) == n_salted, salted_calls
+        assert graph_signature(run.catalog) == want
 
 def test_fused_extraction_equals_separate_extractors(spark):
     """The fused S2 pass (one mapInPandas, tagged union) must emit the
-    IDENTICAL mention and triple multisets as the two standalone
-    extractors — any drift in the shared regex application order,
-    surface slicing, or predicate lowercasing breaks this."""
+    IDENTICAL mention and triple rows as the two standalone extractors —
+    any drift in the shared regex application order, surface slicing,
+    start offsets or predicate lowercasing breaks this."""
     from collections import Counter
 
     from stixtoneodb_spark.plans import extract
     from stixtoneodb_spark.sources.transcripts import transcripts_df
 
     tr = transcripts_df(spark, 400)
-    fused = extract.extract_fused(tr).collect()
-    f_m = Counter(
-        (r["conv_id"], r["turn_idx"], r["a"], r["b"])
-        for r in fused
-        if r["kind"] == "m"
-    )
-    f_t = Counter(
-        (r["conv_id"], r["turn_idx"], r["a"], r["b"], r["c"], r["confidence"])
-        for r in fused
-        if r["kind"] == "t"
-    )
-    s_m = Counter(
-        (r["conv_id"], r["turn_idx"], r["surface"], r["entity_type"])
-        for r in extract.detect_mentions(tr).collect()
-    )
-    s_t = Counter(
-        (r["conv_id"], r["turn_idx"], r["subj_text"], r["pred"], r["obj_text"],
-         r["confidence"])
-        for r in extract.extract_triples(tr).collect()
-    )
-    assert f_m == s_m and len(f_m) > 0
-    assert f_t == s_t and len(f_t) > 0
+    f_m, f_t = extract.split_fused(extract.extract_fused(tr))
+    s_m, s_t = extract.detect_mentions(tr), extract.extract_triples(tr)
+    for fused, single in ((f_m, s_m), (f_t, s_t)):
+        assert fused.schema.simpleString() == single.schema.simpleString()
+        got = Counter(map(tuple, fused.collect()))
+        assert got == Counter(map(tuple, single.collect())) and len(got) > 0

@@ -67,16 +67,3 @@ def test_topk_is_take_ordered(spark):
     p = plan_of(relational.q3_shipping_priority(spark, SF))
     assert "TakeOrderedAndProject" in p
 
-
-def test_udtf_sentence_split_equals_builtin(spark):
-    """The Spark-4 Python UDTF surface (registration + SQL LATERAL +
-    multi-column yield) emits exactly the codegen posexplode path's rows."""
-    from stixtoneodb_spark.plans import extract
-    from stixtoneodb_spark.sources.transcripts import transcripts_df
-
-    turns = transcripts_df(spark, 40).select("conv_id", "turn_idx", "text")
-    builtin = extract.split_sentences_builtin(turns)
-    via_udtf = extract.split_sentences_udtf(turns)
-    assert builtin.count() == via_udtf.count() > 0
-    assert builtin.exceptAll(via_udtf).count() == 0
-    assert via_udtf.exceptAll(builtin).count() == 0
