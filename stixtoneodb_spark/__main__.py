@@ -19,11 +19,6 @@ Modes mirror the reference's:
                       resumes from the last completed stage.
   stream            — the -x analog: Structured Streaming ingest of
                       transcript chunk files into the mention MERGE sink.
-  query             — run any registry operator by name over a table dir
-                      (--input), writing parquet to --warehouse (or
-                      printing row count): the ad-hoc analytics surface,
-                      so every queries() operator is reachable from the
-                      CLI, not just from Python.
 """
 
 from __future__ import annotations
@@ -40,34 +35,18 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", default="run-0", help="resume key for checkpointed stages")
     p.add_argument(
         "--mode",
-        choices=["batch", "stream", "query"],
+        choices=["batch", "stream"],
         default="batch",
-        help="-f / -x analog, or ad-hoc operator query",
+        help="-f / -x analog",
     )
     p.add_argument("--master", default=None, help="override master (dev only; spark-submit sets it)")
     p.add_argument("--export-graphml", default=None, metavar="PATH", help="also export GraphML document")
     p.add_argument("--export-cypher", default=None, metavar="PATH", help="also export Cypher statements")
-    p.add_argument("--query", default=None, help="registry operator name (mode=query)")
     args = p.parse_args(argv)
 
     from stixtoneodb_spark.session import get_spark
 
     spark = get_spark(app_name=f"kg-{args.run_id}", master=args.master)
-
-    if args.mode == "query":
-        from stixtoneodb_spark.operators.registry import REGISTRY
-
-        if args.query not in REGISTRY:
-            known = ", ".join(sorted(REGISTRY))
-            print(f"unknown query {args.query!r}; known: {known}", file=sys.stderr)
-            return 2
-        fn, _sql = REGISTRY[args.query]
-        df = fn(spark, args.input)
-        out = f"{args.warehouse.rstrip('/')}/{args.query}"
-        df.write.mode("overwrite").parquet(out)
-        n = spark.read.parquet(out).count()
-        print(json.dumps({"mode": "query", "query": args.query, "rows": n, "out": out}))
-        return 0
 
     if args.mode == "stream":
         from stixtoneodb_spark.streaming import ingest
@@ -88,11 +67,11 @@ def main(argv: list[str] | None = None) -> int:
         transcripts, alias_edges=alias_edges_df(spark)
     )
     if args.export_graphml:
-        from stixtoneodb_spark.operators.export import export_graphml
+        from stixtoneodb_spark.plans.export import export_graphml
 
         export_graphml(result.nodes, result.edges, args.export_graphml)
     if args.export_cypher:
-        from stixtoneodb_spark.operators.export import export_cypher
+        from stixtoneodb_spark.plans.export import export_cypher
 
         export_cypher(result.nodes, result.edges, args.export_cypher)
     print(json.dumps({"mode": "batch", "run_id": args.run_id, "metrics": result.metrics}))

@@ -13,18 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-SEP = "\x1f"  # unit separator: cannot appear in normal text keys
-
-
-def entity_id(entity_type: Column, canonical_name: Column) -> Column:
-    """Deterministic entity key: sha2(type || canonical_name).
-
-    Mirrors the reference's ``type--uuid`` identity (SURVEY §1.4) but
-    reproducible: the same surface entity always maps to the same node id
-    regardless of partition layout, retries, or run count.
-    """
-    return F.sha2(F.concat_ws("\x1f", entity_type, canonical_name), 256)
-
 
 def edge_id(src: Column, rel_type: Column, dst: Column, provenance: Column) -> Column:
     """Deterministic edge key mirroring the reference's SRO identity
@@ -38,12 +26,3 @@ def child_id(parent_id: Column, kind: Column | str, payload: Column) -> Column:
     Deterministic replacement for the library's generated UUIDs."""
     kind_col = F.lit(kind) if isinstance(kind, str) else kind
     return F.sha2(F.concat_ws("\x1f", parent_id, kind_col, payload), 256)
-
-
-def salt_col(key: Column, n_salt: int) -> Column:
-    """Salt bucket for skewed join keys: pmod(xxhash64(key), n_salt).
-
-    Used on the fact side of a skewed join; the dim side is replicated
-    ``n_salt``-ways via ``explode(sequence(0, n_salt-1))``.
-    """
-    return F.pmod(F.xxhash64(key), F.lit(n_salt)).cast("int")

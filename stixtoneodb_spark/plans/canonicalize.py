@@ -37,7 +37,6 @@ from stixtoneodb_spark.functions.textfns import (
 # the token-blocking tier and alias edges cover the low-Jaccard recall tail.
 NUM_HASHES = 24
 NUM_BANDS = 8
-ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 MAX_BLOCK = 32  # LSH skew guard: cap degenerate mega-blocks
 
 # Tiny-graph fast path for connected_components: below this edge count the

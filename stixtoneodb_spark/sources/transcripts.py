@@ -13,10 +13,9 @@ triples reference an undefined entity (must be dropped AND counted, like the
 dangling refs at testfull.json:3759-3781), and a few empty/malformed turns
 must be skipped without aborting.
 
-Generation is driver-free of Spark: pure numpy, seed-deterministic, then
-parallelized via spark.createDataFrame over precomputed rows at small scale,
-or mapInPandas over a range frame at bench scale (so the 10^6-turn bench
-input is produced by the cluster, not the driver).
+Generation is plain Python, free of Spark and seed-deterministic
+(``generate_local``); ``transcripts_df`` parallelizes the precomputed rows
+with spark.createDataFrame.
 """
 
 from __future__ import annotations
@@ -187,31 +186,6 @@ def truth_triples_df(spark: SparkSession, n_conversations: int, seed: int = 42) 
     return spark.createDataFrame(corpus.truth_triples, TRUTH_TRIPLE_SCHEMA)
 
 
-def transcripts_df_distributed(
-    spark: SparkSession, n_conversations: int, seed: int = 42, slices: int = 64
-) -> DataFrame:
-    """Bench-scale generation: conversations generated on executors.
-
-    Each conversation is derived from (seed, conv index) only, so the output
-    is identical regardless of partitioning — the generator runs where the
-    data will live, the driver never materializes the corpus.
-    """
-    import pandas as pd  # noqa: PLC0415
-
-    base_ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                rng = random.Random(seed * 1_000_003 + int(i))
-                rows.extend(_gen_conversation(rng, int(i), base_ts).transcripts)
-            yield pd.DataFrame(rows, columns=[f.name for f in TRANSCRIPT_SCHEMA.fields])
-
-    idx = spark.range(0, n_conversations, numPartitions=slices)
-    return idx.mapInPandas(gen, TRANSCRIPT_SCHEMA)
-
-
 def alias_edges_df(spark: SparkSession) -> DataFrame:
     """Known-alias edge list from the gazetteer (normalized surface pairs).
 
@@ -234,26 +208,4 @@ def alias_edges_df(spark: SparkSession) -> DataFrame:
         )
         .where(F.col("name_a") != F.col("name_b"))
         .distinct()
-    )
-
-
-def write_corpus(spark: SparkSession, out_dir: str, n_conversations: int, seed: int = 42) -> None:
-    """Materialize transcripts + ground truth as parquet (test fixture)."""
-    corpus = generate_local(n_conversations, seed)
-    spark.createDataFrame(corpus.transcripts, TRANSCRIPT_SCHEMA).repartition(8, "conv_id").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/transcripts")
-    spark.createDataFrame(corpus.truth_triples, TRUTH_TRIPLE_SCHEMA).write.mode("overwrite").parquet(
-        f"{out_dir}/truth_triples"
-    )
-    mention_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("surface", T.StringType(), False),
-            T.StructField("canonical", T.StringType(), False),
-        ]
-    )
-    spark.createDataFrame(corpus.truth_mentions, mention_schema).write.mode("overwrite").parquet(
-        f"{out_dir}/truth_mentions"
     )

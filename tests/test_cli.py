@@ -117,33 +117,3 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
         assert r.returncode == 0, r.stderr[-2000:]
     assert os.path.exists(os.path.join(wh, "nodes", "_SUCCESS"))
     assert os.path.exists(os.path.join(wh, "edges", "_SUCCESS"))
-
-
-def test_cli_query_mode(spark, tmp_path, capsys):
-    """--mode query runs any registry operator from the CLI and writes
-    parquet — the ad-hoc analytics surface."""
-    rc = main(
-        [
-            "--mode", "query",
-            "--query", "agg_count_by_type",
-            "--input", "/root/testdata/sf0.001",
-            "--warehouse", str(tmp_path / "qout"),
-        ]
-    )
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["query"] == "agg_count_by_type" and out["rows"] > 0
-    assert spark.read.parquet(out["out"]).count() == out["rows"]
-
-
-def test_cli_query_mode_unknown_name(spark, tmp_path, capsys):
-    rc = main(
-        [
-            "--mode", "query",
-            "--query", "no_such_op",
-            "--input", "/root/testdata/sf0.001",
-            "--warehouse", str(tmp_path / "qout2"),
-        ]
-    )
-    assert rc == 2
-    assert "unknown query" in capsys.readouterr().err

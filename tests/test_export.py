@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from stixtoneodb_spark.operators import export
+from stixtoneodb_spark.plans import export
 from stixtoneodb_spark.plans.pipeline import KgPipeline
 from stixtoneodb_spark.sources.transcripts import alias_edges_df, transcripts_df
 
