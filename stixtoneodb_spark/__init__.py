@@ -7,7 +7,8 @@ id, dangling-ref skipping, and append/MERGE semantics; see
 /root/reference/README.md:69-85) as an idiomatic Spark DataFrame pipeline
 over conversation-transcript corpora: the S0–S5 batch dataflow
 (``plans.pipeline.KgPipeline``), its streaming mention sink
-(``streaming.ingest``) and graph export (``plans.export``).
+(``streaming.ingest``) and graph export (``plans.export``).  The
+``operators`` package is a separate analytics library that no KG path uses.
 
 Everything here is DataFrame-first: Catalyst plans the physical execution;
 Python UDFs appear only as Arrow-vectorized pandas UDFs where built-in

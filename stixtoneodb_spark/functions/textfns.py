@@ -1,14 +1,17 @@
 """Text-normalization / tokenization column expressions.
 
-All JVM-side built-ins (no Python in the hot path).  These feed entity
-canonicalization: the exact canonical-name tier and the character
-shingles of its MinHash blocking (plans/canonicalize.py).
+All JVM-side built-ins (no Python in the hot path).  These feed mention
+detection, dedup shingling, and canonicalization blocking.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# Keep this regex simple enough to be dialect-portable (Java regex here,
+# RE2-ish in DuckDB oracles): ASCII word runs.
+TOKEN_RE = "[a-z0-9]+"
 
 
 def normalize(text: Column) -> Column:
@@ -31,6 +34,13 @@ def normalize(text: Column) -> Column:
 def normalize_regex(text: Column) -> Column:
     """regexp_replace form of ``normalize`` — kept as the equality oracle."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+
+
+def tokens(text: Column) -> Column:
+    """array<string> of lowercase alnum tokens."""
+    return F.filter(
+        F.split(F.lower(text), r"[^a-z0-9]+"), lambda t: t != F.lit("")
+    )
 
 
 STOP_TOKENS = ("the", "corp", "corporation", "inc", "group", "ltd", "llc")
@@ -127,3 +137,163 @@ def shingles(text: Column, k: int = 5) -> Column:
     n = F.length(norm)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
     return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
+
+
+def word_shingles(text: Column, k: int = 3) -> Column:
+    """Word k-shingle array (distinct) — joins k consecutive tokens."""
+    toks = tokens(text)
+    n = F.size(toks)
+    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
+    return F.array_distinct(
+        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
+    )
+
+
+def minhash_signature(shingle_arr: Column, num_hashes: int = 64, seed: int = 42) -> Column:
+    """MinHash signature as array<long>: for each of ``num_hashes`` hash
+    seeds, the min of xxhash64(shingle, seed) over the shingle set.
+
+    NOTE: higher-order functions (transform/aggregate) evaluate their
+    lambdas *interpreted*, outside whole-stage codegen — fine for ad-hoc
+    use, but the hot blocking path uses ``minhash_band_table`` below
+    (explode + codegen'd min-aggregates), which is ~20x faster at corpus
+    scale.  Same hash family, same determinism.
+    """
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda h: F.aggregate(
+            shingle_arr,
+            F.lit(2**63 - 1).cast("long"),
+            lambda acc, s: F.least(acc, F.xxhash64(s, h + F.lit(seed))),
+        ),
+    )
+
+
+def word_shingle_rows(df, key_col: str, text: Column, k: int = 3):
+    """Word k-shingles as ROWS ``(key, sh)`` — the all-codegen form.
+
+    Tokenization is posexplode + a plain WHERE (no HOF filter); k-grams
+    come from ``lead`` windows over the per-key token sequence; per-key
+    dedup is a row_number window on (key, sh).  Every window and every
+    downstream groupBy(key) rides ONE hash partitioning on the key
+    (ClusteredDistribution(key, sh) is satisfied by hash(key)), so the
+    whole shingle→signature→fingerprint chain costs a single shuffle.
+    Matches ``word_shingles``'s array semantics exactly: full k-grams
+    only, whole-token-string fallback for keys with fewer than k tokens
+    (concat_ws skips the null leads), token-less keys vanish (explode of
+    an empty array emits nothing), duplicates dropped.
+
+    This replaced the array form in the dedup hot path: the interpreted
+    ``transform`` lambda plus caching wide shingle arrays cost ~4x the
+    entire rest of the LSH pipeline at sf0.1.
+    """
+    from pyspark.sql import Window  # noqa: PLC0415
+
+    toks = df.select(
+        F.col(key_col), F.posexplode(F.split(F.lower(text), r"[^a-z0-9]+")).alias("pos", "t")
+    ).where(F.col("t") != "")
+    w = Window.partitionBy(key_col).orderBy("pos")
+    wp = Window.partitionBy(key_col)
+    leads = [F.lead("t", i).over(w) for i in range(1, k)]
+    grams = toks.select(
+        F.col(key_col),
+        F.row_number().over(w).alias("rn"),
+        F.count("*").over(wp).alias("n"),
+        F.concat_ws(" ", F.col("t"), *leads).alias("sh"),
+    )
+    keep = (F.col("rn") <= F.col("n") - k + 1) | ((F.col("n") < k) & (F.col("rn") == 1))
+    wdup = Window.partitionBy(key_col, "sh").orderBy("rn")
+    return (
+        grams.where(keep)
+        .withColumn("_dup", F.row_number().over(wdup))
+        .where(F.col("_dup") == 1)
+        .select(key_col, "sh")
+    )
+
+
+def _band_table_from_sigs(sigs, key_col: str, num_hashes: int, num_bands: int):
+    """Shared banding tail: signature columns _h0.._hN → (key, band) rows."""
+    rows_per_band = num_hashes // num_bands
+    bands = F.array(
+        *[
+            F.concat_ws(
+                ":",
+                F.lit(str(b)),
+                F.sha2(
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.col(f"_h{b * rows_per_band + j}").cast("string")
+                            for j in range(rows_per_band)
+                        ],
+                    ),
+                    256,
+                ),
+            )
+            for b in range(num_bands)
+        ]
+    )
+    return sigs.select(F.col(key_col), F.explode(bands).alias("band"))
+
+
+def minhash_band_table(
+    df,
+    key_col: str,
+    shingle_col: str,
+    num_hashes: int,
+    num_bands: int,
+    seed: int = 42,
+):
+    """(key, band) LSH rows via the codegen path: explode shingles, one
+    ``min(xxhash64(s, seed+h))`` aggregate per hash (whole-stage codegen,
+    map-side partial agg), then band keys as plain sha2 projections.
+
+    Equivalent semantics to ``minhash_signature`` + ``lsh_band_keys``
+    (identical hash family and banding), but every expression stays inside
+    codegen — the HOF-lambda interpreter overhead of the array form made
+    MinHash the dominant cost of both dedup and canonicalization blocking.
+    Rows out: one per (key, band); duplicates impossible (bands indexed).
+    """
+    ex = df.select(F.col(key_col), F.explode(shingle_col).alias("_s"))
+    return minhash_band_table_rows(
+        ex.withColumnRenamed("_s", "sh"), key_col, num_hashes, num_bands, seed
+    )
+
+
+def minhash_band_table_rows(
+    rows,
+    key_col: str,
+    num_hashes: int,
+    num_bands: int,
+    seed: int = 42,
+):
+    """(key, band) LSH rows from a shingle-ROWS frame ``(key, sh)`` —
+    same hash family and banding as ``minhash_band_table`` but with no
+    array column anywhere: pairs with ``word_shingle_rows`` so signatures
+    aggregate directly on the exploded representation (map-side partial
+    min-aggregates; the groupBy reuses the shingle frame's key
+    partitioning)."""
+    aggs = [
+        F.min(F.xxhash64(F.col("sh"), F.lit(seed + h))).alias(f"_h{h}")
+        for h in range(num_hashes)
+    ]
+    return _band_table_from_sigs(rows.groupBy(key_col).agg(*aggs), key_col, num_hashes, num_bands)
+
+
+def lsh_band_keys(signature: Column, num_bands: int, rows_per_band: int) -> Column:
+    """Banded LSH keys: array of sha2-hashed signature slices.
+
+    Documents sharing any band key are near-dup candidates; exploding this
+    array and grouping by key gives the candidate blocks.
+    """
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_bands - 1)),
+        lambda b: F.concat_ws(
+            ":",
+            b.cast("string"),
+            F.sha2(
+                F.concat_ws(",", F.transform(F.slice(signature, b * rows_per_band + 1, rows_per_band), lambda x: x.cast("string"))),
+                256,
+            ),
+        ),
+    )
