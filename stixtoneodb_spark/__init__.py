@@ -5,10 +5,9 @@ parse typed documents -> emit property-graph nodes and edges, with dedup on
 id, dangling-ref skipping, and append/MERGE semantics; see
 /root/reference/src/main/scala/com/kodekutters/StixToNeoDB.scala:32-58 and
 /root/reference/README.md:69-85) as an idiomatic Spark DataFrame pipeline
-over conversation-transcript corpora: the S0–S5 batch dataflow
-(``plans.pipeline.KgPipeline``), its streaming mention sink
-(``streaming.ingest``) and graph export (``plans.export``).  The
-``operators`` package is a separate analytics library that no KG path uses.
+over conversation-transcript corpora, plus the relational / dedup /
+similarity / text-analysis operator library a large-scale training-data
+pipeline needs.
 
 Everything here is DataFrame-first: Catalyst plans the physical execution;
 Python UDFs appear only as Arrow-vectorized pandas UDFs where built-in

@@ -317,8 +317,8 @@ def dedup_embedding_cosine(
     operator is the exact tier and the oracle anchor.
 
     (Production near-dup uses ~0.99; the synthetic vectors are
-    near-orthogonal, so a data-relative 0.45 keeps a check on them
-    non-vacuous.)
+    near-orthogonal, so the registry binds a data-relative 0.45 to keep
+    the oracle check non-vacuous.)
     """
     import math  # noqa: PLC0415
 

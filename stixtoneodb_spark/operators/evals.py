@@ -388,7 +388,7 @@ def eval_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine top-k — the quality gate that decides whether the cheap tier
     may serve a query class, measured entirely in-engine.
 
-    Both systems are this library's own operators (ann_cosine_topk /
+    Both systems are the registry's own operators (ann_cosine_topk /
     ann_lsh_bucketed), so this oracle verifies the COMPOSITION: the
     DuckDB side re-runs both full algorithms as subqueries and joins
     them the same way.  recall_micro = 1e6·hits div k, integer.

@@ -1,7 +1,7 @@
 """Graph-analytics operator queries (SURVEY §2 Part B, iterative tier).
 
 These expose the engine's iterative graph primitives as first-class
-queries checkable against a cross-engine oracle — previously the
+registry queries with FULL cross-engine oracles — previously the
 alternating large-star/small-star connected-components loop (the heart of
 entity canonicalization, plans/canonicalize.py) was verified only by
 property tests; here the DuckDB oracle independently re-computes the same
@@ -14,7 +14,8 @@ Reference parity: StixToNeoDB has no graph analytics (it delegates
 replacement for that delegation: the same node/edge tables the pipeline
 materializes stay queryable in-engine.
 
-Each function takes (spark, sf_dir) and returns a DataFrame.
+Each function takes (spark, sf_dir) and returns a DataFrame; the matching
+oracle SQL lives in ``registry.py``.
 """
 
 from __future__ import annotations
@@ -27,7 +28,8 @@ from stixtoneodb_spark.operators.text import _ws_tokens
 from stixtoneodb_spark.plans.canonicalize import connected_components
 from stixtoneodb_spark.sources.tables import load_table
 
-# PageRank protocol constants.
+# PageRank protocol constants — shared with the oracle SQL (registry.py
+# interpolates them, so both engines always run the same spec).
 PR_DAMPING = 0.85
 PR_ITERS = 5
 PR_VOCAB = (

@@ -146,7 +146,7 @@ def join_cogroup_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Heavy-hitters protocol: Misra-Gries sketch capacity and the verified
-# top-J.
+# top-J.  Shared with the oracle SQL via registry interpolation.
 MG_CAPACITY = 64
 HH_TOP_J = 10
 
@@ -185,7 +185,7 @@ def mg_sketch(tok: DataFrame, capacity: int) -> DataFrame:
     task's input is summary-cardinality.  At 1000 executors the merge is
     one task over 1000*capacity rows — microseconds.  (Deterministic
     only in the no-eviction regime |vocab| <= capacity, which the
-    heavy-hitters query is sized for; the eviction-regime GUARANTEE — every
+    registry query is sized for; the eviction-regime GUARANTEE — every
     token with freq > n/(capacity+1) survives any partitioning — is
     what the planted property test pins.)
     """
@@ -225,7 +225,7 @@ def mg_merge_summaries(weighted: DataFrame, capacity: int) -> DataFrame:
 def agg_heavy_hitters_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent-items monitoring: the exact top-``HH_TOP_J`` tokens with
     their frequencies, each flagged with whether the distributed
-    Misra-Gries sketch retained it.  ``MG_CAPACITY`` is sized
+    Misra-Gries sketch retained it.  The registry sizes ``MG_CAPACITY``
     above the corpus vocabulary, so the sketch is exact (no eviction
     ever fires) and ``retained_by_sketch`` is deterministically TRUE —
     the oracle checks that equality; the eviction-regime guarantee is

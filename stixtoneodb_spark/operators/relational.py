@@ -1,14 +1,14 @@
 """Relational operator queries over the driver tables (SURVEY §2 Part B).
 
-Each function takes (spark, sf_dir) and returns a DataFrame.  Conventions
-that keep results engine-independent (checkable against an ANSI-SQL
-replay):
+Each function takes (spark, sf_dir) and returns a DataFrame; the matching
+ANSI-SQL oracle lives in ``registry.py``.  Conventions for oracle parity:
 
 - every computed column is explicitly aliased, identically in both engines;
 - floating aggregates are computed as EXACT decimal sums first, then
   round-cast to double — bit-identical across engines regardless of
   partial-aggregation order;
-- every query's output is deterministic as a multiset.
+- every query's output is deterministic as a multiset (the driver's compare
+  is order-insensitive).
 
 Scale notes are in each docstring: which side broadcasts, where the
 shuffle lands, what AQE handles.

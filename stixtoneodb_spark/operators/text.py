@@ -456,7 +456,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Corpus-curation thresholds.
+# Corpus-curation thresholds (shared with the oracle SQL via registry
+# interpolation).
 CURATE_LANG = "en"
 CURATE_MIN_TOKENS = 20
 
