@@ -14,8 +14,12 @@ runtime jar, so the catalog interface here has two backends:
   a deterministic precedence column.  Writes to a temp dir then swaps, so a
   failed job never corrupts the table.
 
-Both expose the same three calls the pipeline uses: ``merge_upsert``,
-``read``, ``overwrite``.
+Both expose the same interface: whole-table writes (``overwrite``,
+``merge_upsert``), bucket- and partition-scoped writes for the streaming
+sink (``merge_upsert_bucketed``, ``overwrite_partition``), their reads, and
+a row ledger for driver-side bookkeeping (``append``, ``read_rows``).  On
+the parquet backend the ledger runs no Spark job: each ``append`` is one
+parquet file written by pyarrow and renamed into the table dir.
 """
 
 from __future__ import annotations
@@ -24,8 +28,12 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 class ParquetMergeCatalog:
@@ -35,11 +43,16 @@ class ParquetMergeCatalog:
     byte-identical table.  Precedence: existing row wins unless the source
     row has a strictly larger ``version_col`` (latest-version-wins dedup,
     reference A15 semantics: row_number over id ordered by modified desc).
+
+    Every whole-table write records the table's schema, and ``read`` hands
+    it to the reader, so reading back a table this instance wrote runs no
+    schema-inference job.  Any other table infers its schema from its files.
     """
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
+        self._schemas: dict[str, StructType] = {}
         os.makedirs(warehouse, exist_ok=True)
 
     def _path(self, table: str) -> str:
@@ -74,8 +87,9 @@ class ParquetMergeCatalog:
             shutil.rmtree(root, ignore_errors=True)
             return
         for t in tables:
-            # partition-level staging lives under _staging/<table>/...,
-            # whole-table staging as _staging/<table>.tmp-<hex>
+            # partition-level staging and unrenamed ledger files live under
+            # _staging/<table>/..., whole-table staging as
+            # _staging/<table>.tmp-<hex>
             shutil.rmtree(os.path.join(root, t), ignore_errors=True)
             if os.path.isdir(root):
                 for entry in os.listdir(root):
@@ -86,7 +100,10 @@ class ParquetMergeCatalog:
         return os.path.exists(os.path.join(self._path(table), "_SUCCESS"))
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(table))
+        reader = self.spark.read
+        if table in self._schemas:
+            reader = reader.schema(self._schemas[table])
+        return reader.parquet(self._path(table))
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         self._atomic_write(table, df)
@@ -121,8 +138,34 @@ class ParquetMergeCatalog:
         )
         self._atomic_write(table, merged)
 
-    def append(self, table: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self._path(table))
+    def append(self, table: str, rows: list[tuple], schema: str) -> None:
+        """Append driver rows (``schema`` is a DDL string) to a ledger table
+        with zero Spark jobs: pyarrow writes them as one parquet file under
+        ``_staging/<table>/``, which is then renamed into the table dir.  A
+        kill before the rename leaves the file in staging, where
+        ``sweep_staging`` drops it unread."""
+        struct = StructType.fromDDL(schema)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = self._staging(table, name)
+        pq.write_table(
+            pa.Table.from_pylist(
+                [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+            ),
+            tmp,
+        )
+        final = self._path(table)
+        os.makedirs(final, exist_ok=True)
+        os.rename(tmp, os.path.join(final, name))
+        if not self.exists(table):
+            open(os.path.join(final, "_SUCCESS"), "w").close()
+
+    def read_rows(self, table: str, columns: list[str]) -> list[dict]:
+        """``columns`` of every row of a ledger table, read on the driver
+        with pyarrow (zero Spark jobs); ledger files Spark wrote read the
+        same way.  A missing table has no rows."""
+        if not self.exists(table):
+            return []
+        return pq.read_table(self._path(table), columns=columns).to_pylist()
 
     def merge_upsert_bucketed(
         self,
@@ -217,6 +260,7 @@ class ParquetMergeCatalog:
         final = self._path(table)
         tmp = self._staging(table + ".tmp-" + uuid.uuid4().hex[:8])
         df.write.mode("overwrite").parquet(tmp)
+        self._schemas[table] = df.schema
         if os.path.exists(final):
             old = tmp + ".old"
             os.rename(final, old)
@@ -315,8 +359,13 @@ class IcebergCatalog:
             f"INSERT OVERWRITE {self.namespace}.{table} SELECT * FROM {view}"
         )
 
-    def append(self, table: str, df: DataFrame) -> None:
-        df.writeTo(f"{self.namespace}.{table}").append()
+    def append(self, table: str, rows: list[tuple], schema: str) -> None:
+        self.spark.createDataFrame(rows, schema).writeTo(f"{self.namespace}.{table}").append()
+
+    def read_rows(self, table: str, columns: list[str]) -> list[dict]:
+        if not self.exists(table):
+            return []
+        return [r.asDict() for r in self.read(table).select(*columns).collect()]
 
     def sweep_staging(self, tables: list[str] | None = None) -> None:
         """No-op: Iceberg commits are snapshot-atomic — there is no

@@ -25,10 +25,13 @@ Resume contract: every stage writes its output table plus a
 ``_checkpoints`` row (run_id, stage, part, status, rows, wall_s).  ``run()``
 with the same run_id skips stages whose checkpoint row is 'done' and whose
 table exists — kill-and-resume yields identical outputs because all keys
-are content-derived (functions.ids).  The checkpoint table is read once per
-run; row counts ride the stage writes as Observations.  Every frame a run
-persists is released before it returns, so no cache keyed on a warehouse
-path outlives the run that wrote the path.
+are content-derived (functions.ids).  The checkpoint and ``_metrics``
+tables are a ledger of driver-written parquet files, one per appended row
+(a run's ``_metrics`` rows share one file), renamed into place after the
+stage's own table: bookkeeping runs no Spark job.  The checkpoint ledger is
+read once per run with pyarrow; row counts ride the stage writes as
+Observations.  Every frame a run persists is released before it returns,
+so no cache keyed on a warehouse path outlives the run that wrote the path.
 """
 
 from __future__ import annotations
@@ -108,12 +111,24 @@ class KgPipeline:
         self.metrics: dict[str, float] = {}
         self._done: dict[tuple[str, int], int] | None = None
 
+    # The ledger tables (driver-written rows, see ``catalog.append``).
+    CKPT_TABLE = "_checkpoints"
+    CKPT_SCHEMA = (
+        "run_id string, stage string, part long, status string, rows long, wall_s double"
+    )
+    METRICS_TABLE = "_metrics"
+    METRICS_SCHEMA = "run_id string, metric string, value double"
+
     # Every table this pipeline writes through the catalog — the scope of
     # its staging sweep on resume.  A run killed mid-stage leaves
-    # ``_staging/<table>.tmp-*`` dirs for whichever _stage was in flight;
-    # tables of CONCURRENT writers sharing the warehouse (the streaming
-    # merge sink) are deliberately NOT in this list.
+    # ``_staging/<table>.tmp-*`` dirs for whichever _stage was in flight,
+    # and a kill inside a ledger append leaves its file in
+    # ``_staging/<ledger table>/``; tables of CONCURRENT writers sharing
+    # the warehouse (the streaming merge sink) are deliberately NOT in
+    # this list.
     OWNED_TABLES = (
+        CKPT_TABLE,
+        METRICS_TABLE,
         "turns",
         "mentions",
         "triples_raw",
@@ -125,31 +140,27 @@ class KgPipeline:
     )
 
     # -- checkpoint bookkeeping ------------------------------------------
-    CKPT_TABLE = "_checkpoints"
-    CKPT_SCHEMA = (
-        "run_id string, stage string, part long, status string, rows long, wall_s double"
-    )
-
     def _finished(self) -> dict[tuple[str, int], int]:
         """(stage, part) → rows for every stage this run_id has finished:
-        one read of the checkpoint table, kept current by ``_mark``."""
+        one driver-side read of the checkpoint ledger, kept current by
+        ``_mark``."""
         if self._done is None:
-            self._done = {}
-            if self.catalog.exists(self.CKPT_TABLE):
-                rows = (
-                    self.catalog.read(self.CKPT_TABLE)
-                    .where((F.col("run_id") == self.run_id) & (F.col("status") == "done"))
-                    .select("stage", "part", "rows")
-                    .collect()
-                )
-                self._done = {(r["stage"], r["part"]): r["rows"] for r in rows}
+            rows = self.catalog.read_rows(
+                self.CKPT_TABLE, ["run_id", "stage", "part", "status", "rows"]
+            )
+            self._done = {
+                (r["stage"], r["part"]): r["rows"]
+                for r in rows
+                if r["run_id"] == self.run_id and r["status"] == "done"
+            }
         return self._done
 
     def _mark(self, stage: str, rows: int, wall_s: float, part: int = -1) -> None:
-        row = self.spark.createDataFrame(
-            [(self.run_id, stage, part, "done", rows, float(wall_s))], self.CKPT_SCHEMA
+        self.catalog.append(
+            self.CKPT_TABLE,
+            [(self.run_id, stage, part, "done", rows, float(wall_s))],
+            self.CKPT_SCHEMA,
         )
-        self.catalog.append(self.CKPT_TABLE, row)
         self._finished()[(stage, part)] = rows
         suffix = f"_p{part}" if part >= 0 else ""
         self.metrics[f"{stage}{suffix}_rows"] = rows
@@ -168,7 +179,7 @@ class KgPipeline:
         # are never referenced by a 'done' checkpoint row, so sweep first
         # scoped to this pipeline's own tables: a concurrent writer
         # sharing the warehouse (streaming merge sink) keeps its tmp dirs
-        self.catalog.sweep_staging(tables=[*self.OWNED_TABLES, self.CKPT_TABLE])
+        self.catalog.sweep_staging(tables=list(self.OWNED_TABLES))
         norm = assemble.normalize_turns(transcripts)
         todo = range(nb) if max_buckets is None else range(min(nb, max_buckets))
         for b in todo:
@@ -213,7 +224,7 @@ class KgPipeline:
         # Sweep THIS pipeline's staging leftovers before any stage runs —
         # covers the non-bucketed path too (ingest_partitioned repeats the
         # sweep for direct callers; it is idempotent and cheap).
-        self.catalog.sweep_staging(tables=[*self.OWNED_TABLES, self.CKPT_TABLE])
+        self.catalog.sweep_staging(tables=list(self.OWNED_TABLES))
         cached: list[DataFrame] = []
 
         def keep(df: DataFrame) -> DataFrame:
@@ -314,7 +325,4 @@ class KgPipeline:
     def _write_metrics(self) -> None:
         mrows = [(self.run_id, k, float(v)) for k, v in self.metrics.items()]
         if mrows:
-            self.catalog.append(
-                "_metrics",
-                self.spark.createDataFrame(mrows, "run_id string, metric string, value double"),
-            )
+            self.catalog.append(self.METRICS_TABLE, mrows, self.METRICS_SCHEMA)
