@@ -17,14 +17,50 @@ pipeline:
 5. canonical_id = min name_key in each component (content-derived →
    deterministic under retries and across runs).
 
-Scale notes: every step is a DataFrame op (shuffles on band-key and node
-id); hot bands (stop-word-like shingles) are capped via a block-size limit —
-the classic LSH skew guard; components converge in O(log n) iterations.
+Two tiers run steps 2-5 with one result (``canonical_map`` picks):
+
+- **Driver tier**, up to DRIVER_CANON_MAX_NAMES distinct names.  One Spark
+  job computes each name's shingles, identifier tokens, band keys and
+  token keys with the distributed tier's own expressions, and Arrow
+  carries them to the driver (``name_features``).  numpy then runs the
+  blocking, the MAX_BLOCK guard, the identifier rejection and the
+  verification (``candidate_pairs`` on the features), and the union-find
+  the CC fast path uses.  The map goes back as a local relation.  At a
+  vocabulary of a few thousand names the distributed tier's cost is ~27
+  jobs of per-job latency, not work; this tier runs the stage in 3.
+- **Distributed tier**, above the bound: every step is a DataFrame op
+  (shuffles on band-key and node id); hot bands (stop-word-like shingles)
+  are capped via a block-size limit — the classic LSH skew guard;
+  components converge in O(log n) iterations.
+
+The bound was sized by measuring both tiers on the whole stage (map +
+parquet write, local[4] on a 4-core host) over synthetic name sets — 40%
+host-style and 10% CVE-style identifiers, 50% syllable words, a quarter
+of those with a family suffix, so rich in candidate pairs:
+
+    distinct names   driver tier   distributed tier
+             2,000     1.3 s          6.2 s
+            20,000     2.2-2.8 s     10.8-11.1 s
+            98,580     6.7-9.3 s     29.8-31.7 s
+           256,174    24-29 s       114-133 s
+
+The tiers did not cross.  What bounds the driver tier is driver memory:
+its Python process peaked at 1.25 GB at 256k names (the candidate-pair
+arrays grow with the name count), so the bound is the largest size
+measured.  A name set above it pays one wasted collect of bound + 1 rows
+before it falls through to the distributed tier.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Iterable, Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stixtoneodb_spark.functions.textfns import (
@@ -50,6 +86,81 @@ MAX_BLOCK = 32  # LSH skew guard: cap degenerate mega-blocks
 # this is the CC analog of AQE's runtime broadcast conversion.
 DRIVER_CC_MAX_EDGES = 200_000
 
+# Driver-tier bound for canonical_map: name sets of at most this many
+# distinct names are canonicalized on the driver (see the module
+# docstring for where the two tiers cross).
+DRIVER_CANON_MAX_NAMES = 250_000
+
+AQE_KEY = "spark.sql.adaptive.enabled"
+PF_KEY = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+SP_KEY = "spark.sql.shuffle.partitions"
+PAIR_SCHEMA = pa.schema([("name_a", pa.string()), ("name_b", pa.string())])
+
+
+@contextmanager
+def _restoring_conf(spark: SparkSession, *keys: str) -> Iterator[None]:
+    """Restore the session conf ``keys`` to their values at entry when the
+    block exits, however it exits (an unset key is unset again)."""
+    prev = [(k, spark.conf.get(k, None)) for k in keys]
+    try:
+        yield
+    finally:
+        for k, v in prev:
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
+def _without_aqe(spark: SparkSession) -> Iterator[None]:
+    """AQE off for a driver collect of small data: AQE's per-stage
+    re-optimization is pure driver latency there, and it runs every
+    shuffle stage as a job of its own."""
+    with _restoring_conf(spark, AQE_KEY):
+        spark.conf.set(AQE_KEY, "false")
+        yield
+
+
+def _is_identifier(t: Column) -> Column:
+    """Identifier tokens (hostnames, CVEs, hashes): >=2 digits or >=6 hex
+    chars.  Digit count via translate-delete: regexp_replace measured
+    serialized-flat across cores on this host (see textfns)."""
+    return (F.length(t) - F.length(F.translate(t, "0123456789", "")) >= 2) | t.rlike(
+        "^[0-9a-f]{6,}$"
+    )
+
+
+# The MinHash and band-key expressions are SQL text: both tiers build them
+# per call, and building the same expressions through the Column API costs
+# ~1 ms of py4j per node — about 0.7 s per call for the hash family.
+def _minhash(s: str, h: int) -> str:
+    """Hash ``h`` of the MinHash family over shingle ``s``."""
+    return f"xxhash64({s}, {42 + h})"
+
+
+def _band_keys(mins: list[str]) -> Column:
+    """The NUM_BANDS LSH band keys of a name from its NUM_HASHES minima."""
+    rpb = NUM_HASHES // NUM_BANDS
+    bands = [
+        f"xxhash64({b}, {', '.join(mins[b * rpb : (b + 1) * rpb])})" for b in range(NUM_BANDS)
+    ]
+    return F.expr(f"array({', '.join(bands)})")
+
+
+def _token_keys(name: Column) -> Column:
+    """One blocking key per space token of ``name`` (repeats included)."""
+    return F.transform(F.split(name, " "), lambda t: F.xxhash64(F.lit("tok"), t))
+
+
+def _idf(n: Column, df: Column) -> Column:
+    """Shingle weight ln(1 + N/df).  Both tiers evaluate it in Spark: the
+    JVM's ``log`` and Python's ``math.log`` disagree in the last bit on
+    8% of the (N, df) pairs with N <= 4,000, and the weighted Jaccard must
+    be bit-identical across tiers."""
+    return F.log(F.lit(1.0) + n / df)
+
+
 def normalize_mentions(mentions: DataFrame) -> DataFrame:
     """Attach normalized name + content key to each mention."""
     return mentions.withColumn("name", canonical_name(F.col("surface"))).where(
@@ -57,14 +168,68 @@ def normalize_mentions(mentions: DataFrame) -> DataFrame:
     )
 
 
+@dataclass(frozen=True)
+class NameFeatures:
+    """A name set within the driver bound, collected by ``name_features``:
+    one row per distinct name with its char-3 shingles ``sh``, its space
+    tokens ``toks``, its identifier tokens ``ids``, its NUM_BANDS LSH band
+    keys ``lsh`` (null for identifier-bearing names) and one blocking key
+    per token ``tok_keys`` — every one from the distributed tier's own
+    expressions."""
+
+    spark: SparkSession
+    table: pa.Table
+
+
+def name_features(names: DataFrame) -> NameFeatures | None:
+    """The driver tier's per-name features of ``names`` (distinct names,
+    column ``name``), or None when there are more than
+    DRIVER_CANON_MAX_NAMES of them.
+
+    One select computes everything the blocking and the verification need
+    from the name alone.  The band keys are the distributed tier's
+    explode + groupBy(name) min in per-row form: the min of each hash over
+    the name's shingle array is the same value, without the shuffle.  The
+    hashes stay in Spark (Python has no xxhash).  The collect is ONE job:
+    AQE is off for it, as for the CC fast path, so the distinct's shuffle
+    and the limit run as stages of one job.
+    """
+    if DRIVER_CANON_MAX_NAMES <= 0:
+        return None
+    spark = names.sparkSession
+    is_plain = ~F.exists("toks", _is_identifier)
+    mins = [f"array_min(transform(sh, s -> {_minhash('s', h)}))" for h in range(NUM_HASHES)]
+    feats = names.select(
+        "name", shingles(F.col("name"), 3).alias("sh"), F.split("name", " ").alias("toks")
+    ).select(
+        "name",
+        "sh",
+        "toks",
+        F.filter("toks", _is_identifier).alias("ids"),
+        F.when(is_plain, _band_keys(mins)).alias("lsh"),
+        _token_keys(F.col("name")).alias("tok_keys"),
+    )
+    with _without_aqe(spark):
+        table = feats.limit(DRIVER_CANON_MAX_NAMES + 1).toArrow()
+    if table.num_rows > DRIVER_CANON_MAX_NAMES:
+        return None
+    return NameFeatures(spark, table)
+
+
 def candidate_pairs(
-    names: DataFrame, threshold: float = 0.30, *, cached: list[DataFrame] | None = None
+    names: DataFrame | NameFeatures,
+    threshold: float = 0.30,
+    *,
+    cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Verified similar pairs (name_a, name_b) from LSH blocks.
 
-    ``names``: one row per distinct normalized name, column ``name``.
-    ``cached``: the intermediate frames this call persists are appended
-    here, for the caller to release once the pairs are consumed.
+    ``names``: one row per distinct normalized name, column ``name`` — the
+    distributed tier — or the features ``name_features`` collected for a
+    name set within the driver bound — the driver tier, whose pairs come
+    back as a local relation.  ``cached``: the intermediate frames the
+    distributed tier persists are appended here, for the caller to
+    release once the pairs are consumed.
 
     Verification is **idf-weighted shingle Jaccard**: a shingle's weight is
     ln(1 + N/df), so rare shingles ("z9a" of a malware name) dominate and
@@ -75,6 +240,8 @@ def candidate_pairs(
     weighted form can.  Token containment (=1.0) additionally catches
     short-in-long variants ("zeus" ⊂ "zeus trojan").
     """
+    if isinstance(names, NameFeatures):
+        return names.spark.createDataFrame(_driver_pairs(names, threshold))
     # ``names`` arrives already distinct (canonical_map dedups the surface
     # universe); re-distincting here was a full extra shuffle of the name
     # strings.  Duplicate inputs would still be CORRECT (cand
@@ -109,7 +276,7 @@ def candidate_pairs(
         sh_tbl.groupBy("s")
         .agg(F.count("*").alias("df"))
         .crossJoin(F.broadcast(total))
-        .select("s", F.log(F.lit(1.0) + F.col("_n") / F.col("df")).alias("idf"))
+        .select("s", _idf(F.col("_n"), F.col("df")).alias("idf"))
     )
 
     def weighted_features(name_subset: DataFrame) -> DataFrame:
@@ -168,11 +335,7 @@ def candidate_pairs(
     # pair dedup — at corpus scale those wide rows were the dominant
     # pipeline cost (the arrays rejoin below, but only for the few
     # candidates that survive blocking + identifier rejection).
-    has_identifier = F.exists(
-        F.split("name", " "),
-        lambda t: (F.length(t) - F.length(F.translate(t, "0123456789", "")) >= 2)
-        | t.rlike("^[0-9a-f]{6,}$"),
-    )
+    has_identifier = F.exists(F.split("name", " "), _is_identifier)
     # Band ids are 64-BIT HASHES, not "b:sha2(...)" strings: blocking keys
     # never surface in results, xxhash64 is ~an order cheaper than sha2 in
     # codegen (the sha2 banding profiled as the bulk of cand_keys at a 7M
@@ -181,34 +344,16 @@ def candidate_pairs(
     # blocks — extra candidates for the exact verifier — or, via the
     # MAX_BLOCK guard, drop a merged block: probability ~k²/2⁶⁵ (≈1e-5 at
     # 10⁸ distinct keys), documented rather than handled.
-    rpb = NUM_HASHES // NUM_BANDS
-    sig_aggs = [
-        F.min(F.xxhash64(F.col("_s"), F.lit(42 + h))).alias(f"_h{h}")
-        for h in range(NUM_HASHES)
-    ]
+    sig_aggs = [F.expr(f"min({_minhash('_s', h)})").alias(f"_h{h}") for h in range(NUM_HASHES)]
     sigs = (
         base.where(~has_identifier)
         .select("name", F.explode("sh").alias("_s"))
         .groupBy("name")
         .agg(*sig_aggs)
     )
-    bands64 = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.col(f"_h{b * rpb + j}") for j in range(rpb)]
-            )
-            for b in range(NUM_BANDS)
-        ]
-    )
+    bands64 = _band_keys([f"_h{h}" for h in range(NUM_HASHES)])
     lsh_keys = sigs.select(F.explode(bands64).alias("band"), "name")
-    token_keys = base.select(
-        F.explode(
-            F.transform(
-                F.split("name", " "), lambda t: F.xxhash64(F.lit("tok"), t)
-            )
-        ).alias("band"),
-        "name",
-    )
+    token_keys = base.select(F.explode(_token_keys(F.col("name"))).alias("band"), "name")
     # persisted: both the band-size agg and the block-extraction pass read
     # this frame — without the persist the minhash/token key chain runs
     # twice
@@ -254,17 +399,8 @@ def candidate_pairs(
     # pair dies here — before the weighted-verify joins, because
     # identifier families (hostnames, CVEs) produce the bulk of LSH
     # candidates.
-    def id_tokens(tok_col: Column) -> Column:
-        return F.filter(
-            tok_col,
-            # digit count via translate-delete: regexp_replace measured
-            # serialized-flat across cores on this host (see textfns)
-            lambda t: (F.length(t) - F.length(F.translate(t, "0123456789", "")) >= 2)
-            | t.rlike("^[0-9a-f]{6,}$"),
-        )
-
-    ids_a = id_tokens(F.split("name_a", " "))
-    ids_b = id_tokens(F.split("name_b", " "))
+    ids_a = F.filter(F.split("name_a", " "), _is_identifier)
+    ids_b = F.filter(F.split("name_b", " "), _is_identifier)
     id_conflict = (
         (F.size(ids_a) > 0)
         & (F.size(ids_b) > 0)
@@ -331,6 +467,148 @@ def candidate_pairs(
     )
 
 
+def _ragged(starts: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(slice, index) of every element of the slices
+    ``[starts[i], starts[i] + lens[i])``, slice by slice, in order."""
+    owner = np.repeat(np.arange(len(lens)), lens)
+    idx = np.repeat(starts - np.cumsum(lens) + lens, lens) + np.arange(lens.sum())
+    return owner, idx
+
+
+def _list_elems(col: pa.ChunkedArray) -> tuple[pa.Array, np.ndarray]:
+    """(values, row of each value) of a list column, in row order; null
+    lists have no elements."""
+    arr = col.combine_chunks()
+    return pc.list_flatten(arr), pc.list_parent_indices(arr).to_numpy()
+
+
+def _sorted_codes(values: pa.Array) -> np.ndarray:
+    """Dense integer codes of string ``values``, numbered in Spark's
+    (byte-wise) string order."""
+    uniq = pc.unique(values)
+    return pc.index_in(values, value_set=uniq.take(pc.sort_indices(uniq))).to_numpy()
+
+
+def _held(a: np.ndarray, b: np.ndarray, rows: np.ndarray, codes: np.ndarray, n: int):
+    """For every element of the list of row ``a[p]`` (the list column as
+    parallel ``rows``/``codes`` arrays, grouped by row), whether the list
+    of row ``b[p]`` holds the same code.  Returns (p, element index, hit)."""
+    lens = np.bincount(rows, minlength=n)
+    p, idx = _ragged((np.cumsum(lens) - lens)[a], lens[a])
+    width = int(codes.max()) + 1 if len(codes) else 1
+    on_b = np.zeros(n, bool)
+    on_b[b] = True
+    held = np.sort(rows[on_b[rows]] * width + codes[on_b[rows]])
+    probe = b[p] * width + codes[idx]
+    at = np.minimum(np.searchsorted(held, probe), max(len(held) - 1, 0))
+    hit = held[at] == probe if len(held) else np.zeros(len(probe), bool)
+    return p, idx, hit
+
+
+def _seq_sum(values: np.ndarray, p: np.ndarray, n_rows: int) -> np.ndarray:
+    """Per-row sums of ``values`` (grouped by row ``p``, in order), added
+    left to right from 0.0 — the summation order of Spark's
+    ``aggregate(arr, 0.0, (acc, v) -> acc + v)``, so the sums are
+    bit-identical (numpy's own sum is pairwise).  One vectorized add per
+    list position: the j-th element of every row at once."""
+    lens = np.bincount(p, minlength=n_rows)
+    pos = np.arange(len(p)) - np.repeat(np.cumsum(lens) - lens, lens)
+    order = np.argsort(pos, kind="stable")
+    bounds = np.searchsorted(pos[order], np.arange(int(lens.max(initial=0)) + 1), "right")
+    acc = np.zeros(n_rows)
+    for lo, hi in zip(np.r_[0, bounds[:-1]], bounds):
+        at = order[lo:hi]
+        acc[p[at]] += values[at]
+    return acc
+
+
+def _driver_pairs(f: NameFeatures, threshold: float) -> pa.Table:
+    """The distributed tier of ``candidate_pairs``, on the driver over the
+    collected features, in numpy: the same blocks, the same MAX_BLOCK
+    guard, the same identifier rejection and the same verification, with
+    every float added in the same order, so the pair set is identical."""
+    t = f.table
+    names = t["name"].combine_chunks()
+    n = len(names)
+    sh, sh_row = _list_elems(t["sh"])
+    sh_len = np.bincount(sh_row, minlength=n)
+    in_base = sh_len > 0  # the distributed tier's ``base``: >= 1 shingle
+
+    # Blocking: (key, name) rows of both key tiers; a block's size counts
+    # rows, so a name repeating a token counts twice.  Blocks outside
+    # 2 <= size <= MAX_BLOCK are dropped whole.
+    lsh, lsh_row = _list_elems(t["lsh"])
+    tok_keys, tok_key_row = _list_elems(t["tok_keys"])
+    keys = np.concatenate([lsh.to_numpy(), tok_keys.to_numpy()])
+    rows = np.concatenate([lsh_row, tok_key_row])
+    keep = in_base[rows]
+    keys, rows = keys[keep], rows[keep]
+    order = np.argsort(keys, kind="stable")
+    keys, rows = keys[order], rows[order]
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    sizes = np.diff(np.r_[starts, len(keys)])
+    useful = (sizes >= 2) & (sizes <= MAX_BLOCK)
+    starts, sizes = starts[useful], sizes[useful]
+    # the a < b triangle of every block, deduplicated
+    blk, left = _ragged(starts, sizes)
+    i, right = _ragged(starts[blk], sizes[blk])
+    a, b = rows[left[i]], rows[right]
+    rank = np.empty(n, np.int64)
+    rank[pc.sort_indices(names).to_numpy()] = np.arange(n)
+    lt = rank[a] < rank[b]
+    if not lt.any():
+        return PAIR_SCHEMA.empty_table()
+    pair = np.unique(a[lt].astype(np.int64) * n + b[lt])
+    a, b = pair // n, pair % n
+
+    # identifier rejection: both sides carry identifiers and share none
+    ids, id_row = _list_elems(t["ids"])
+    has_id = np.bincount(id_row, minlength=n) > 0
+    p, _, hit = _held(a, b, id_row, _sorted_codes(ids), n)
+    shares_id = np.bincount(p[hit], minlength=len(a)) > 0
+    keep = ~(has_id[a] & has_id[b]) | shares_id
+    a, b = a[keep], b[keep]
+
+    # idf-weighted Jaccard over each name's shingles sorted by string and
+    # summed in that order (the distributed tier's array_sort + aggregate);
+    # the idf of each distinct df comes from Spark's own ``log``,
+    # evaluated over a local relation (no job)
+    sh_code = _sorted_codes(sh)
+    order = np.lexsort((sh_code, sh_row))
+    sh_row, sh_code = sh_row[order], sh_code[order]
+    df = np.bincount(sh_code)
+    df_vals = np.unique(df)
+    n_base = F.lit(int(in_base.sum())).cast("long")
+    idf_rows = (
+        f.spark.createDataFrame(pa.table({"df": df_vals}))
+        .select("df", _idf(n_base, F.col("df")).alias("idf"))
+        .collect()
+    )
+    idf = dict(idf_rows)
+    weight = np.array([idf[d] for d in df_vals.tolist()])[np.searchsorted(df_vals, df)][sh_code]
+    cand = np.unique(np.r_[a, b])
+    c_p, c_idx = _ragged((np.cumsum(sh_len) - sh_len)[cand], sh_len[cand])
+    w_total = _seq_sum(weight[c_idx], c_p, len(cand))
+    w_a, w_b = w_total[np.searchsorted(cand, a)], w_total[np.searchsorted(cand, b)]
+    p, idx, hit = _held(a, b, sh_row, sh_code, n)
+    w_inter = _seq_sum(np.where(hit, weight[idx], 0.0), p, len(a))
+    wj = w_inter / (w_a + w_b - w_inter)
+
+    # token containment: distinct shared tokens over the shorter name's
+    # token count (repeats included)
+    toks, tok_row = _list_elems(t["toks"])
+    tok_code = _sorted_codes(toks)
+    width = len(toks) + 1
+    distinct = np.unique(tok_row.astype(np.int64) * width + tok_code)
+    p, _, hit = _held(a, b, distinct // width, distinct % width, n)
+    shared = np.bincount(p[hit], minlength=len(a)).astype(np.float64)
+    n_tok = np.bincount(tok_row, minlength=n)
+    containment = shared / np.minimum(n_tok[a], n_tok[b]).astype(np.float64)
+
+    keep = (wj >= threshold) | (containment >= 1.0)
+    return pa.table([names.take(a[keep]), names.take(b[keep])], schema=PAIR_SCHEMA)
+
+
 def connected_components(
     edges: DataFrame, max_iter: int = 20, driver_max_edges: int | None = None
 ) -> DataFrame:
@@ -351,70 +629,88 @@ def connected_components(
     force the distributed loop (tests pin its behavior that way).
     """
     spark = edges.sparkSession
-    # The similarity graph is orders of magnitude smaller than the corpus
-    # (one edge per verified name pair), so the loop's shuffles are tiny —
-    # let AQE coalesce them by size (usually to one task) instead of
-    # holding defaultParallelism partitions: each extra partition is an
-    # extra task launch per stage, and the loop's cost is pure per-stage
-    # latency.  Scoped to the loop; restored after.
-    pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    pf_prev = spark.conf.get(pf_key, "true")
-    spark.conf.set(pf_key, "false")
-    sp_key = "spark.sql.shuffle.partitions"
-    sp_prev = spark.conf.get(sp_key)
-    e_raw = edges.select(F.col("name_a").alias("u"), F.col("name_b").alias("v")).where(
-        F.col("u") != F.col("v")
-    )
     cap = DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    if cap > 0:
-        # Driver fast path, ONE job: collect up to cap+1 raw pairs via a
-        # limit — no distinct shuffle, no localCheckpoint job, no count
-        # job (the round-3 shape cost three jobs + a shuffle to learn the
-        # graph is tiny; ~2s of the pipeline's non-scaling floor).  The
-        # upstream pair frame is already near-duplicate-free
-        # (candidate_pairs dedups, alias edges are distinct), so the raw
-        # cardinality is an honest proxy for the distinct one; a graph
-        # that overflows the cap only falls through to the distributed
-        # loop — a performance choice, never a correctness one.  The
-        # union-find dedups whatever duplicates remain for free.
-        #
-        # AQE is disabled for THIS collect only: the candidate chain is a
-        # ~15-stage plan over vocabulary-scale (small) data, and AQE's
-        # per-stage re-optimization is pure DRIVER latency — measured
-        # ~4.9s vs ~2.9s AQE-off for the identical hot-cache job at any
-        # core count (it is serial, so it lands straight in the
-        # pipeline's non-scaling floor).  The chain's shuffles are fine
-        # at the static shuffle-partition count (they are tiny and
-        # skew-guarded by MAX_BLOCK); production-scale joins elsewhere in
-        # the pipeline keep AQE.
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_prev = spark.conf.get(aqe_key, "true")
-        spark.conf.set(aqe_key, "false")
-        try:
-            sample = e_raw.limit(cap + 1).collect()
-        finally:
-            spark.conf.set(aqe_key, aqe_prev)
-        if len(sample) <= cap:
-            # path-halving union-find with min-root union — exactly the
-            # loop's fixpoint (component = min member), zero shuffles.
-            parent: dict[str, str] = {}
+    # Every conf this call changes is restored however it exits — a
+    # raising collect or checkpoint included.
+    with _restoring_conf(spark, PF_KEY, SP_KEY):
+        # The similarity graph is orders of magnitude smaller than the
+        # corpus (one edge per verified name pair), so the loop's shuffles
+        # are tiny — let AQE coalesce them by size (usually to one task)
+        # instead of holding defaultParallelism partitions: each extra
+        # partition is an extra task launch per stage, and the loop's cost
+        # is pure per-stage latency.
+        spark.conf.set(PF_KEY, "false")
+        e_raw = edges.select(F.col("name_a").alias("u"), F.col("name_b").alias("v")).where(
+            F.col("u") != F.col("v")
+        )
+        if cap > 0:
+            # Driver fast path, ONE job: collect up to cap+1 raw pairs via
+            # a limit — no distinct shuffle, no localCheckpoint job, no
+            # count job (the round-3 shape cost three jobs + a shuffle to
+            # learn the graph is tiny; ~2s of the pipeline's non-scaling
+            # floor).  The upstream pair frame is already
+            # near-duplicate-free (candidate_pairs dedups, alias edges are
+            # distinct), so the raw cardinality is an honest proxy for the
+            # distinct one; a graph that overflows the cap only falls
+            # through to the distributed loop — a performance choice,
+            # never a correctness one.  The union-find dedups whatever
+            # duplicates remain for free.
+            #
+            # AQE is disabled for THIS collect only: the candidate chain
+            # is a ~15-stage plan over vocabulary-scale (small) data, and
+            # AQE's per-stage re-optimization is pure DRIVER latency —
+            # measured ~4.9s vs ~2.9s AQE-off for the identical hot-cache
+            # job at any core count (it is serial, so it lands straight in
+            # the pipeline's non-scaling floor).  The chain's shuffles are
+            # fine at the static shuffle-partition count (they are tiny and
+            # skew-guarded by MAX_BLOCK); production-scale joins elsewhere
+            # in the pipeline keep AQE.
+            with _without_aqe(spark):
+                sample = e_raw.limit(cap + 1).collect()
+            if len(sample) <= cap:
+                comp = _union_find((row["u"], row["v"]) for row in sample)
+                return spark.createDataFrame(
+                    list(comp.items()), "name string, component string"
+                )
+        e = _star_loop(spark, e_raw, max_iter)
 
-            def find(x: str) -> str:
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
+    # At convergence e is (node → component-min) star edges.  Component
+    # roots appear only on the v side, so add their self-mapping, then take
+    # the min per node (handles the degenerate not-fully-converged case).
+    children = e.select(F.col("u").alias("name"), F.col("v").alias("component"))
+    roots = e.select(F.col("v").alias("name"), F.col("v").alias("component")).distinct()
+    return (
+        children.unionByName(roots)
+        .groupBy("name")
+        .agg(F.min("component").alias("component"))
+        .select("name", F.least("name", "component").alias("component"))
+    )
 
-            for row in sample:
-                ra, rb = find(row["u"]), find(row["v"])
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            out_rows = [(x, find(x)) for x in parent]
-            spark.conf.set(pf_key, pf_prev)
-            spark.conf.set(sp_key, sp_prev)
-            return spark.createDataFrame(out_rows, "name string, component string")
+
+def _union_find(edges: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Component (min member) of every endpoint of ``edges``: path-halving
+    union-find with min-root union — exactly the star loop's fixpoint,
+    zero shuffles."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ra, rb = find(u), find(v)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
+
+
+def _star_loop(spark: SparkSession, e_raw: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed large-star / small-star loop over (u, v) edges; the
+    caller restores the session confs it changes."""
     e = e_raw.distinct().localCheckpoint(eager=True)
     # Stage-latency guard: the similarity graph is usually orders of
     # magnitude smaller than the corpus (one edge per verified name pair).
@@ -426,7 +722,7 @@ def connected_components(
     n_edges = e.count()
     if n_edges < 200_000:
         e = e.coalesce(1).localCheckpoint(eager=True)
-        spark.conf.set(sp_key, "1")
+        spark.conf.set(SP_KEY, "1")
 
     def signature(df: DataFrame) -> tuple[int, int]:
         row = df.agg(
@@ -469,29 +765,14 @@ def connected_components(
     # (checkpoint + convergence signature) is the loop's fixed cost and
     # does not shrink with cores, so halving the barrier count halves the
     # serial fraction; lineage depth stays bounded at two rounds.
-    try:
-        prev = signature(e)
-        for _ in range(max_iter // 2):
-            e = alternate(alternate(e)).localCheckpoint(eager=True)
-            cur = signature(e)
-            if cur == prev:
-                break
-            prev = cur
-    finally:
-        spark.conf.set(pf_key, pf_prev)
-        spark.conf.set(sp_key, sp_prev)
-
-    # At convergence e is (node → component-min) star edges.  Component
-    # roots appear only on the v side, so add their self-mapping, then take
-    # the min per node (handles the degenerate not-fully-converged case).
-    children = e.select(F.col("u").alias("name"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("name"), F.col("v").alias("component")).distinct()
-    return (
-        children.unionByName(roots)
-        .groupBy("name")
-        .agg(F.min("component").alias("component"))
-        .select("name", F.least("name", "component").alias("component"))
-    )
+    prev = signature(e)
+    for _ in range(max_iter // 2):
+        e = alternate(alternate(e)).localCheckpoint(eager=True)
+        cur = signature(e)
+        if cur == prev:
+            break
+        prev = cur
+    return e
 
 
 def canonical_map(
@@ -508,13 +789,38 @@ def canonical_map(
     KB does not know.  Names that never match anything form singleton
     components (their own name is the canonical label).
 
-    The connected-components loop runs eagerly inside this call; the
+    Up to DRIVER_CANON_MAX_NAMES distinct names, the driver tier runs
+    inside this call and returns the map as a local relation; above it,
+    the connected-components loop runs eagerly inside this call and the
     returned frame is the exception set (``canonical_exceptions``) plus
-    the identity default over the name universe.
+    the identity default over the name universe.  Both give the same rows.
     """
     names = normalize_mentions(mentions).select("name").distinct()
-    exc = canonical_exceptions(names, threshold, alias_edges)
-    return attach_canonical(names, exc).select("name", "canonical_id", "canonical_label")
+    feats = name_features(names)
+    if feats is None:
+        exc = canonical_exceptions(names, threshold, alias_edges)
+        return attach_canonical(names, exc).select("name", "canonical_id", "canonical_label")
+    # Driver tier: the pairs come back as a local relation (collecting it
+    # starts no job); the gazetteer is bounded — the distributed tier
+    # broadcasts its endpoint set — so it is collected whole.
+    universe = feats.table["name"].combine_chunks()
+    edges = [(r["name_a"], r["name_b"]) for r in candidate_pairs(feats, threshold).collect()]
+    if alias_edges is not None:
+        known = set(universe.to_pylist())
+        with _without_aqe(feats.spark):
+            aliases = alias_edges.select("name_a", "name_b").collect()
+        edges += [(a, b) for a, b in aliases if a in known and b in known]
+    exc = {x: c for x, c in _union_find(edges).items() if x != c}
+    at = pc.index_in(universe, value_set=pa.array(list(exc), pa.string()))
+    label = pc.if_else(
+        pc.is_null(at), universe, pa.array(list(exc.values()), pa.string()).take(at)
+    )
+    # one partition: the map is vocabulary-sized, so it is written as one
+    # file (the distributed tier's AQE-coalesced write is one file too)
+    local = feats.spark.createDataFrame(pa.table({"name": universe, "canonical_label": label}))
+    return local.coalesce(1).select(
+        "name", F.sha2(F.col("canonical_label"), 256).alias("canonical_id"), "canonical_label"
+    )
 
 
 def canonical_exceptions(

@@ -24,6 +24,7 @@ parquet file written by pyarrow and renamed into the table dir.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -35,6 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+# The footer key under which Spark's parquet writer stores the row schema.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 class ParquetMergeCatalog:
     """MERGE-INTO-faithful parquet tables under a warehouse dir.
@@ -44,15 +48,16 @@ class ParquetMergeCatalog:
     row has a strictly larger ``version_col`` (latest-version-wins dedup,
     reference A15 semantics: row_number over id ordered by modified desc).
 
-    Every whole-table write records the table's schema, and ``read`` hands
-    it to the reader, so reading back a table this instance wrote runs no
-    schema-inference job.  Any other table infers its schema from its files.
+    ``read`` hands the reader the Spark schema stored in the footer of one
+    of the table's data files, read with pyarrow, so a read runs no
+    schema-inference job — whichever catalog instance wrote the table (a
+    resumed run's stages, the existing side of an append run's MERGE).
+    Only files without that schema (pyarrow's own) infer.
     """
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
-        self._schemas: dict[str, StructType] = {}
         os.makedirs(warehouse, exist_ok=True)
 
     def _path(self, table: str) -> str:
@@ -100,10 +105,26 @@ class ParquetMergeCatalog:
         return os.path.exists(os.path.join(self._path(table), "_SUCCESS"))
 
     def read(self, table: str) -> DataFrame:
+        schema = self._footer_schema(table)
         reader = self.spark.read
-        if table in self._schemas:
-            reader = reader.schema(self._schemas[table])
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(self._path(table))
+
+    def _footer_schema(self, table: str) -> StructType | None:
+        """The Spark schema in the footer of one of the table's data files
+        (Spark writes one, with the schema, even for an empty table), or
+        None when there is no data file or its writer stored none."""
+        path = self._path(table)
+        if not os.path.isdir(path):
+            return None
+        for entry in sorted(os.listdir(path)):
+            f = os.path.join(path, entry)
+            if entry.startswith(("_", ".")) or not os.path.isfile(f):
+                continue
+            stored = (pq.read_schema(f).metadata or {}).get(SPARK_SCHEMA_KEY)
+            return StructType.fromJson(json.loads(stored)) if stored else None
+        return None
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         self._atomic_write(table, df)
@@ -260,7 +281,6 @@ class ParquetMergeCatalog:
         final = self._path(table)
         tmp = self._staging(table + ".tmp-" + uuid.uuid4().hex[:8])
         df.write.mode("overwrite").parquet(tmp)
-        self._schemas[table] = df.schema
         if os.path.exists(final):
             old = tmp + ".old"
             os.rename(final, old)

@@ -13,7 +13,8 @@ and read back, so every stage table doubles as a resume point:
   ONE fused extraction pass (``extract.extract_fused``), persisted once,
   both tables written from it;
 - S3 ``s3_canonical_map`` → ``canonical_map``: LSH blocking + connected
-  components over the distinct mention names;
+  components over the distinct mention names (on the driver, in three
+  jobs, up to ``canonicalize.DRIVER_CANON_MAX_NAMES`` names);
 - S4 ``s4_link`` / ``s4_dropped`` → ``linked_triples`` /
   ``dropped_triples``: ONE ``link.link_triples`` evaluation against the
   name universe and the exception set (``canonical_label != name``) of the

@@ -1,13 +1,69 @@
 """S3 — canonicalization unit tests: CC correctness on a known graph,
-LSH blocking merges known surface variants, determinism."""
+LSH blocking merges known surface variants, determinism, and the driver
+tier's equality with the distributed tier."""
+
+import string
 
 import pyspark.sql.functions as F
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from test_ledger import count_jobs
 
+from stixtoneodb_spark.plans import assemble, extract
+from stixtoneodb_spark.plans import canonicalize as C
 from stixtoneodb_spark.plans.canonicalize import (
     canonical_map,
     candidate_pairs,
     connected_components,
 )
+from stixtoneodb_spark.plans.pipeline import KgPipeline
+from stixtoneodb_spark.sources.transcripts import alias_edges_df, transcripts_df
+
+# DRIVER_CANON_MAX_NAMES per tier: every test name set fits the driver
+# bound, and 0 sends any name set to the distributed tier
+TIERS = {"driver": 10**9, "distributed": 0}
+
+
+def tiered_pairs(names, threshold):
+    """candidate_pairs on the tier canonical_map picks for ``names``."""
+    return C.candidate_pairs(C.name_features(names) or names, threshold)
+
+
+def maps_by_tier(monkeypatch, mentions, alias_edges=None) -> dict[str, set[tuple]]:
+    """canonical_map rows of ``mentions`` on each tier, checking that each
+    tier really ran."""
+    took_driver = []
+    orig = C.candidate_pairs
+
+    def spy(names, *args, **kwargs):
+        took_driver.append(isinstance(names, C.NameFeatures))
+        return orig(names, *args, **kwargs)
+
+    maps = {}
+    with monkeypatch.context() as mp:
+        mp.setattr(C, "candidate_pairs", spy)
+        for tier, bound in TIERS.items():
+            mp.setattr(C, "DRIVER_CANON_MAX_NAMES", bound)
+            rows = C.canonical_map(mentions, alias_edges=alias_edges).collect()
+            maps[tier] = {tuple(r) for r in rows}
+    assert took_driver == [True, False]
+    return maps
+
+
+def assert_tiers_agree(maps: dict[str, set[tuple]]) -> None:
+    def exceptions(rows):
+        return {(name, label) for name, _, label in rows if label != name}
+
+    assert exceptions(maps["driver"]) == exceptions(maps["distributed"])
+    assert maps["driver"] == maps["distributed"]
+
+
+@pytest.fixture(scope="module")
+def mentions50(spark):
+    """Mentions of the pipeline tests' 50-conversation corpus."""
+    turns = assemble.normalize_turns(transcripts_df(spark, 50))
+    return extract.detect_mentions(turns).cache()
 
 
 def test_connected_components_on_known_graph(spark):
@@ -165,7 +221,7 @@ def test_normalize_translate_equals_regex_form(spark):
     assert both.where(F.col("tr") != F.col("re")).count() == 0
 
 
-def test_candidate_pairs_plan_guard_is_broadcast_semi(spark):
+def test_candidate_pairs_plan_guard_is_broadcast_semi(spark, monkeypatch):
     """Plan proof for the narrow-first pair generation (round-5 S3 fix):
     block extraction must execute as a broadcast SEMI-join against the
     tiny useful-band set (2 ≤ bn ≤ MAX_BLOCK — map-side probe; the
@@ -178,7 +234,8 @@ def test_candidate_pairs_plan_guard_is_broadcast_semi(spark):
          ("acme systems",), ("acme system",), ("mitre",), ("unrelated word",)],
         "name string",
     )
-    pairs = candidate_pairs(names, threshold=0.55)
+    monkeypatch.setattr(C, "DRIVER_CANON_MAX_NAMES", 0)  # pins the distributed tier
+    pairs = tiered_pairs(names, threshold=0.55)
     pairs.collect()  # finalize AQE so the executed plan is the real one
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, "useful-band guard lost its semi-join form"
@@ -198,14 +255,92 @@ def test_candidate_pairs_oversized_band_dropped_wholly(spark, monkeypatch):
     single-char member suffixes keep pairwise weighted Jaccard well
     above the 0.55 threshold, so verification passes once blocked.
     With MAX_BLOCK below the family size the band is degenerate →
-    ZERO pairs; above it, the full C(8,2) pair set emerges."""
-    from stixtoneodb_spark.plans import canonicalize as C
-
+    ZERO pairs; above it, the full C(8,2) pair set emerges.  Both tiers."""
     fam = [(f"shared01 member{c}",) for c in "abcdefgh"]
     names = spark.createDataFrame(fam, "name string")
 
-    monkeypatch.setattr(C, "MAX_BLOCK", 4)  # family of 8 > 4: band dropped
-    assert C.candidate_pairs(names, threshold=0.55).count() == 0
+    for tier, bound in TIERS.items():
+        monkeypatch.setattr(C, "DRIVER_CANON_MAX_NAMES", bound)
+        monkeypatch.setattr(C, "MAX_BLOCK", 4)  # family of 8 > 4: band dropped
+        assert tiered_pairs(names, threshold=0.55).count() == 0, tier
 
-    monkeypatch.setattr(C, "MAX_BLOCK", 32)  # band admitted: all pairs verify
-    assert C.candidate_pairs(names, threshold=0.55).count() == 8 * 7 // 2
+        monkeypatch.setattr(C, "MAX_BLOCK", 32)  # band admitted: all pairs verify
+        assert tiered_pairs(names, threshold=0.55).count() == 8 * 7 // 2, tier
+
+
+def test_connected_components_restores_session_conf_when_it_raises(spark):
+    """A failure inside either path leaves the three confs the call scopes
+    as they were."""
+    keys = (C.PF_KEY, C.SP_KEY, C.AQE_KEY)
+    before = {k: spark.conf.get(k, None) for k in keys}
+    boom = F.udf(lambda s: s[1000], "string")  # IndexError on every row
+    edges = spark.createDataFrame([("a", "b")], "name_a string, name_b string").select(
+        boom("name_a").alias("name_a"), "name_b"
+    )
+    for cap in (None, 0):  # driver fast path, then the distributed loop
+        with pytest.raises(Exception):
+            connected_components(edges, driver_max_edges=cap)
+        assert {k: spark.conf.get(k, None) for k in keys} == before, cap
+
+
+def test_tiers_agree_on_pipeline_corpus(spark, monkeypatch, mentions50):
+    assert_tiers_agree(maps_by_tier(monkeypatch, mentions50, alias_edges_df(spark)))
+
+
+def _mentions_of(spark, names):
+    return spark.createDataFrame(
+        [("c", i, n, "tool") for i, n in enumerate(names)],
+        "conv_id string, turn_idx int, surface string, entity_type string",
+    )
+
+
+# Names over a small alphabet: short names (< 3 chars), repeated tokens and
+# identifier tokens (>= 2 digits) all occur, and so do LSH and token blocks.
+# Two fixed families share one token each: a block of exactly MAX_BLOCK
+# members (kept) and one of MAX_BLOCK + 1 (dropped whole).
+_TOKEN = st.text(alphabet="abz019", min_size=1, max_size=5)
+_NAME = st.lists(_TOKEN, min_size=1, max_size=3).map(" ".join)
+_SUFFIXES = [a + b for a in string.ascii_lowercase for b in "mn"]
+_FAMILIES = [f"famkept m{x}" for x in _SUFFIXES[: C.MAX_BLOCK]] + [
+    f"famdrop m{x}" for x in _SUFFIXES[: C.MAX_BLOCK + 1]
+]
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(names=st.lists(_NAME, max_size=60, unique=True))
+def test_tiers_agree_on_generated_names(spark, monkeypatch, names):
+    assert_tiers_agree(maps_by_tier(monkeypatch, _mentions_of(spark, names + _FAMILIES)))
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_tiers_agree_on_benchmark_corpora(spark, monkeypatch, tmp_path, seed):
+    from kgbench.inputs import write_corpus
+
+    corpus = write_corpus(str(tmp_path), 10_000, seed)
+    turns = assemble.normalize_turns(spark.read.parquet(corpus.path))
+    mentions = extract.detect_mentions(turns).cache()
+    try:
+        assert_tiers_agree(maps_by_tier(monkeypatch, mentions, alias_edges_df(spark)))
+    finally:
+        mentions.unpersist()
+
+
+def test_s3_stage_job_budget(spark, mentions50, tmp_path):
+    """The S3 stage as the pipeline runs it — its map written and read
+    back — starts at most five Spark jobs on the driver tier."""
+    aliases = alias_edges_df(spark).cache()
+    pipe = KgPipeline(spark, str(tmp_path / "wh"))
+    pipe.catalog.overwrite("mentions", mentions50)
+    mentions = pipe.catalog.read("mentions")
+    _, jobs = count_jobs(
+        spark,
+        pipe._stage,
+        "s3_canonical_map",
+        "canonical_map",
+        lambda: C.canonical_map(mentions, alias_edges=aliases),
+    )
+    assert jobs <= 5

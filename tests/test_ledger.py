@@ -1,6 +1,6 @@
 """Job-free bookkeeping: the checkpoint/metrics ledger is written and read on
-the driver with pyarrow, and stage read-backs carry the written schema, so
-neither starts a Spark job.  Crash safety: a ledger file a killed append left
+the driver with pyarrow, and stage read-backs carry the schema stored in the
+table's parquet footer, so neither starts a Spark job.  Crash safety: a ledger file a killed append left
 in staging is swept unread, and a ledger Spark wrote (one
 ``createDataFrame(...).write.mode("append")`` per row) still resumes."""
 
@@ -55,11 +55,8 @@ def corpus(spark):
     return transcripts_df(spark, N_CONV).cache(), alias_edges_df(spark).cache()
 
 
-@pytest.fixture(scope="module")
-def built(spark, corpus, tmp_path_factory):
-    """One run whose every ``catalog.read`` records the jobs it started."""
-    tr, aliases = corpus
-    pipe = KgPipeline(spark, str(tmp_path_factory.mktemp("wh_ledger")), run_id=RUN_ID)
+def run_counting_reads(spark, pipe, tr, aliases):
+    """``(pipe.run(...), [(table, jobs)] of every catalog.read in it)``."""
     orig_read = pipe.catalog.read
     reads: list[tuple[str, int]] = []
 
@@ -69,8 +66,18 @@ def built(spark, corpus, tmp_path_factory):
         return df
 
     pipe.catalog.read = counted_read
-    res = pipe.run(tr, alias_edges=aliases)
-    del pipe.catalog.read
+    try:
+        return pipe.run(tr, alias_edges=aliases), reads
+    finally:
+        del pipe.catalog.read
+
+
+@pytest.fixture(scope="module")
+def built(spark, corpus, tmp_path_factory):
+    """One run whose every ``catalog.read`` records the jobs it started."""
+    tr, aliases = corpus
+    pipe = KgPipeline(spark, str(tmp_path_factory.mktemp("wh_ledger")), run_id=RUN_ID)
+    res, reads = run_counting_reads(spark, pipe, tr, aliases)
     return pipe, res, reads
 
 
@@ -118,8 +125,20 @@ def test_read_schema_equals_inferred_schema(spark, built):
     for table in STAGE_TABLES.values():
         inferred = spark.read.parquet(os.path.join(pipe.catalog.warehouse, table)).schema
         assert pipe.catalog.read(table).schema == inferred, table
-        # a table this instance did not write infers its schema
+        # so does a catalog instance that did not write the table
         assert fresh.read(table).schema == inferred, table
+
+
+def test_resumed_read_backs_start_no_spark_job(spark, corpus, built, tmp_path):
+    """A fresh pipeline resuming a finished run skips every stage; reading
+    back the tables the first run's catalog wrote starts no schema job."""
+    tr, aliases = corpus
+    pipe, _, _ = built
+    resumed = KgPipeline(spark, copy_warehouse(pipe, tmp_path), run_id=RUN_ID)
+    res, reads = run_counting_reads(spark, resumed, tr, aliases)
+    assert res.metrics == {}  # nothing re-ran
+    assert sorted(t for t, _ in reads) == sorted(STAGE_TABLES.values())
+    assert all(n == 0 for _, n in reads), reads
 
 
 def test_killed_ledger_append_is_swept_and_never_read(spark, corpus, built, tmp_path, monkeypatch):
