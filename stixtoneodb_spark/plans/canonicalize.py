@@ -609,9 +609,7 @@ def _driver_pairs(f: NameFeatures, threshold: float) -> pa.Table:
     return pa.table([names.take(a[keep]), names.take(b[keep])], schema=PAIR_SCHEMA)
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, driver_max_edges: int | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Alternating large-star / small-star connected components.
 
     ``edges``: (name_a, name_b) string-keyed undirected edges.
@@ -623,13 +621,13 @@ def connected_components(
     (without it the plan doubles every iteration).  Driver-side loop is
     control-flow only — all data movement stays on executors.
 
-    Graphs at or below ``driver_max_edges`` (default
-    ``DRIVER_CC_MAX_EDGES``) short-circuit to a driver-side union-find —
-    identical output, none of the loop's per-stage latency; pass 0 to
-    force the distributed loop (tests pin its behavior that way).
+    Graphs at or below ``DRIVER_CC_MAX_EDGES`` short-circuit to a
+    driver-side union-find — identical output, none of the loop's
+    per-stage latency; set it to 0 to force the distributed loop (tests
+    pin its behavior that way).
     """
     spark = edges.sparkSession
-    cap = DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
+    cap = DRIVER_CC_MAX_EDGES
     # Every conf this call changes is restored however it exits — a
     # raising collect or checkpoint included.
     with _restoring_conf(spark, PF_KEY, SP_KEY):

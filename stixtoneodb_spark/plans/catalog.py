@@ -1,18 +1,20 @@
-"""Keyed-table catalog with MERGE-INTO semantics (parquet fallback).
+"""Keyed-table catalog with insert-if-absent MERGE semantics.
 
-The reference appends into an existing Neo4j store keyed on STIX id: "If the
+The reference adds to an existing Neo4j store keyed on STIX id: "If the
 database already exists, the data will be added to it"
-(/root/reference/README.md:75) — i.e. MERGE/upsert.  The Spark-idiomatic
-target is an Iceberg table with ``MERGE INTO``; this sandbox has no Iceberg
-runtime jar, so the catalog interface here has two backends:
+(/root/reference/README.md:75).  That is the one write rule every caller
+uses: a source row whose key the table already holds is dropped, a new key
+is inserted, and replaying a batch changes nothing.  Two backends
+implement it:
 
-- ``IcebergCatalog`` (used when ``spark.sql.catalog.*`` is configured):
-  straight ``MERGE INTO t USING s ON t.<key> = s.<key> WHEN NOT MATCHED
-  THEN INSERT *`` — storage handles idempotence.
-- ``ParquetMergeCatalog`` (sandbox default): read-merge-overwrite that
-  preserves the same contract: upsert keyed on ``key_col``, latest-wins via
-  a deterministic precedence column.  Writes to a temp dir then swaps, so a
-  failed job never corrupts the table.
+- ``ParquetMergeCatalog`` (the one the pipeline and the stream sink use):
+  read-merge-overwrite, where the existing row wins a key.  Every write
+  goes to a staging dir and is then swapped in, so a failed job never
+  corrupts the table.
+- ``IcebergCatalog``: ``MERGE INTO t USING s ON t.<key> = s.<key> WHEN NOT
+  MATCHED THEN INSERT *``.  ``get_catalog`` would pick it when an Iceberg
+  catalog is configured, but ``get_catalog`` has no caller today, so
+  ``IcebergCatalog`` is reached only by its stub tests.
 
 Both expose the same interface: whole-table writes (``overwrite``,
 ``merge_upsert``), bucket- and partition-scoped writes for the streaming
@@ -24,6 +26,7 @@ parquet file written by pyarrow and renamed into the table dir.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -44,15 +47,14 @@ class ParquetMergeCatalog:
     """MERGE-INTO-faithful parquet tables under a warehouse dir.
 
     Idempotence contract (tested): merging the same batch twice yields a
-    byte-identical table.  Precedence: existing row wins unless the source
-    row has a strictly larger ``version_col`` (latest-version-wins dedup,
-    reference A15 semantics: row_number over id ordered by modified desc).
+    byte-identical table.
 
-    ``read`` hands the reader the Spark schema stored in the footer of one
-    of the table's data files, read with pyarrow, so a read runs no
+    Every read hands the reader the Spark schema stored in the footer of
+    one of the table's data files, read with pyarrow, so a read runs no
     schema-inference job — whichever catalog instance wrote the table (a
-    resumed run's stages, the existing side of an append run's MERGE).
-    Only files without that schema (pyarrow's own) infer.
+    resumed run's stages, the existing side of an append run's MERGE, the
+    buckets a stream merge rewrites).  Only files without that schema
+    (pyarrow's own) infer.
     """
 
     def __init__(self, spark: SparkSession, warehouse: str):
@@ -105,59 +107,33 @@ class ParquetMergeCatalog:
         return os.path.exists(os.path.join(self._path(table), "_SUCCESS"))
 
     def read(self, table: str) -> DataFrame:
-        schema = self._footer_schema(table)
+        return self._read_dir(self._path(table))
+
+    def _read_dir(self, path: str) -> DataFrame:
+        """Read a parquet dir with the schema from a data file's footer;
+        partition columns (``bucket=K`` subdirs) are discovered and
+        appended as usual."""
+        schema = _footer_schema(path)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(self._path(table))
-
-    def _footer_schema(self, table: str) -> StructType | None:
-        """The Spark schema in the footer of one of the table's data files
-        (Spark writes one, with the schema, even for an empty table), or
-        None when there is no data file or its writer stored none."""
-        path = self._path(table)
-        if not os.path.isdir(path):
-            return None
-        for entry in sorted(os.listdir(path)):
-            f = os.path.join(path, entry)
-            if entry.startswith(("_", ".")) or not os.path.isfile(f):
-                continue
-            stored = (pq.read_schema(f).metadata or {}).get(SPARK_SCHEMA_KEY)
-            return StructType.fromJson(json.loads(stored)) if stored else None
-        return None
+        return reader.parquet(path)
 
     def overwrite(self, table: str, df: DataFrame) -> None:
-        self._atomic_write(table, df)
+        self._swap_in(df, self._path(table), self._staging(table))
 
-    def merge_upsert(
-        self, table: str, source: DataFrame, key_col: str, version_col: str | None = None
-    ) -> None:
-        """Upsert ``source`` into ``table`` on ``key_col``.
+    def merge_upsert(self, table: str, source: DataFrame, key_col: str) -> None:
+        """Insert the rows of ``source`` whose ``key_col`` the table does
+        not hold yet.
 
         Equivalent Iceberg SQL:
             MERGE INTO t USING s ON t.key = s.key
-            WHEN MATCHED AND s.version > t.version THEN UPDATE SET *
             WHEN NOT MATCHED THEN INSERT *
         """
         src = source.dropDuplicates([key_col])
-        if not self.exists(table):
-            self._atomic_write(table, src)
-            return
-        existing = self.read(table)
-        tagged = existing.withColumn("_prio", F.lit(0)).unionByName(
-            src.withColumn("_prio", F.lit(1))
-        )
-        if version_col is not None:
-            order = [F.col(version_col).desc(), F.col("_prio").asc()]
-        else:
-            order = [F.col("_prio").asc()]  # existing wins: insert-if-absent
-        w = Window.partitionBy(key_col).orderBy(*order)
-        merged = (
-            tagged.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_prio")
-        )
-        self._atomic_write(table, merged)
+        if self.exists(table):
+            src = _insert_if_absent(self.read(table), src, key_col)
+        self._swap_in(src, self._path(table), self._staging(table))
 
     def append(self, table: str, rows: list[tuple], schema: str) -> None:
         """Append driver rows (``schema`` is a DDL string) to a ledger table
@@ -189,12 +165,7 @@ class ParquetMergeCatalog:
         return pq.read_table(self._path(table), columns=columns).to_pylist()
 
     def merge_upsert_bucketed(
-        self,
-        table: str,
-        source: DataFrame,
-        key_col: str,
-        n_buckets: int = 16,
-        version_col: str | None = None,
+        self, table: str, source: DataFrame, key_col: str, n_buckets: int = 16
     ) -> None:
         """MERGE with BOUNDED I/O: the table lives as ``bucket=K`` hash
         partitions of the key; a merge rewrites only the buckets the
@@ -220,25 +191,9 @@ class ParquetMergeCatalog:
                 part = f"bucket={b}"
                 batch = src.where(F.col("_bucket") == b).drop("_bucket")
                 if self.partition_exists(table, part):
-                    existing = self.spark.read.parquet(
-                        os.path.join(self._path(table), part)
-                    )
-                    tagged = existing.withColumn("_prio", F.lit(0)).unionByName(
-                        batch.withColumn("_prio", F.lit(1))
-                    )
-                    if version_col is not None:
-                        order = [F.col(version_col).desc(), F.col("_prio").asc()]
-                    else:
-                        order = [F.col("_prio").asc()]
-                    w = Window.partitionBy(key_col).orderBy(*order)
-                    merged = (
-                        tagged.withColumn("_rn", F.row_number().over(w))
-                        .where(F.col("_rn") == 1)
-                        .drop("_rn", "_prio")
-                    )
-                else:
-                    merged = batch
-                self.overwrite_partition(table, part, merged)
+                    existing = self._read_dir(os.path.join(self._path(table), part))
+                    batch = _insert_if_absent(existing, batch, key_col)
+                self.overwrite_partition(table, part, batch)
         finally:
             src.unpersist()
 
@@ -256,7 +211,21 @@ class ParquetMergeCatalog:
         two renames — the partition absent, which the checkpoint layer
         treats as not-done and re-runs."""
         final = os.path.join(self._path(table), partition)
-        tmp = self._staging(table, partition + ".tmp-" + uuid.uuid4().hex[:8])
+        self._swap_in(df, final, self._staging(table, partition))
+
+    def partition_exists(self, table: str, partition: str) -> bool:
+        return os.path.exists(os.path.join(self._path(table), partition, "_SUCCESS"))
+
+    def read_partitioned(self, table: str) -> DataFrame:
+        """Read a table written via overwrite_partition: the partition
+        values come back as columns (no table-level _SUCCESS marker)."""
+        return self._read_dir(self._path(table))
+
+    def _swap_in(self, df: DataFrame, final: str, staged: str) -> None:
+        """Write ``df`` to a fresh staging dir ``<staged>.tmp-<hex>``, then
+        swap it in for ``final``: the old copy is renamed away, the new one
+        renamed in, and the old one deleted."""
+        tmp = f"{staged}.tmp-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
         os.makedirs(os.path.dirname(final), exist_ok=True)
         if os.path.exists(final):
@@ -267,27 +236,33 @@ class ParquetMergeCatalog:
         else:
             os.rename(tmp, final)
 
-    def partition_exists(self, table: str, partition: str) -> bool:
-        return os.path.exists(os.path.join(self._path(table), partition, "_SUCCESS"))
 
-    def read_partitioned(self, table: str) -> DataFrame:
-        """Read a table written via overwrite_partition (partition discovery
-        on; no table-level _SUCCESS marker)."""
-        return self.spark.read.option("basePath", self._path(table)).parquet(
-            self._path(table) + "/*"
-        )
+def _insert_if_absent(existing: DataFrame, source: DataFrame, key_col: str) -> DataFrame:
+    """The merged table: every ``existing`` row, plus the ``source`` rows
+    whose key ``existing`` lacks (``source`` is already deduplicated on
+    ``key_col``)."""
+    tagged = existing.withColumn("_prio", F.lit(0)).unionByName(
+        source.withColumn("_prio", F.lit(1))
+    )
+    w = Window.partitionBy(key_col).orderBy(F.col("_prio").asc())
+    return (
+        tagged.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn", "_prio")
+    )
 
-    def _atomic_write(self, table: str, df: DataFrame) -> None:
-        final = self._path(table)
-        tmp = self._staging(table + ".tmp-" + uuid.uuid4().hex[:8])
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(final):
-            old = tmp + ".old"
-            os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, final)
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema in the footer of the first data file in ``path``
+    or, for a partitioned table, one ``bucket=K`` level down (Spark writes
+    one data file, with the schema, even for an empty frame); None when
+    there is no data file or its writer stored none."""
+    for pattern in ("[!_.]*", "[!_.]*/[!_.]*"):
+        for f in sorted(glob.glob(os.path.join(glob.escape(path), pattern))):
+            if os.path.isfile(f):
+                stored = (pq.read_schema(f).metadata or {}).get(SPARK_SCHEMA_KEY)
+                return StructType.fromJson(json.loads(stored)) if stored else None
+    return None
 
 
 class IcebergCatalog:
@@ -336,34 +311,21 @@ class IcebergCatalog:
     def read_bucketed(self, table: str) -> DataFrame:
         return self.read(table)
 
-    def merge_upsert(
-        self, table: str, source: DataFrame, key_col: str, version_col: str | None = None
-    ) -> None:
+    def merge_upsert(self, table: str, source: DataFrame, key_col: str) -> None:
         view = f"_merge_src_{table}"
         source.dropDuplicates([key_col]).createOrReplaceTempView(view)
-        matched = (
-            f"WHEN MATCHED AND s.{version_col} > t.{version_col} THEN UPDATE SET * "
-            if version_col
-            else ""
-        )
         self.spark.sql(
             f"MERGE INTO {self.namespace}.{table} t USING {view} s "
-            f"ON t.{key_col} = s.{key_col} "
-            f"{matched}WHEN NOT MATCHED THEN INSERT *"
+            f"ON t.{key_col} = s.{key_col} WHEN NOT MATCHED THEN INSERT *"
         )
 
     def merge_upsert_bucketed(
-        self,
-        table: str,
-        source: DataFrame,
-        key_col: str,
-        n_buckets: int = 16,
-        version_col: str | None = None,
+        self, table: str, source: DataFrame, key_col: str, n_buckets: int = 16
     ) -> None:
         """Iceberg's MERGE is partition-pruned by the ``bucket(N, key)``
         table spec — the engine itself rewrites only touched buckets, so
         the explicit bucket loop of the parquet backend is unnecessary."""
-        self.merge_upsert(table, source, key_col, version_col=version_col)
+        self.merge_upsert(table, source, key_col)
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         df.writeTo(f"{self.namespace}.{table}").createOrReplace()

@@ -143,10 +143,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # Arrow transfer for every pandas UDF / applyInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic session timezone: timestamps in oracles must agree.
         .config("spark.sql.session.timeZone", "UTC")
         # Keep broadcast autodetect on; dims in this pipeline are small.
@@ -159,10 +156,7 @@ def get_spark(
         # hit the 300s broadcast deadline during a steal window and
         # failed, where waiting would have succeeded.  A batch engine
         # prefers the wait; 1200s still catches true deadlocks.
-        .config(
-            "spark.sql.broadcastTimeout",
-            os.environ.get("SPARK_GRAFT_BROADCAST_TIMEOUT", "1200"),
-        )
+        .config("spark.sql.broadcastTimeout", "1200")
         # Local mode runs executors inside the driver JVM: the heap must
         # hold the persisted stage outputs AND every concurrent task's
         # working set, or GC becomes a shared bottleneck that caps scaling

@@ -33,6 +33,10 @@ from stixtoneodb_spark.plans import assemble, extract
 from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
 from stixtoneodb_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
+# The table the mention merge sink writes, and its number of key-hash buckets.
+MENTION_TABLE = "stream_mentions"
+MENTION_BUCKETS = 16
+
 
 def read_transcript_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
@@ -240,13 +244,7 @@ def _duration_ms(spec: str) -> int:
     return int(qty) * factor
 
 
-def start_mention_merge_sink(
-    stream: DataFrame,
-    warehouse: str,
-    checkpoint_dir: str,
-    table: str = "stream_mentions",
-    n_buckets: int = 16,
-):
+def start_mention_merge_sink(stream: DataFrame, warehouse: str, checkpoint_dir: str):
     """foreachBatch sink: MERGE each micro-batch's mentions into the
     catalog, exactly as batch S5 does (idempotent on the content key, so
     micro-batch replay after failure cannot duplicate rows).
@@ -256,7 +254,7 @@ def start_mention_merge_sink(
     batch is proportional to the batch, not to the accumulated table —
     the full-table read-merge-overwrite form was quadratic total I/O
     over a long stream's life.  Read the table back with
-    ``catalog.read_bucketed(table)``.
+    ``catalog.read_bucketed(MENTION_TABLE)``.
 
     Returns the StreamingQuery; caller awaits termination.  Uses
     ``Trigger.AvailableNow`` so the query drains the available input and
@@ -274,7 +272,9 @@ def start_mention_merge_sink(
                 256,
             ),
         )
-        catalog.merge_upsert_bucketed(table, keyed, key_col="id", n_buckets=n_buckets)
+        catalog.merge_upsert_bucketed(
+            MENTION_TABLE, keyed, key_col="id", n_buckets=MENTION_BUCKETS
+        )
 
     mentions = streaming_mentions(stream)
     return (

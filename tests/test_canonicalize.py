@@ -66,25 +66,23 @@ def mentions50(spark):
     return extract.detect_mentions(turns).cache()
 
 
-def test_connected_components_on_known_graph(spark):
+def test_connected_components_on_known_graph(spark, monkeypatch):
     # components: {a,b,c,d} (chain), {x,y}, singleton z not in edges —
     # asserted on BOTH tiers: the driver union-find fast path (default at
     # this size) and the distributed star loop (forced via
-    # driver_max_edges=0); the two must agree exactly.
+    # DRIVER_CC_MAX_EDGES=0); the two must agree exactly.
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")],
         "name_a string, name_b string",
     )
-    for cap in (None, 0):
-        cc = connected_components(edges) if cap is None else connected_components(
-            edges, driver_max_edges=0
-        )
-        comp = {r.name: r.component for r in cc.collect()}
+    for cap in (C.DRIVER_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", cap)
+        comp = {r.name: r.component for r in connected_components(edges).collect()}
         assert comp["a"] == comp["b"] == comp["c"] == comp["d"] == "a"
         assert comp["x"] == comp["y"] == "x"
 
 
-def test_connected_components_chain_converges_logarithmically(spark):
+def test_connected_components_chain_converges_logarithmically(spark, monkeypatch):
     # long path graph: worst case for naive propagation; star algorithm
     # must still converge within max_iter (forced distributed — the tiny
     # graph would otherwise take the driver fast path)
@@ -93,11 +91,12 @@ def test_connected_components_chain_converges_logarithmically(spark):
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)],
         "name_a string, name_b string",
     )
-    comp = connected_components(edges, max_iter=20, driver_max_edges=0)
+    monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
+    comp = connected_components(edges, max_iter=20)
     assert comp.select("component").distinct().count() == 1
 
 
-def test_connected_components_paths_agree_on_random_graph(spark):
+def test_connected_components_paths_agree_on_random_graph(spark, monkeypatch):
     # property: driver union-find tier ≡ distributed star loop on a
     # pseudo-random multi-component graph (seeded — deterministic)
     import random
@@ -115,9 +114,9 @@ def test_connected_components_paths_agree_on_random_graph(spark):
     fast = {
         (r.name, r.component) for r in connected_components(edges).collect()
     }
+    monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
     dist = {
-        (r.name, r.component)
-        for r in connected_components(edges, driver_max_edges=0).collect()
+        (r.name, r.component) for r in connected_components(edges).collect()
     }
     assert fast == dist
 
@@ -268,7 +267,7 @@ def test_candidate_pairs_oversized_band_dropped_wholly(spark, monkeypatch):
         assert tiered_pairs(names, threshold=0.55).count() == 8 * 7 // 2, tier
 
 
-def test_connected_components_restores_session_conf_when_it_raises(spark):
+def test_connected_components_restores_session_conf_when_it_raises(spark, monkeypatch):
     """A failure inside either path leaves the three confs the call scopes
     as they were."""
     keys = (C.PF_KEY, C.SP_KEY, C.AQE_KEY)
@@ -277,9 +276,10 @@ def test_connected_components_restores_session_conf_when_it_raises(spark):
     edges = spark.createDataFrame([("a", "b")], "name_a string, name_b string").select(
         boom("name_a").alias("name_a"), "name_b"
     )
-    for cap in (None, 0):  # driver fast path, then the distributed loop
+    for cap in (C.DRIVER_CC_MAX_EDGES, 0):  # driver fast path, then the distributed loop
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", cap)
         with pytest.raises(Exception):
-            connected_components(edges, driver_max_edges=cap)
+            connected_components(edges)
         assert {k: spark.conf.get(k, None) for k in keys} == before, cap
 
 

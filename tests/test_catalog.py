@@ -1,8 +1,9 @@
 """Catalog MERGE-INTO contract (the Neo4j append-to-existing-db analog,
-/root/reference/README.md:75): idempotent upsert, insert-if-absent
-precedence, latest-version-wins when a version column is given."""
+/root/reference/README.md:75): idempotent, insert-if-absent precedence,
+and reads and merges that run no schema-inference job."""
 
 import pytest
+from test_ledger import count_jobs
 
 from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
 
@@ -28,26 +29,8 @@ def test_merge_insert_if_absent_keeps_existing(spark, catalog):
     catalog.merge_upsert(
         "t", spark.createDataFrame([("a", 99), ("b", 2)], "id string, val int"), "id"
     )
-    # no version column -> existing row wins, new key inserted
+    # existing row wins, new key inserted
     assert _rows(catalog, "t") == {("a", 1), ("b", 2)}
-
-
-def test_merge_latest_version_wins(spark, catalog):
-    catalog.merge_upsert(
-        "t",
-        spark.createDataFrame([("a", 1, 10), ("b", 2, 10)], "id string, val int, ver int"),
-        "id",
-        version_col="ver",
-    )
-    catalog.merge_upsert(
-        "t",
-        spark.createDataFrame([("a", 99, 20), ("b", 0, 5)], "id string, val int, ver int"),
-        "id",
-        version_col="ver",
-    )
-    got = {(r.id, r.val, r.ver) for r in catalog.read("t").collect()}
-    # a: newer version replaces; b: older version ignored
-    assert got == {("a", 99, 20), ("b", 2, 10)}
 
 
 def test_merge_dedups_within_batch(spark, catalog):
@@ -93,6 +76,48 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, catalog):
     # insert-if-absent precedence holds through the bucketed path too
     got = {(r.id, r.val) for r in catalog.read_bucketed("t").collect()}
     assert got == {(k, 1) for k in keys}
+
+
+def test_bucketed_merge_into_existing_buckets_infers_no_schema(spark, catalog):
+    """Merging into N existing buckets costs at most one job per bucket
+    more than writing N fresh ones (the merge window's shuffle): the
+    existing bucket is read with its footer schema, not inferred."""
+    from pyspark.sql import functions as F
+
+    nb = 8
+    first = spark.createDataFrame([(f"k{i}", 1) for i in range(200)], "id string, val int")
+    second = spark.createDataFrame(
+        [(f"k{i}", 2) for i in range(100, 300)], "id string, val int"
+    )
+    buckets = F.pmod(F.xxhash64("id"), F.lit(nb))
+    assert first.select(buckets).distinct().count() == nb
+    assert second.select(buckets).distinct().count() == nb
+
+    _, fresh = count_jobs(spark, catalog.merge_upsert_bucketed, "t", first, "id", nb)
+    _, merged = count_jobs(spark, catalog.merge_upsert_bucketed, "t", second, "id", nb)
+    assert merged <= fresh + nb, (fresh, merged)
+    got = {(r.id, r.val) for r in catalog.read_bucketed("t").collect()}
+    assert got == {(f"k{i}", 1) for i in range(200)} | {(f"k{i}", 2) for i in range(200, 300)}
+
+
+def test_partitioned_reads_start_no_job(spark, catalog):
+    """``read_partitioned`` and ``read_bucketed`` take the schema from a
+    data file's footer: building the frame starts no Spark job, and the
+    partition column comes back as ``bucket int`` after the data columns."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    rows = [(f"k{i}", i) for i in range(40)]
+    catalog.merge_upsert_bucketed(
+        "t", spark.createDataFrame(rows, "id string, val int"), "id", n_buckets=4
+    )
+    part, n_part = count_jobs(spark, catalog.read_partitioned, "t")
+    bucketed, n_bucketed = count_jobs(spark, catalog.read_bucketed, "t")
+    assert (n_part, n_bucketed) == (0, 0)
+    data = [StructField("id", StringType()), StructField("val", IntegerType())]
+    assert part.schema == StructType(data + [StructField("bucket", IntegerType())])
+    assert bucketed.schema == StructType(data)
+    assert {(r.id, r.val) for r in bucketed.collect()} == set(rows)
+    assert sorted(r.bucket for r in part.select("bucket").distinct().collect()) == [0, 1, 2, 3]
 
 
 def test_killed_write_leaves_no_readable_garbage(spark, catalog):
@@ -161,17 +186,16 @@ def test_iceberg_merge_sql_parses(spark):
             pass
 
     cat = IcebergCatalog(_StubSpark(), "kg")
-    cat.merge_upsert("nodes", _StubDF(), "node_id", version_col="version")
     cat.merge_upsert("nodes", _StubDF(), "node_id")
     # bucketed form delegates to MERGE (Iceberg prunes via the bucket spec)
-    cat.merge_upsert_bucketed("nodes", _StubDF(), "node_id", version_col="version")
+    cat.merge_upsert_bucketed("nodes", _StubDF(), "node_id")
     cat.overwrite_partition("nodes", "bucket=3", _StubDF())
     captured.append(
         IcebergCatalog.create_table_ddl(
             "kg", "nodes", "node_id string, label string, version bigint", "node_id"
         )
     )
-    assert len(captured) == 5
+    assert len(captured) == 4
     parser = spark._jsparkSession.sessionState().sqlParser()
     for q in captured:
         parser.parsePlan(q)  # raises ParseException on bad syntax
