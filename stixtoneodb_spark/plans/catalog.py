@@ -1,11 +1,10 @@
 """Keyed-table catalog with insert-if-absent MERGE semantics.
 
 The reference adds to an existing Neo4j store keyed on STIX id: "If the
-database already exists, the data will be added to it"
-(/root/reference/README.md:75).  That is the one write rule every caller
-uses: a source row whose key the table already holds is dropped, a new key
-is inserted, and replaying a batch changes nothing.  Two backends
-implement it:
+database already exists, the data will be added to it" (reference
+README.md:75).  That is the one write rule every caller uses: a source row
+whose key the table already holds is dropped, a new key is inserted, and
+replaying a batch changes nothing.  Two backends implement it:
 
 - ``ParquetMergeCatalog`` (the one the pipeline and the stream sink use):
   read-merge-overwrite, where the existing row wins a key.  Every write

@@ -1,6 +1,6 @@
 """Catalog MERGE-INTO contract (the Neo4j append-to-existing-db analog,
-/root/reference/README.md:75): idempotent, insert-if-absent precedence,
-and reads and merges that run no schema-inference job."""
+reference README.md:75): idempotent, insert-if-absent precedence, and
+reads and merges that run no schema-inference job."""
 
 import pytest
 from test_ledger import count_jobs
