@@ -7,8 +7,13 @@ whose key the table already holds is dropped, a new key is inserted, and
 replaying a batch changes nothing.  Two backends implement it:
 
 - ``ParquetMergeCatalog`` (the one the pipeline and the stream sink use):
-  read-merge-overwrite, where the existing row wins a key.  Every write
-  goes to a staging dir and is then swapped in, so a failed job never
+  a ``left_anti`` join of the source against the existing keys, so the
+  existing row wins a key.  ``merge_upsert`` rewrites the whole table (the
+  existing rows plus the new ones) through a staging dir and swaps it in.
+  ``merge_upsert_bucketed`` is insert-only: it scans just the key column
+  of the table, writes only the new rows, one file per touched
+  ``bucket=K`` dir, in one write, and renames each file into its bucket, so
+  a replayed batch writes nothing.  Either way a failed job never
   corrupts the table.
 - ``IcebergCatalog``: ``MERGE INTO t USING s ON t.<key> = s.<key> WHEN NOT
   MATCHED THEN INSERT *``.  ``get_catalog`` would pick it when an Iceberg
@@ -17,7 +22,8 @@ replaying a batch changes nothing.  Two backends implement it:
 
 Both expose the same interface: whole-table writes (``overwrite``,
 ``merge_upsert``), bucket- and partition-scoped writes for the streaming
-sink (``merge_upsert_bucketed``, ``overwrite_partition``), their reads, and
+sink and the bucketed ingest (``merge_upsert_bucketed``,
+``overwrite_partition``), their reads, and
 a row ledger for driver-side bookkeeping (``append``, ``read_rows``).  On
 the parquet backend the ledger runs no Spark job: each ``append`` is one
 parquet file written by pyarrow and renamed into the table dir.
@@ -33,13 +39,22 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 # The footer key under which Spark's parquet writer stores the row schema.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Compaction bound of a bucketed table: a merge rewrites a bucket it
+# touched as one file once the bucket holds more data files than this.
+BUCKET_MAX_FILES = 8
+
+# The codec of the bucket files merge_upsert_bucketed writes.  The hex
+# content keys that make up most of a mention row do not compress under
+# snappy; zstd stores them in about two thirds of the bytes.
+BUCKET_CODEC = "zstd"
 
 
 class ParquetMergeCatalog:
@@ -52,7 +67,7 @@ class ParquetMergeCatalog:
     one of the table's data files, read with pyarrow, so a read runs no
     schema-inference job — whichever catalog instance wrote the table (a
     resumed run's stages, the existing side of an append run's MERGE, the
-    buckets a stream merge rewrites).  Only files without that schema
+    key column a stream merge scans).  Only files without that schema
     (pyarrow's own) infer.
     """
 
@@ -131,7 +146,8 @@ class ParquetMergeCatalog:
         """
         src = source.dropDuplicates([key_col])
         if self.exists(table):
-            src = _insert_if_absent(self.read(table), src, key_col)
+            existing = self.read(table)
+            src = existing.unionByName(_absent(src, existing, [key_col]))
         self._swap_in(src, self._path(table), self._staging(table))
 
     def append(self, table: str, rows: list[tuple], schema: str) -> None:
@@ -166,35 +182,53 @@ class ParquetMergeCatalog:
     def merge_upsert_bucketed(
         self, table: str, source: DataFrame, key_col: str, n_buckets: int = 16
     ) -> None:
-        """MERGE with BOUNDED I/O: the table lives as ``bucket=K`` hash
-        partitions of the key; a merge rewrites only the buckets the
-        source batch touches.  This is the parquet stand-in for Iceberg's
-        partition-pruned MERGE INTO on a ``bucket(N, key)`` spec — the
-        plain ``merge_upsert`` re-reads and rewrites the WHOLE table per
-        call, which under a streaming foreachBatch sink (one merge per
-        micro-batch) is quadratic total I/O over the stream's life.
+        """Insert-only MERGE into a table kept as ``bucket=K`` hash
+        partitions of the key: the parquet stand-in for Iceberg's MERGE
+        INTO on a ``bucket(N, key)`` spec.  Under a streaming foreachBatch
+        sink (one merge per micro-batch) its I/O per batch is the new rows
+        written plus the table's key column scanned; no existing row is
+        rewritten.
 
-        Touched-bucket discovery is a distinct over the small bucket-id
-        domain (≤ n_buckets rows collected); each touched bucket then
-        merges and swaps independently via overwrite_partition.
+        One write, whatever the number of buckets: the deduplicated source,
+        keyed with its ``bucket``, is ``left_anti``-joined against the
+        ``(key, bucket)`` columns of the table and written partitioned by
+        bucket into staging, one file per touched bucket.  Each new file is
+        then renamed into its bucket dir.
+        A replayed batch finds every key present and writes no file; a kill
+        between renames leaves a readable table, and the replay inserts the
+        rows that are still missing.  A touched bucket holding more than
+        ``BUCKET_MAX_FILES`` data files is compacted into one.
         """
         src = source.dropDuplicates([key_col]).withColumn(
-            "_bucket", F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
+            "bucket", F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
         )
-        src.persist()
-        try:
-            touched = sorted(
-                r["_bucket"] for r in src.select("_bucket").distinct().collect()
-            )
-            for b in touched:
-                part = f"bucket={b}"
-                batch = src.where(F.col("_bucket") == b).drop("_bucket")
-                if self.partition_exists(table, part):
-                    existing = self._read_dir(os.path.join(self._path(table), part))
-                    batch = _insert_if_absent(existing, batch, key_col)
-                self.overwrite_partition(table, part, batch)
-        finally:
-            src.unpersist()
+        final = self._path(table)
+        if _footer_schema(final) is not None:
+            src = _absent(src, self._read_dir(final), [key_col, "bucket"])
+        tmp = f"{self._staging(table, 'insert')}.tmp-{uuid.uuid4().hex[:8]}"
+        src.repartition("bucket").write.partitionBy("bucket").parquet(
+            tmp, compression=BUCKET_CODEC
+        )
+        for part in sorted(os.listdir(tmp)):
+            if not part.startswith("bucket="):
+                continue
+            bucket_dir = os.path.join(final, part)
+            os.makedirs(bucket_dir, exist_ok=True)
+            # data files before their hidden .crc files, so a kill between
+            # renames leaves no checksum without its file
+            staged = os.path.join(tmp, part)
+            for name in sorted(os.listdir(staged), key=lambda n: n.startswith(".")):
+                os.rename(os.path.join(staged, name), os.path.join(bucket_dir, name))
+            if not os.path.exists(os.path.join(bucket_dir, "_SUCCESS")):
+                open(os.path.join(bucket_dir, "_SUCCESS"), "w").close()
+            if len(glob.glob(os.path.join(glob.escape(bucket_dir), "[!_.]*"))) > BUCKET_MAX_FILES:
+                self._swap_in(
+                    self._read_dir(bucket_dir).coalesce(1),
+                    bucket_dir,
+                    self._staging(table, part),
+                    compression=BUCKET_CODEC,
+                )
+        shutil.rmtree(tmp, ignore_errors=True)
 
     def read_bucketed(self, table: str) -> DataFrame:
         """Read a table maintained by merge_upsert_bucketed (drops the
@@ -220,12 +254,14 @@ class ParquetMergeCatalog:
         values come back as columns (no table-level _SUCCESS marker)."""
         return self._read_dir(self._path(table))
 
-    def _swap_in(self, df: DataFrame, final: str, staged: str) -> None:
+    def _swap_in(
+        self, df: DataFrame, final: str, staged: str, compression: str | None = None
+    ) -> None:
         """Write ``df`` to a fresh staging dir ``<staged>.tmp-<hex>``, then
         swap it in for ``final``: the old copy is renamed away, the new one
         renamed in, and the old one deleted."""
         tmp = f"{staged}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp, compression=compression)
         os.makedirs(os.path.dirname(final), exist_ok=True)
         if os.path.exists(final):
             old = tmp + ".old"
@@ -236,19 +272,14 @@ class ParquetMergeCatalog:
             os.rename(tmp, final)
 
 
-def _insert_if_absent(existing: DataFrame, source: DataFrame, key_col: str) -> DataFrame:
-    """The merged table: every ``existing`` row, plus the ``source`` rows
-    whose key ``existing`` lacks (``source`` is already deduplicated on
-    ``key_col``)."""
-    tagged = existing.withColumn("_prio", F.lit(0)).unionByName(
-        source.withColumn("_prio", F.lit(1))
-    )
-    w = Window.partitionBy(key_col).orderBy(F.col("_prio").asc())
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_prio")
-    )
+def _absent(source: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
+    """The ``source`` rows whose ``keys`` ``existing`` lacks (a null key
+    matches a null key), in ``source``'s own column order: a using-join
+    would move the key columns first, and every file of a table must carry
+    the same footer schema."""
+    ex = existing.select(*(F.col(k).alias(f"_ex_{k}") for k in keys))
+    on = [source[k].eqNullSafe(ex[f"_ex_{k}"]) for k in keys]
+    return source.join(ex, on, "left_anti").select(*source.columns)
 
 
 def _footer_schema(path: str) -> StructType | None:

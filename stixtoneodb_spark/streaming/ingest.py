@@ -249,12 +249,15 @@ def start_mention_merge_sink(stream: DataFrame, warehouse: str, checkpoint_dir: 
     catalog, exactly as batch S5 does (idempotent on the content key, so
     micro-batch replay after failure cannot duplicate rows).
 
-    The merge is BUCKETED (``merge_upsert_bucketed``): each micro-batch
-    rewrites only the key-hash buckets it touches, so the sink's I/O per
-    batch is proportional to the batch, not to the accumulated table —
-    the full-table read-merge-overwrite form was quadratic total I/O
-    over a long stream's life.  Read the table back with
-    ``catalog.read_bucketed(MENTION_TABLE)``.
+    The merge is insert-only (``merge_upsert_bucketed``): each micro-batch
+    scans the key column of the table, writes only its new mentions in one
+    write, one file per key-hash bucket they touch, and renames the files
+    into their buckets.  No existing row is rewritten, so a replayed batch
+    writes nothing, and the sink's I/O per batch is its new rows plus one
+    key-column scan.  A sink killed mid-batch leaves its staged files
+    under ``_staging/<MENTION_TABLE>``; the next start sweeps them before
+    the query runs, and the replay inserts the rows still missing.  Read
+    the table back with ``catalog.read_bucketed(MENTION_TABLE)``.
 
     Returns the StreamingQuery; caller awaits termination.  Uses
     ``Trigger.AvailableNow`` so the query drains the available input and
@@ -276,6 +279,7 @@ def start_mention_merge_sink(stream: DataFrame, warehouse: str, checkpoint_dir: 
             MENTION_TABLE, keyed, key_col="id", n_buckets=MENTION_BUCKETS
         )
 
+    ParquetMergeCatalog(stream.sparkSession, warehouse).sweep_staging(tables=[MENTION_TABLE])
     mentions = streaming_mentions(stream)
     return (
         mentions.writeStream.foreachBatch(merge_batch)

@@ -1,11 +1,17 @@
 """Catalog MERGE-INTO contract (the Neo4j append-to-existing-db analog,
-reference README.md:75): idempotent, insert-if-absent precedence, and
-reads and merges that run no schema-inference job."""
+reference README.md:75): idempotent, insert-if-absent precedence, a
+bucketed merge that writes only new rows in one job, and reads and merges
+that run no schema-inference job."""
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from test_ledger import count_jobs
 
-from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
+from stixtoneodb_spark.plans import catalog as catalog_mod
+from stixtoneodb_spark.plans.catalog import SPARK_SCHEMA_KEY, ParquetMergeCatalog
 
 
 @pytest.fixture()
@@ -39,49 +45,160 @@ def test_merge_dedups_within_batch(spark, catalog):
     assert catalog.read("t").count() == 2
 
 
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, catalog):
-    """The streaming-sink contract: a micro-batch's merge must not rewrite
-    buckets its keys don't hash into (bounded I/O per batch)."""
-    import os
-    import time
+def _files(root):
+    """``{path relative to root: bytes}`` of every file under ``root``."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+    return out
 
-    from pyspark.sql import functions as F
 
+def _data_files(root):
+    """Paths of the parquet data files of a bucketed table, relative to it."""
+    return sorted(
+        p for p in _files(root) if not os.path.basename(p).startswith(("_", "."))
+    )
+
+
+def _bucket_of(spark, keys, nb):
+    rows = spark.createDataFrame([(k,) for k in keys], "id string").select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int").alias("b")
+    )
+    return {r.id: r.b for r in rows.collect()}
+
+
+def test_bucketed_merge_writes_only_new_rows(spark, catalog):
+    """The streaming-sink contract: a micro-batch's merge writes its new
+    rows and nothing else.  A batch of existing keys leaves every file
+    byte-identical; a batch with new keys adds exactly one data file per
+    bucket the new keys hash to and leaves every other file as it was."""
     nb = 4
     keys = [f"k{i}" for i in range(40)]
     first = spark.createDataFrame([(k, 1) for k in keys], "id string, val int")
     catalog.merge_upsert_bucketed("t", first, "id", n_buckets=nb)
     table_dir = catalog._path("t")
-    all_buckets = sorted(os.listdir(table_dir))
-    assert all_buckets == [f"bucket={b}" for b in range(nb)]
+    assert sorted(os.listdir(table_dir)) == [f"bucket={b}" for b in range(nb)]
+    before = _files(table_dir)
 
-    # second batch: keys from exactly one bucket
-    target = (
-        first.withColumn("b", F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int"))
-        .where(F.col("b") == 2)
-        .select("id")
-        .collect()
-    )
-    mtimes = {d: os.path.getmtime(os.path.join(table_dir, d)) for d in all_buckets}
-    time.sleep(1.1)
-    second = spark.createDataFrame([(r["id"], 9) for r in target], "id string, val int")
+    existing = spark.createDataFrame([(k, 9) for k in keys], "id string, val int")
+    catalog.merge_upsert_bucketed("t", existing, "id", n_buckets=nb)
+    assert _files(table_dir) == before
+
+    new = [k for k, b in _bucket_of(spark, [f"n{i}" for i in range(40)], nb).items() if b in (1, 2)]
+    second = spark.createDataFrame([(k, 9) for k in keys[:10] + new], "id string, val int")
     catalog.merge_upsert_bucketed("t", second, "id", n_buckets=nb)
-
-    for d in all_buckets:
-        mt = os.path.getmtime(os.path.join(table_dir, d))
-        if d == "bucket=2":
-            assert mt != mtimes[d], "touched bucket was not rewritten"
-        else:
-            assert mt == mtimes[d], f"untouched {d} was rewritten"
-    # insert-if-absent precedence holds through the bucketed path too
+    after = _files(table_dir)
+    assert {p: after.get(p) for p in before} == before
+    added = sorted(set(after) - set(before))
+    assert {os.path.dirname(p) for p in added} == {"bucket=1", "bucket=2"}
+    assert [os.path.dirname(p) for p in _data_files(table_dir) if p in added] == [
+        "bucket=1",
+        "bucket=2",
+    ]
+    # insert-if-absent precedence: the existing row still wins
     got = {(r.id, r.val) for r in catalog.read_bucketed("t").collect()}
-    assert got == {(k, 1) for k in keys}
+    assert got == {(k, 1) for k in keys} | {(k, 9) for k in new}
+
+
+@pytest.mark.parametrize("nb", [8, 16])
+def test_bucketed_merge_into_existing_buckets_is_one_insert_job(spark, catalog, nb):
+    """A merge into N existing buckets is one insert job: at most 4 Spark
+    jobs, whatever N (a rewrite per bucket started 4 + 2N)."""
+    first = spark.createDataFrame([(f"k{i}", 1) for i in range(2000)], "id string, val int")
+    second = spark.createDataFrame(
+        [(f"k{i}", 2) for i in range(1000, 3000)], "id string, val int"
+    )
+    assert set(_bucket_of(spark, [f"k{i}" for i in range(1000)], nb).values()) == set(range(nb))
+    assert set(_bucket_of(spark, [f"k{i}" for i in range(2000, 3000)], nb).values()) == set(range(nb))
+    catalog.merge_upsert_bucketed("t", first, "id", nb)
+    _, merged = count_jobs(spark, catalog.merge_upsert_bucketed, "t", second, "id", nb)
+    assert merged <= 4, merged
+    got = {(r.id, r.val) for r in catalog.read_bucketed("t").collect()}
+    assert got == {(f"k{i}", 1) for i in range(2000)} | {(f"k{i}", 2) for i in range(2000, 3000)}
+
+
+def test_bucket_files_share_the_source_footer_schema(spark, catalog):
+    """Every data file of a bucketed table carries the same Spark footer
+    schema, in the source's column order (the key is not its first
+    column), and ``read_bucketed`` returns that schema."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    schema = "val int, id string, note string"
+    for lo in (0, 30, 60):
+        batch = spark.createDataFrame(
+            [(i, f"k{i}", f"note {i}") for i in range(lo, lo + 40)], schema
+        )
+        catalog.merge_upsert_bucketed("t", batch, "id", n_buckets=4)
+    table_dir = catalog._path("t")
+    files = _data_files(table_dir)
+    assert len(files) > 4  # several inserts per bucket
+    footers = {
+        pq.read_schema(os.path.join(table_dir, f)).metadata[SPARK_SCHEMA_KEY] for f in files
+    }
+    assert len(footers) == 1, footers
+    got = catalog.read_bucketed("t")
+    assert got.schema == StructType(
+        [
+            StructField("val", IntegerType()),
+            StructField("id", StringType()),
+            StructField("note", StringType()),
+        ]
+    )
+    assert {(r.val, r.id) for r in got.collect()} == {(i, f"k{i}") for i in range(100)}
+
+
+def test_one_file_snappy_bucket_plus_zstd_insert_reads_every_row(spark, catalog):
+    """A table whose buckets were each written as one snappy file (the
+    rewrite-per-bucket form) takes zstd inserts next to them and reads
+    every row of both."""
+    nb = 4
+    old = [(f"k{i}", 1) for i in range(40)]
+    buckets = _bucket_of(spark, [k for k, _ in old], nb)
+    for b in range(nb):
+        rows = [r for r in old if buckets[r[0]] == b]
+        catalog.overwrite_partition(
+            "t", f"bucket={b}", spark.createDataFrame(rows, "id string, val int").coalesce(1)
+        )
+    table_dir = catalog._path("t")
+    before = _data_files(table_dir)
+    new = [(f"n{i}", 2) for i in range(40)]
+    catalog.merge_upsert_bucketed(
+        "t", spark.createDataFrame(old[:5] + new, "id string, val int"), "id", n_buckets=nb
+    )
+    added = [f for f in _data_files(table_dir) if f not in before]
+    assert len(before) == nb and len(added) == nb
+
+    def codec(f):
+        return pq.ParquetFile(os.path.join(table_dir, f)).metadata.row_group(0).column(0).compression
+
+    assert {codec(f) for f in before} == {"SNAPPY"}
+    assert {codec(f) for f in added} == {"ZSTD"}
+    got = sorted((r.id, r.val) for r in catalog.read_bucketed("t").collect())
+    assert got == sorted(old + new)
+
+
+def test_bucket_compaction_bounds_files_per_bucket(spark, catalog, monkeypatch):
+    """Once a touched bucket holds more than ``BUCKET_MAX_FILES`` data
+    files, the merge rewrites it as one file with the same rows."""
+    monkeypatch.setattr(catalog_mod, "BUCKET_MAX_FILES", 2)
+    nb = 2
+    for lo in (0, 50, 100):
+        batch = spark.createDataFrame([(f"k{i}", i) for i in range(lo, lo + 50)], "id string, val int")
+        catalog.merge_upsert_bucketed("t", batch, "id", n_buckets=nb)
+    files = _data_files(catalog._path("t"))
+    per_bucket = {b: sum(os.path.dirname(f) == f"bucket={b}" for f in files) for b in range(nb)}
+    assert all(1 <= n <= 2 for n in per_bucket.values()), per_bucket
+    got = catalog.read_bucketed("t")
+    assert got.columns == ["id", "val"]
+    assert sorted((r.id, r.val) for r in got.collect()) == sorted((f"k{i}", i) for i in range(150))
 
 
 def test_bucketed_merge_into_existing_buckets_infers_no_schema(spark, catalog):
     """Merging into N existing buckets costs at most one job per bucket
-    more than writing N fresh ones (the merge window's shuffle): the
-    existing bucket is read with its footer schema, not inferred."""
+    more than writing N fresh ones: the existing buckets are read with
+    their footer schema, not inferred (one inference job per bucket)."""
     from pyspark.sql import functions as F
 
     nb = 8

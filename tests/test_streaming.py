@@ -248,27 +248,79 @@ def test_stateful_close_timer_survives_out_of_order_batch(spark, tmp_path):
 def test_foreach_batch_merge_idempotent(spark, stream_dir, tmp_path):
     """foreachBatch MERGE sink: streaming mentions land in the catalog
     keyed on content; re-running the whole stream (fresh checkpoint —
-    worst-case full replay) changes nothing."""
+    worst-case full replay) leaves every file byte-identical."""
+    from test_catalog import _files
+
     from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
 
     wh = str(tmp_path / "wh")
     catalog = ParquetMergeCatalog(spark, wh)
     stream = ingest.read_transcript_stream(spark, stream_dir)
     _drain(ingest.start_mention_merge_sink(stream, wh, str(tmp_path / "c1")))
-    # snapshot before the re-run: the second merge atomically swaps the
-    # touched buckets, so the first DataFrame must be materialized now
     first_rows = sorted(map(tuple, catalog.read_bucketed("stream_mentions").collect()))
+    first_files = _files(catalog._path("stream_mentions"))
     n1 = len(first_rows)
 
     stream2 = ingest.read_transcript_stream(spark, stream_dir)
     _drain(ingest.start_mention_merge_sink(stream2, wh, str(tmp_path / "c2")))
     second_rows = sorted(map(tuple, catalog.read_bucketed("stream_mentions").collect()))
     assert second_rows == first_rows
+    assert _files(catalog._path("stream_mentions")) == first_files
 
     batch = extract.detect_mentions(
         assemble.normalize_turns(spark.read.parquet(stream_dir))
     )
     assert n1 == batch.count()
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_sink_killed_between_renames_converges_on_replay(
+    spark, stream_dir, tmp_path, monkeypatch, k
+):
+    """A sink killed after k of a batch's renames into the buckets leaves a
+    readable table without duplicate keys; its staged leftovers are swept
+    when the sink restarts on the same checkpoint, and the replayed batch
+    fills in exactly the missing rows."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
+
+    wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+    staging = os.path.join(wh, "_staging", ingest.MENTION_TABLE)
+    real_rename = os.rename
+    renamed = []
+
+    def rename(src, dst):
+        if str(src).startswith(staging):
+            if len(renamed) == k:
+                raise OSError("killed between renames")
+            renamed.append(dst)
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    stream = ingest.read_transcript_stream(spark, stream_dir)
+    with pytest.raises(StreamingQueryException):
+        ingest.start_mention_merge_sink(stream, wh, ckpt).awaitTermination(300)
+    monkeypatch.undo()
+    assert len(renamed) == k
+
+    catalog = ParquetMergeCatalog(spark, wh)
+    partial = catalog.read_bucketed(ingest.MENTION_TABLE).select("id").collect()
+    assert 0 < len(partial) == len({r.id for r in partial})
+    leftover = os.listdir(staging)
+    assert leftover
+
+    stream2 = ingest.read_transcript_stream(spark, stream_dir)
+    _drain(ingest.start_mention_merge_sink(stream2, wh, ckpt))
+    assert not any(os.path.exists(os.path.join(staging, n)) for n in leftover)
+    ids = [r.id for r in catalog.read_bucketed(ingest.MENTION_TABLE).select("id").collect()]
+    assert len(ids) == len(set(ids))
+    batch = extract.detect_mentions(
+        assemble.normalize_turns(spark.read.parquet(stream_dir))
+    )
+    assert len(ids) == batch.count()
 
 
 def test_custom_stateful_progress_operator(spark, stream_dir, tmp_path):
