@@ -2,8 +2,7 @@
 
 The engine already exercises scalar pandas UDFs (plans/extract.py mention
 detection), grouped-map ``applyInPandas`` / ``mapInPandas`` (triples,
-media decode), ``applyInPandasWithState`` (streaming conversation
-counter), and the Spark-4 Python UDTF (functions/textfns.py).  Two API
+media decode), and the Spark-4 Python UDTF (functions/textfns.py).  Two API
 tiers remained untested at the oracle surface and land here:
 
 - GROUPED_AGG pandas UDFs (the vectorized UDAF surface): per-group
@@ -205,9 +204,8 @@ def mg_sketch(tok: DataFrame, capacity: int) -> DataFrame:
 
 def mg_merge_summaries(weighted: DataFrame, capacity: int) -> DataFrame:
     """Weighted MG merge of already-summarized (token, w) frames in ONE
-    bounded task — the mergeable-summaries reduce step, shared by the
-    batch sketch above and the streaming foreachBatch sink
-    (streaming/ingest.py) so the two paths cannot drift."""
+    bounded task — the mergeable-summaries reduce step of the batch
+    sketch above."""
 
     def merge_sketch(batches):
         counters: dict = {}

@@ -690,7 +690,7 @@ def text_token_count_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas-UDF stages whose cost is the Arrow↔pandas transfer itself
     (SURVEY §7.1 watch list) — completing the engine's Python API
     surface: scalar pandas UDF, GROUPED_AGG, grouped/cogrouped
-    applyInPandas, applyInPandasWithState, mapInPandas, UDTF, and now
+    applyInPandas, mapInPandas, UDTF, and now
     mapInArrow.
 
     Identical spec to ``text_token_count`` (same oracle SQL; an equality

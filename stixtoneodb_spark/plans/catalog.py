@@ -95,7 +95,12 @@ class ParquetMergeCatalog:
         """Drop leftovers of killed writers.  Safe at the start of any
         resumed run: staging holds only (a) writes that never got renamed
         into place — their checkpoint row was never marked done, so the
-        stage re-runs — and (b) superseded old copies awaiting delete.
+        stage re-runs — and (b) old copies that ``_swap_in`` renamed away.
+
+        An old copy whose target is absent is what a swap killed between
+        its two renames left: it is renamed back into place, so the table
+        (or partition) reads as before the killed write, which then re-runs.
+        An old copy whose target exists is superseded and deleted.
 
         ``tables``: sweep only the staging entries of these tables (the
         caller's own), so a resumed batch run cannot delete an in-flight
@@ -104,18 +109,33 @@ class ParquetMergeCatalog:
         under single-writer-per-warehouse.
         """
         root = os.path.join(self.warehouse, "_staging")
+        if not os.path.isdir(root):
+            return
+        names = tables
+        if names is None:
+            names = {entry.split(".tmp-")[0] for entry in os.listdir(root)}
+        for t in names:
+            # whole-table staging lives as _staging/<table>.tmp-<hex>[.old];
+            # partition-level staging and unrenamed ledger files under
+            # _staging/<table>/, a partition's old copy as
+            # <partition>.tmp-<hex>.old
+            whole = [e for e in os.listdir(root) if e.startswith(t + ".tmp-")]
+            olds = [(os.path.join(root, e), self._path(t)) for e in whole if e.endswith(".old")]
+            parts = os.path.join(root, t)
+            if os.path.isdir(parts):
+                olds += [
+                    (os.path.join(parts, e), os.path.join(self._path(t), e.split(".tmp-")[0]))
+                    for e in os.listdir(parts)
+                    if e.endswith(".old")
+                ]
+            for old, target in olds:
+                if not os.path.exists(target):
+                    os.rename(old, target)
+            shutil.rmtree(parts, ignore_errors=True)
+            for e in whole:
+                shutil.rmtree(os.path.join(root, e), ignore_errors=True)
         if tables is None:
             shutil.rmtree(root, ignore_errors=True)
-            return
-        for t in tables:
-            # partition-level staging and unrenamed ledger files live under
-            # _staging/<table>/..., whole-table staging as
-            # _staging/<table>.tmp-<hex>
-            shutil.rmtree(os.path.join(root, t), ignore_errors=True)
-            if os.path.isdir(root):
-                for entry in os.listdir(root):
-                    if entry.startswith(t + ".tmp-"):
-                        shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
 
     def exists(self, table: str) -> bool:
         return os.path.exists(os.path.join(self._path(table), "_SUCCESS"))
@@ -258,8 +278,10 @@ class ParquetMergeCatalog:
         self, df: DataFrame, final: str, staged: str, compression: str | None = None
     ) -> None:
         """Write ``df`` to a fresh staging dir ``<staged>.tmp-<hex>``, then
-        swap it in for ``final``: the old copy is renamed away, the new one
-        renamed in, and the old one deleted."""
+        swap it in for ``final``: the old copy is renamed away to
+        ``<staged>.tmp-<hex>.old``, the new one renamed in, and the old one
+        deleted.  A kill between the two renames leaves ``final`` absent and
+        the old copy in staging; ``sweep_staging`` renames it back."""
         tmp = f"{staged}.tmp-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp, compression=compression)
         os.makedirs(os.path.dirname(final), exist_ok=True)

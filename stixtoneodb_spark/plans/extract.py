@@ -139,14 +139,23 @@ def _assert_cross_type_nonoverlap(by_type: dict[str, list[str]]) -> None:
 
 
 @lru_cache(maxsize=1)
-def _combined_gazetteer_pattern() -> tuple[re.Pattern, dict[str, str]]:
+def _combined_gazetteer_patterns() -> tuple[re.Pattern, re.Pattern, dict[str, str]]:
     """ONE alternation over every type's surfaces, one named group per
     type: a single regex pass replaces the per-type pass loop (7 scans of
     every text → 1), which halved the mention stage's wall at bench
     scale.  Semantics identical to the per-type passes because surfaces
-    do not overlap across types (asserted by
+    do not overlap across types (asserted here and by
     tests/test_pipeline.py::test_combined_mention_pass_equals_per_type);
     within-type longest-first alternation order is preserved per group.
+
+    Returns the alternation compiled twice, plus the group → entity_type
+    map.  The first regex is case-SENSITIVE over the lowered surfaces:
+    CPython's ``re.IGNORECASE`` roughly halves alternation throughput
+    (measured 2.1x on corpus-shaped text), so the hot path lowers each
+    text once (C-level) and scans it case-sensitively, with identical
+    matches for any text whose ``lower()`` is length-preserving.  The
+    second is the ``re.IGNORECASE`` twin those few Unicode texts fall
+    back to.
     """
     by_type: dict[str, list[str]] = {}
     for _canon, (etype, surfaces) in GAZETTEER.items():
@@ -155,75 +164,51 @@ def _combined_gazetteer_pattern() -> tuple[re.Pattern, dict[str, str]]:
     parts: list[str] = []
     group_types: dict[str, str] = {}
     for i, (etype, surfaces) in enumerate(sorted(by_type.items())):
-        alts = sorted(set(surfaces), key=len, reverse=True)
+        alts = sorted({s.lower() for s in surfaces}, key=len, reverse=True)
         g = f"g{i}"
         group_types[g] = etype
         parts.append(f"(?P<{g}>" + "|".join(re.escape(s) for s in alts) + ")")
     g = f"g{len(parts)}"
     group_types[g] = "infrastructure"
     parts.append(f"(?P<{g}>host[- ][0-9a-f]{{6}})")
-    pat = re.compile(
-        r"(?<![A-Za-z0-9])(?:" + "|".join(parts) + r")(?![A-Za-z0-9])", re.IGNORECASE
-    )
-    return pat, group_types
-
-
-@lru_cache(maxsize=1)
-def _combined_gazetteer_pattern_cs() -> tuple[re.Pattern, dict[str, str]]:
-    """Case-SENSITIVE twin of ``_combined_gazetteer_pattern`` over
-    pre-lowered surfaces: CPython's ``re.IGNORECASE`` roughly halves
-    alternation throughput (measured 2.1x on corpus-shaped text), so the
-    hot path lowers each text once (C-level) and scans case-sensitively —
-    identical matches for any text whose ``lower()`` is length-preserving
-    (the non-length-preserving Unicode edge cases fall back to the
-    IGNORECASE twin; equality with the per-type reference passes is
-    asserted by tests/test_pipeline.py)."""
-    by_type: dict[str, list[str]] = {}
-    for _canon, (etype, surfaces) in GAZETTEER.items():
-        by_type.setdefault(etype, []).extend(s.lower() for s in surfaces)
-    parts: list[str] = []
-    group_types: dict[str, str] = {}
-    for i, (etype, surfaces) in enumerate(sorted(by_type.items())):
-        alts = sorted(set(surfaces), key=len, reverse=True)
-        g = f"g{i}"
-        group_types[g] = etype
-        parts.append(f"(?P<{g}>" + "|".join(re.escape(s) for s in alts) + ")")
-    g = f"g{len(parts)}"
-    group_types[g] = "infrastructure"
-    parts.append(f"(?P<{g}>host[- ][0-9a-f]{{6}})")
+    alternation = "(?:" + "|".join(parts) + ")"
     # boundary classes need no upper-case letters: the input is lowered
-    pat = re.compile(r"(?<![a-z0-9])(?:" + "|".join(parts) + r")(?![a-z0-9])")
-    return pat, group_types
+    pat_cs = re.compile(r"(?<![a-z0-9])" + alternation + r"(?![a-z0-9])")
+    pat_ci = re.compile(
+        r"(?<![A-Za-z0-9])" + alternation + r"(?![A-Za-z0-9])", re.IGNORECASE
+    )
+    return pat_cs, pat_ci, group_types
+
+
+def _scan_mentions(text) -> list[tuple[str, str, int]]:
+    """(surface, entity_type, start) of every gazetteer mention in one
+    text, start-ascending: one combined regex pass over the lowered text,
+    each surface sliced from the ORIGINAL text by match offset, so the
+    result is byte-identical to an IGNORECASE scan of the text itself."""
+    if not isinstance(text, str) or not text:
+        return []
+    pat_cs, pat_ci, group_types = _combined_gazetteer_patterns()
+    low = text.lower()
+    # lower() is length-preserving for all but a few Unicode code
+    # points (e.g. İ) — offsets then map 1:1 onto the original
+    pat, src = (pat_cs, low) if len(low) == len(text) else (pat_ci, text)
+    found = []
+    for m in pat.finditer(src):
+        g = m.lastgroup
+        found.append((text[m.start(g) : m.end(g)], group_types[g], m.start(g)))
+    return found
 
 
 @F.pandas_udf(MENTION_SCHEMA)
 def detect_mentions_udf(texts: pd.Series) -> pd.Series:
     """Batched gazetteer mention detection: one Arrow batch in, one out;
-    one combined regex pass per text (start-ascending by construction).
-    Scans the lowered text case-sensitively (2.1x the IGNORECASE
-    throughput) and slices each surface from the ORIGINAL text by match
-    offset, so the emitted rows are byte-identical to the IGNORECASE
-    reference."""
-    pat_cs, group_types = _combined_gazetteer_pattern_cs()
-    pat_ci, _ = _combined_gazetteer_pattern()
-
-    def scan(text):
-        if not isinstance(text, str) or not text:
-            return []
-        low = text.lower()
-        # lower() is length-preserving for all but a few Unicode code
-        # points (e.g. İ) — offsets then map 1:1 onto the original
-        pat, src = (pat_cs, low) if len(low) == len(text) else (pat_ci, text)
-        return [
-            {
-                "surface": text[m.start(m.lastgroup) : m.end(m.lastgroup)],
-                "entity_type": group_types[m.lastgroup],
-                "start": m.start(m.lastgroup),
-            }
-            for m in pat.finditer(src)
+    ``_scan_mentions`` per text."""
+    return texts.map(
+        lambda text: [
+            {"surface": surface, "entity_type": etype, "start": start}
+            for surface, etype, start in _scan_mentions(text)
         ]
-
-    return texts.map(scan)
+    )
 
 
 @F.pandas_udf(MENTION_SCHEMA)
@@ -265,39 +250,40 @@ def detect_mentions(turns: DataFrame) -> DataFrame:
     )
 
 
-def _extract_batches(batches):
-    """mapInPandas body: vectorized extractall per Arrow batch."""
-    pat = _triple_pattern()
-    empty = pd.DataFrame(
-        {
-            "conv_id": pd.Series(dtype="object"),
-            "turn_idx": pd.Series(dtype="int32"),
-            "subj_text": pd.Series(dtype="object"),
-            "pred": pd.Series(dtype="object"),
-            "obj_text": pd.Series(dtype="object"),
-            "confidence": pd.Series(dtype="float64"),
-        }
-    )
-    for pdf in batches:
-        if len(pdf) == 0:
-            yield empty
-            continue
-        pdf = pdf.reset_index(drop=True)
-        hits = pdf["text"].fillna("").str.extractall(pat)
-        if len(hits) == 0:
-            yield empty
-            continue
-        ridx = hits.index.get_level_values(0)
-        yield pd.DataFrame(
+def _batch_triples(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The triples of one Arrow batch of (conv_id, turn_idx, text) rows, in
+    ``TRIPLE_SCHEMA``'s columns: one pandas ``str.extractall`` (C-level
+    match loop) over the batch's text column."""
+    text = pdf["text"].reset_index(drop=True)
+    hits = text.fillna("").str.extractall(_triple_pattern())
+    if len(hits) == 0:
+        return pd.DataFrame(
             {
-                "conv_id": pdf["conv_id"].take(ridx).to_numpy(),
-                "turn_idx": pdf["turn_idx"].take(ridx).to_numpy(),
-                "subj_text": hits[0].to_numpy(),
-                "pred": hits[1].str.lower().to_numpy(),
-                "obj_text": hits[2].to_numpy(),
-                "confidence": 1.0,
+                "conv_id": pd.Series(dtype="object"),
+                "turn_idx": pd.Series(dtype="int32"),
+                "subj_text": pd.Series(dtype="object"),
+                "pred": pd.Series(dtype="object"),
+                "obj_text": pd.Series(dtype="object"),
+                "confidence": pd.Series(dtype="float64"),
             }
         )
+    ridx = hits.index.get_level_values(0)
+    return pd.DataFrame(
+        {
+            "conv_id": pdf["conv_id"].take(ridx).to_numpy(),
+            "turn_idx": pdf["turn_idx"].take(ridx).to_numpy(),
+            "subj_text": hits[0].to_numpy(),
+            "pred": hits[1].str.lower().to_numpy(),
+            "obj_text": hits[2].to_numpy(),
+            "confidence": 1.0,
+        }
+    )
+
+
+def _extract_batches(batches):
+    """mapInPandas body: ``_batch_triples`` per Arrow batch."""
+    for pdf in batches:
+        yield _batch_triples(pdf)
 
 
 def extract_triples(turns: DataFrame) -> DataFrame:
@@ -336,10 +322,8 @@ def _fused_batches(batches):
     per extractor, instead of two whole-corpus jobs each paying the
     scan + Arrow transfer.  Emits a tagged union; row content is
     IDENTICAL to detect_mentions ∪ extract_triples (equality-pinned by
-    tests/test_pipeline.py)."""
-    pat_cs, group_types = _combined_gazetteer_pattern_cs()
-    pat_ci, _ = _combined_gazetteer_pattern()
-    tpat = _triple_pattern()
+    tests/test_pipeline.py), because both run the same per-text
+    ``_scan_mentions`` and per-batch ``_batch_triples``."""
     empty = pd.DataFrame(
         {
             "conv_id": pd.Series(dtype="object"),
@@ -353,24 +337,15 @@ def _fused_batches(batches):
         }
     )
     for pdf in batches:
-        if len(pdf) == 0:
-            yield empty
-            continue
-        pdf = pdf.reset_index(drop=True)
         frames = []
-        # -- mentions: identical scan to detect_mentions_udf ------------
         m_conv, m_turn, m_a, m_b, m_start = [], [], [], [], []
         for conv, turn, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-            if not isinstance(text, str) or not text:
-                continue
-            low = text.lower()
-            pat, src = (pat_cs, low) if len(low) == len(text) else (pat_ci, text)
-            for m in pat.finditer(src):
+            for surface, etype, start in _scan_mentions(text):
                 m_conv.append(conv)
                 m_turn.append(turn)
-                m_a.append(text[m.start(m.lastgroup) : m.end(m.lastgroup)])
-                m_b.append(group_types[m.lastgroup])
-                m_start.append(m.start(m.lastgroup))
+                m_a.append(surface)
+                m_b.append(etype)
+                m_start.append(start)
         if m_conv:
             frames.append(
                 pd.DataFrame(
@@ -386,21 +361,19 @@ def _fused_batches(batches):
                     }
                 )
             )
-        # -- triples: identical extractall to _extract_batches ----------
-        hits = pdf["text"].fillna("").str.extractall(tpat)
-        if len(hits):
-            ridx = hits.index.get_level_values(0)
+        triples = _batch_triples(pdf)
+        if len(triples):
             frames.append(
                 pd.DataFrame(
                     {
-                        "conv_id": pdf["conv_id"].take(ridx).to_numpy(),
-                        "turn_idx": pdf["turn_idx"].take(ridx).to_numpy(),
+                        "conv_id": triples["conv_id"].to_numpy(),
+                        "turn_idx": triples["turn_idx"].to_numpy(),
                         "kind": "t",
-                        "a": hits[0].to_numpy(),
-                        "b": hits[1].str.lower().to_numpy(),
-                        "c": hits[2].to_numpy(),
-                        "start": pd.Series(pd.NA, index=range(len(hits)), dtype="Int32"),
-                        "confidence": 1.0,
+                        "a": triples["subj_text"].to_numpy(),
+                        "b": triples["pred"].to_numpy(),
+                        "c": triples["obj_text"].to_numpy(),
+                        "start": pd.Series(pd.NA, index=range(len(triples)), dtype="Int32"),
+                        "confidence": triples["confidence"].to_numpy(),
                     }
                 )
             )

@@ -10,10 +10,11 @@ edges, meta objects become nodes with edges to their subjects
 - keys are content-derived sha2 (functions.ids), so MERGE is idempotent
   across reruns and task retries.
 
-Table layout for scale (documented contract; the parquet fallback writes a
-plain layout, Iceberg DDL applies it): nodes bucketed by id (MERGE becomes
-a storage-partitioned join), edges partitioned by bucket(conv_id) so
-provenance queries prune.
+Table layout: the parquet catalog writes ``nodes`` and ``edges`` as plain,
+unpartitioned parquet tables (``merge_upsert`` rewrites each whole).  On
+the Iceberg backend, ``IcebergCatalog.create_table_ddl`` buckets a table on
+its merge key (``bucket(256, id)``), so a MERGE rewrites only the buckets
+it touches.
 """
 
 from __future__ import annotations

@@ -1,27 +1,22 @@
-"""Structured Streaming variant of the ingest→mention stage (SURVEY §2
-"Streaming", §7 M6).
+"""Stream mode (``--mode stream``): transcript chunk files into the
+mention MERGE sink.
 
 Reference correspondence: the ``-x`` "large file one line at a time" mode
-(/root/reference/StixToNeoDB.scala:53-55, README.md:78-82) is the
-reference's record-at-a-time, unbounded-input path — it executes as a
-blocking batch because a single JVM has no other option.  The Spark-native
-re-expression is Structured Streaming: ``readStream`` over the transcripts
-source, the SAME narrow transformations as batch S0→S2 (normalize + Arrow
-mention detection — one code path, two execution modes), watermarks for
-late turns, session/tumbling windows for rollups, and a ``foreachBatch``
-sink performing the same MERGE the batch pipeline uses (README.md:75
-append-to-existing semantics).
+(reference StixToNeoDB.scala:53-55, README.md:78-82) loads records as they
+arrive into the same store as the ``-f`` mode.  Here that is one
+Structured Streaming query of three parts:
 
-The judged path is batch (the DuckDB oracle cannot see streams); this
-module proves the mapping and is covered by tests/test_streaming.py using
-the file source with ``Trigger.AvailableNow`` so runs are deterministic
-and bounded.
+- ``read_transcript_stream``: a file-source ``readStream`` over a dir of
+  transcript chunk files, each new file a chunk of newly arrived turns;
+- ``streaming_mentions``: the batch S0→S2 code (normalize + Arrow mention
+  detection), run unchanged on the unbounded frame;
+- ``start_mention_merge_sink``: a ``foreachBatch`` sink that MERGEs each
+  micro-batch's mentions, keyed on content, into the bucketed
+  ``MENTION_TABLE`` (append-to-existing semantics, reference README.md:75).
 
-Scale notes: all stateful operators here key their state by small columns
-(window × entity_type, conv_id, (conv_id, turn_idx)); watermarks bound
-state size, so a 10^12-turn stream holds state only for the watermark
-horizon, not history.  `maxFilesPerTrigger` is the local backpressure
-analog of cluster rate limits.
+A re-delivered turn needs no dedup operator: its mentions carry the same
+content keys, and the sink's insert-if-absent MERGE drops them.
+``maxFilesPerTrigger`` bounds the input of one micro-batch.
 """
 
 from __future__ import annotations
@@ -59,189 +54,6 @@ def streaming_mentions(stream: DataFrame) -> DataFrame:
     streaming agree.
     """
     return extract.detect_mentions(assemble.normalize_turns(stream))
-
-
-def dedup_turns_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Stateful exact-once turn dedup within the watermark horizon.
-
-    The streaming analog of the reference's id-keyed MERGE (A9/A15): a turn
-    re-delivered by an at-least-once source is dropped if seen within the
-    watermark; state for keys older than the horizon is evicted, keeping
-    state size bounded by arrival rate × horizon.
-    """
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["conv_id", "turn_idx"]
-    )
-
-
-def windowed_mention_counts(
-    stream: DataFrame, watermark: str = "1 hour", window_dur: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling-window rollup: mentions per (window, entity_type).
-
-    Late turns beyond the watermark are dropped (counted by the source
-    metrics); the aggregation state is bounded by windows-in-horizon ×
-    entity types.  This is the streaming analog of the reference's logged
-    node counts (changes.md:39, A14).
-    """
-    turns = assemble.normalize_turns(stream).withWatermark("ts", watermark)
-    mentions = turns.select(
-        "ts", F.explode(extract.detect_mentions_udf(F.col("text"))).alias("m")
-    ).select("ts", F.col("m.entity_type").alias("entity_type"))
-    return (
-        mentions.groupBy(F.window("ts", window_dur).alias("win"), "entity_type")
-        .agg(F.count("*").alias("n_mentions"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "entity_type",
-            "n_mentions",
-        )
-    )
-
-
-def session_windowed_conversations(
-    stream: DataFrame, watermark: str = "1 hour", gap: str = "30 minutes"
-) -> DataFrame:
-    """Session windows per conv_id: a conversation 'closes' after ``gap``
-    of silence — the streaming analog of the bundle boundary (one STIX
-    bundle == one conversation, SURVEY §1.4).  Emits one row per closed
-    session with turn count and span."""
-    turns = assemble.normalize_turns(stream).withWatermark("ts", watermark)
-    return (
-        turns.groupBy(F.session_window("ts", gap).alias("sess"), "conv_id")
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            "conv_id",
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_turns",
-        )
-    )
-
-
-def conversation_progress_stream(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "10 seconds"
-) -> DataFrame:
-    """CUSTOM STATEFUL operator via ``applyInPandasWithState``: a running
-    per-conversation turn counter that survives across micro-batches.
-
-    This is the piece the built-in stateful operators can't express: the
-    dedup/windowing primitives keep engine-managed state, but a KG
-    ingest wants *user-defined* per-conversation accumulators (turns seen
-    so far, open/closed status) — the streaming analog of the reference's
-    id-indexed incremental MERGE (README.md:75, A9), with an EVENT-TIME
-    timeout playing the bundle-closed signal: once the watermark passes
-    ``last turn's event time + gap``, the conversation is finalized and
-    its state evicted.
-
-    Event-time (not processing-time) timeouts are load-bearing twice
-    over: (a) the close decision replays deterministically — a backfill
-    at 10× speed closes exactly the conversations a live run would,
-    because the clock is the data's, not the machine's; (b) under
-    ``Trigger.AvailableNow`` the query terminates — processing-time
-    timeouts keep scheduling empty timeout-check micro-batches after the
-    input drains (observed: hundreds of state-store versions and a
-    wedged query on Spark 4.1), while event-time timers can only fire
-    while data still advances the watermark.
-
-    Emits one progress row per (conversation, micro-batch) carrying the
-    cumulative and per-batch counts, and a final ``closed=true`` row when
-    the timeout fires.  State is one tiny tuple per OPEN conversation —
-    bounded by watermark-horizon concurrency, not history.
-    """
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql import types as T  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
-
-    out_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("n_turns_total", T.LongType()),
-            T.StructField("n_turns_batch", T.LongType()),
-            T.StructField("closed", T.BooleanType()),
-        ]
-    )
-    # State carries the running count AND the running max event-time: the
-    # close timer must be anchored to the conversation's latest turn seen
-    # over its WHOLE life, not the current micro-batch's max — an
-    # out-of-order batch (above the watermark but older than previously
-    # seen turns) would otherwise pull the timeout earlier and close the
-    # conversation less than ``gap`` after its true latest turn, breaking
-    # deterministic replay.
-    state_schema = T.StructType(
-        [T.StructField("n", T.LongType()), T.StructField("max_ts_ms", T.LongType())]
-    )
-    gap_ms = _duration_ms(gap)
-
-    def update(key, pdfs, state):
-        (conv_id,) = key
-        if state.hasTimedOut:
-            n, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "n_turns_total": [n],
-                    "n_turns_batch": [0],
-                    "closed": [True],
-                }
-            )
-            return
-        batch_n = 0
-        max_ts_ms = 0
-        for pdf in pdfs:
-            batch_n += len(pdf)
-            if len(pdf):
-                max_ts_ms = max(max_ts_ms, int(pdf["ts"].max().timestamp() * 1000))
-        prev_n, prev_max = state.get if state.exists else (0, 0)
-        total = prev_n + batch_n
-        max_ts_ms = max(max_ts_ms, prev_max)
-        state.update((total, max_ts_ms))
-        # the timeout must sit strictly beyond the current watermark (a
-        # fully-late straggler batch could otherwise set one in the past,
-        # which Spark rejects); such a conversation then closes on the
-        # next watermark advance — the correct semantic for data that
-        # arrived already beyond its close horizon.
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(max_ts_ms + gap_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "n_turns_total": [total],
-                "n_turns_batch": [batch_n],
-                "closed": [False],
-            }
-        )
-
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            update,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def _duration_ms(spec: str) -> int:
-    """Parse a Spark-style duration ('30 minutes', '10 seconds') to ms."""
-    qty, unit = spec.split()
-    factor = {
-        "millisecond": 1,
-        "milliseconds": 1,
-        "second": 1000,
-        "seconds": 1000,
-        "minute": 60_000,
-        "minutes": 60_000,
-        "hour": 3_600_000,
-        "hours": 3_600_000,
-        "day": 86_400_000,
-        "days": 86_400_000,
-    }[unit]
-    return int(qty) * factor
 
 
 def start_mention_merge_sink(stream: DataFrame, warehouse: str, checkpoint_dir: str):
@@ -286,294 +98,4 @@ def start_mention_merge_sink(stream: DataFrame, warehouse: str, checkpoint_dir: 
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def sliding_window_turn_rate(
-    stream: DataFrame,
-    watermark: str = "1 hour",
-    window_dur: str = "10 minutes",
-    slide: str = "5 minutes",
-) -> DataFrame:
-    """SLIDING-window rollup: turns per (window, role) where windows
-    overlap (each event lands in window_dur/slide windows) — the
-    monitoring-rate shape tumbling windows can't express (a spike must
-    show in the window it straddles, not split across two tumblers).
-
-    State cost is the tumbling cost × overlap factor; the watermark bounds
-    it the same way.  Built on the SAME normalize_turns path as batch.
-    """
-    turns = assemble.normalize_turns(stream).withWatermark("ts", watermark)
-    return (
-        turns.groupBy(F.window("ts", window_dur, slide).alias("win"), "role")
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "role",
-            "n_turns",
-        )
-    )
-
-
-def stream_interval_join(
-    stream: DataFrame,
-    watermark: str = "1 hour",
-    bound: str = "10 minutes",
-) -> DataFrame:
-    """STREAM-STREAM interval self-join: each user turn joined to the
-    assistant turns that answer it (same conversation, assistant event
-    time within [user_ts, user_ts + bound], later turn_idx) — the
-    question→response pairing every transcript-latency metric needs.
-
-    Both sides carry watermarks and the join predicate carries the time
-    bound, which is what lets Spark evict join state: a buffered user turn
-    can be dropped once the watermark passes ts + bound, an assistant turn
-    once it passes ts.  Without the interval condition the state grows
-    unboundedly — the bound is correctness AND the state contract.
-    """
-    turns = assemble.normalize_turns(stream)
-    left = (
-        turns.where(F.col("role") == "user")
-        .select(
-            F.col("conv_id").alias("l_conv"),
-            F.col("turn_idx").alias("user_turn_idx"),
-            F.col("ts").alias("user_ts"),
-        )
-        .withWatermark("user_ts", watermark)
-    )
-    right = (
-        turns.where(F.col("role") == "assistant")
-        .select(
-            F.col("conv_id").alias("r_conv"),
-            F.col("turn_idx").alias("assistant_turn_idx"),
-            F.col("ts").alias("assistant_ts"),
-        )
-        .withWatermark("assistant_ts", watermark)
-    )
-    joined = left.join(
-        right,
-        F.expr(
-            "l_conv = r_conv"
-            " AND assistant_ts >= user_ts"
-            f" AND assistant_ts <= user_ts + interval {bound}"
-            " AND assistant_turn_idx > user_turn_idx"
-        ),
-    )
-    return joined.select(
-        F.col("l_conv").alias("conv_id"),
-        "user_turn_idx",
-        "assistant_turn_idx",
-        (
-            F.unix_micros("assistant_ts") - F.unix_micros("user_ts")
-        ).alias("latency_us"),
-    )
-
-
-def stream_static_enrich(stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """STREAM-STATIC join: enrich the unbounded turn stream with a small
-    static dimension (role → routing weight here; gazetteer/tenant/config
-    tables in production).  The static side broadcasts — no streaming
-    state at all, the cheapest join in the streaming algebra, and the
-    batch plan is literally the same join."""
-    from pyspark.sql.functions import broadcast  # noqa: PLC0415
-
-    turns = assemble.normalize_turns(stream)
-    return turns.join(broadcast(dim), "role", "left").select(
-        "conv_id", "turn_idx", "role", "ts", "weight"
-    )
-
-
-def start_heavy_hitters_sink(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    capacity: int = 64,
-):
-    """foreachBatch sink maintaining a RUNNING Misra-Gries heavy-hitters
-    sketch over the stream's mention surfaces — the streaming face of
-    ``pandas_surface.mg_sketch``.  Mergeability (Agarwal et al. 2012) is
-    exactly what makes a stream sketch correct:
-    sketch(prefix + batch) ⊒ merge(sketch(prefix), sketch(batch)), with
-    the same freq > n/(capacity+1) retention guarantee over the whole
-    prefix.
-
-    Per micro-batch: sketch the batch distributed (map-side partials,
-    one bounded merge task), weighted-merge with the newest persisted
-    sketch version, and write the result as
-    ``{state_dir}/v<batch_id>`` — versioning BY BATCH ID makes replay
-    idempotent: a re-delivered batch rewrites its own version from the
-    same predecessor state instead of double-counting (the
-    exactly-once discipline the MERGE sink uses, expressed for a
-    non-idempotent aggregate).  State size is ≤ capacity rows per
-    version — reading and rewriting it is O(capacity), never O(stream).
-
-    Returns the StreamingQuery (AvailableNow; caller awaits).
-    """
-    import os  # noqa: PLC0415
-
-    from stixtoneodb_spark.operators.pandas_surface import mg_sketch  # noqa: PLC0415
-
-    def _versions(spark: SparkSession) -> list[int]:
-        try:
-            names = [
-                n for n in os.listdir(state_dir)
-                if n.startswith("v") and n[1:].isdigit()
-            ]
-        except FileNotFoundError:
-            return []
-        return sorted(int(n[1:]) for n in names)
-
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tok = batch_df.select(F.col("surface").alias("token"))
-        batch_sketch = mg_sketch(tok, capacity)
-        prev = [v for v in _versions(spark) if v < batch_id]
-        if prev:
-            prior = spark.read.parquet(f"{state_dir}/v{prev[-1]}")
-            merged_in = batch_sketch.unionByName(prior)
-        else:
-            merged_in = batch_sketch
-        from stixtoneodb_spark.operators.pandas_surface import (  # noqa: PLC0415
-            mg_merge_summaries,
-        )
-
-        merged = mg_merge_summaries(merged_in, capacity)
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id}"
-        )
-
-    mentions = streaming_mentions(stream)
-    return (
-        mentions.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_heavy_hitters_state(
-    spark: SparkSession, state_dir: str
-) -> DataFrame:
-    """Newest persisted sketch version (empty frame when none exists)."""
-    import os  # noqa: PLC0415
-
-    try:
-        versions = sorted(
-            int(n[1:]) for n in os.listdir(state_dir)
-            if n.startswith("v") and n[1:].isdigit()
-        )
-    except FileNotFoundError:
-        versions = []
-    if not versions:
-        return spark.createDataFrame([], schema="token string, w long")
-    return spark.read.parquet(f"{state_dir}/v{versions[-1]}")
-
-
-def conversation_progress_stream_tws(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "10 seconds"
-) -> DataFrame:
-    """``transformWithStateInPandas`` successor of
-    ``conversation_progress_stream`` — Spark 4's replacement for
-    ``applyInPandasWithState`` (SPARK-46815 / the transformWithState
-    operator family), kept spec-identical so the equivalence test in
-    tests/test_streaming.py pins both implementations to one output.
-
-    Deployment requirements (both verified absent in this sandbox, so
-    the test skips with reason): the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``), and
-    ``google.protobuf`` on the driver — the transformWithState driver
-    worker speaks a protobuf state-server protocol and fails schema
-    pre-init without it.  ``conversation_progress_stream`` remains the
-    executable tier here.
-
-    Mapping from the legacy API:
-
-    - GroupState tuple        → ``ValueState`` ("progress", n + max_ts_ms)
-    - setTimeoutTimestamp     → explicit ``registerTimer`` (EventTime mode)
-      with the same strictly-beyond-watermark clamp; the PREVIOUS timer is
-      deleted first — transformWithState timers accumulate per key, they
-      are not single-slot like GroupState's timeout
-    - state.hasTimedOut branch → ``handleExpiredTimer`` (emits the final
-      closed=true row, clears state); a timer can fire after the close
-      already happened only if we failed to delete it — the delete-first
-      discipline above keeps one live timer per conversation
-    - state.remove()          → ``state.clear()``
-    """
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql import types as T  # noqa: PLC0415
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("n_turns_total", T.LongType()),
-            T.StructField("n_turns_batch", T.LongType()),
-            T.StructField("closed", T.BooleanType()),
-        ]
-    )
-    gap_ms = _duration_ms(gap)
-
-    class ConvProgress(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState(
-                "progress", "n bigint, max_ts_ms bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (conv_id,) = key
-            batch_n = 0
-            max_ts_ms = 0
-            for pdf in rows:
-                batch_n += len(pdf)
-                if len(pdf):
-                    max_ts_ms = max(
-                        max_ts_ms, int(pdf["ts"].max().timestamp() * 1000)
-                    )
-            prev = self.state.get() if self.state.exists() else (0, 0)
-            total = prev[0] + batch_n
-            max_ts_ms = max(max_ts_ms, prev[1])
-            self.state.update((total, max_ts_ms))
-            # one live timer per conversation: drop the previous close
-            # timer, then arm the new one strictly beyond the watermark
-            # (same clamp + rationale as the legacy implementation)
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            self.handle.registerTimer(max(max_ts_ms + gap_ms, wm_ms + 1))
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "n_turns_total": [total],
-                    "n_turns_batch": [batch_n],
-                    "closed": [False],
-                }
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (conv_id,) = key
-            n = self.state.get()[0] if self.state.exists() else 0
-            self.state.clear()
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "n_turns_total": [n],
-                    "n_turns_batch": [0],
-                    "closed": [True],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            ConvProgress(), out_schema, "Append", "EventTime"
-        )
     )

@@ -282,6 +282,62 @@ def test_sweep_staging_scoped_spares_concurrent_writer(catalog):
     assert os.path.exists(other), "scoped sweep deleted a concurrent writer's staging"
 
 
+def _kill_between_swap_renames(monkeypatch):
+    """Make the second rename of the next swap raise: it moves the staged
+    ``<x>.tmp-<hex>`` dir into place after the old copy was renamed away."""
+    import re
+
+    real_rename = catalog_mod.os.rename
+
+    def rename(src, dst):
+        if re.search(r"\.tmp-[0-9a-f]{8}$", str(src)):
+            raise OSError("killed between the swap renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(catalog_mod.os, "rename", rename)
+
+
+def test_merge_killed_between_swap_renames_loses_no_row(spark, catalog, monkeypatch):
+    """A whole-table swap killed after it renamed the table away leaves the
+    table absent; the sweep renames the old copy back and the replayed
+    merge adds only the new row."""
+    old = [(f"k{i}", i) for i in range(10)]
+    catalog.merge_upsert("t", spark.createDataFrame(old, "id string, val int"), "id")
+    batch = spark.createDataFrame([("k0", 99), ("new", 10)], "id string, val int")
+    with monkeypatch.context() as m, pytest.raises(OSError):
+        _kill_between_swap_renames(m)
+        catalog.merge_upsert("t", batch, "id")
+    assert not os.path.exists(catalog._path("t"))
+
+    catalog.sweep_staging(tables=["t"])
+    catalog.merge_upsert("t", batch, "id")
+    assert _rows(catalog, "t") == set(old) | {("new", 10)}
+    assert os.listdir(os.path.join(catalog.warehouse, "_staging")) == []
+
+
+def test_bucket_compaction_killed_between_swap_renames_loses_no_row(
+    spark, catalog, monkeypatch
+):
+    """A bucket compaction killed after it renamed the bucket away leaves
+    that bucket absent; the sweep renames the old copy back and the
+    replayed merge inserts only the rows still missing."""
+    monkeypatch.setattr(catalog_mod, "BUCKET_MAX_FILES", 1)
+    nb = 2
+    first = [(f"k{i}", i) for i in range(40)]
+    second = [(f"k{i}", i) for i in range(40, 80)]
+    catalog.merge_upsert_bucketed("t", spark.createDataFrame(first, "id string, val int"), "id", nb)
+    batch = spark.createDataFrame(second, "id string, val int")
+    with monkeypatch.context() as m, pytest.raises(OSError):
+        _kill_between_swap_renames(m)
+        catalog.merge_upsert_bucketed("t", batch, "id", nb)
+    assert not os.path.exists(os.path.join(catalog._path("t"), "bucket=0"))
+
+    catalog.sweep_staging(tables=["t"])
+    catalog.merge_upsert_bucketed("t", batch, "id", nb)
+    got = sorted((r.id, r.val) for r in catalog.read_bucketed("t").collect())
+    assert got == sorted(first + second)
+
+
 def test_iceberg_merge_sql_parses(spark):
     """The IcebergCatalog MERGE statement can't execute here (no Iceberg
     jar), but its TEXT must at least be valid Spark SQL: capture it via a
