@@ -32,7 +32,12 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="stixtoneodb_spark")
     p.add_argument("--input", required=True, help="transcripts parquet path or table")
     p.add_argument("--warehouse", required=True, help="output warehouse dir / catalog")
-    p.add_argument("--run-id", default="run-0", help="resume key for checkpointed stages")
+    p.add_argument(
+        "--run-id",
+        default="run-0",
+        help="batch resume key: a batch rerun with the same id resumes from its last "
+        "completed stage (stream mode resumes from its checkpoint instead)",
+    )
     p.add_argument(
         "--mode",
         choices=["batch", "stream"],
@@ -43,6 +48,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--export-graphml", default=None, metavar="PATH", help="also export GraphML document")
     p.add_argument("--export-cypher", default=None, metavar="PATH", help="also export Cypher statements")
     args = p.parse_args(argv)
+    # stream mode drains mentions only: it builds no graph to export
+    exports = {"--export-graphml": args.export_graphml, "--export-cypher": args.export_cypher}
+    for flag, path in exports.items():
+        if args.mode == "stream" and path:
+            p.error(f"argument {flag}: not allowed with --mode stream")
 
     from stixtoneodb_spark.session import get_spark
 

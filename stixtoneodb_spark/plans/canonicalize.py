@@ -163,7 +163,7 @@ def _idf(n: Column, df: Column) -> Column:
 
 def normalize_mentions(mentions: DataFrame) -> DataFrame:
     """Attach normalized name + content key to each mention."""
-    return mentions.withColumn("name", canonical_name(F.col("surface"))).where(
+    return mentions.withColumn("name", canonical_name("surface")).where(
         F.length("name") > 0
     )
 
@@ -800,7 +800,8 @@ def canonical_map(
         return attach_canonical(names, exc).select("name", "canonical_id", "canonical_label")
     # Driver tier: the pairs come back as a local relation (collecting it
     # starts no job); the gazetteer is bounded — the distributed tier
-    # broadcasts its endpoint set — so it is collected whole.
+    # broadcasts its endpoint set — so it is collected whole (also without
+    # a job: alias_edges_df returns a local relation).
     universe = feats.table["name"].combine_chunks()
     edges = [(r["name_a"], r["name_b"]) for r in candidate_pairs(feats, threshold).collect()]
     if alias_edges is not None:

@@ -35,8 +35,8 @@ def triple_pr(linked: DataFrame, truth: DataFrame, canon: DataFrame) -> PRResult
 
     truth_live = truth.where(~F.col("dangling"))
     t = (
-        truth_live.withColumn("subj_name", canonical_name(F.col("subj_canonical")))
-        .withColumn("obj_name", canonical_name(F.col("obj_canonical")))
+        truth_live.withColumn("subj_name", canonical_name("subj_canonical"))
+        .withColumn("obj_name", canonical_name("obj_canonical"))
         .join(cmap.withColumnRenamed("name", "subj_name").withColumnRenamed("canonical_id", "t_subj"), "subj_name", "left")
         .join(cmap.withColumnRenamed("name", "obj_name").withColumnRenamed("canonical_id", "t_obj"), "obj_name", "left")
         .select(

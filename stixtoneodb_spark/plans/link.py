@@ -155,8 +155,8 @@ def link_triples(
     instead of serializing the exchange on the hot name, and the plan
     stays one pass over the triple stream per endpoint.
     """
-    t = triples.withColumn("subj_name", canonical_name(F.col("subj_text"))).withColumn(
-        "obj_name", canonical_name(F.col("obj_text"))
+    t = triples.withColumn("subj_name", canonical_name("subj_text")).withColumn(
+        "obj_name", canonical_name("obj_text")
     )
 
     def _dict_join(stream: DataFrame, mapdf: DataFrame, key: str) -> DataFrame:

@@ -5,7 +5,9 @@ its only scale concession is line-at-a-time reading (README.md:78-82).  Our
 replacement pushes everything through Catalyst/Tungsten, so the session
 defaults matter: AQE on (runtime re-plan + skew-join splitting), Arrow on
 (vectorized pandas-UDF transfer), shuffle partitions sized to the target
-parallelism rather than the 200 default.
+parallelism rather than the 200 default, and a codegen cache that holds
+every generated class of one graph build, so a later build in the same
+session compiles nothing.
 """
 
 from __future__ import annotations
@@ -14,6 +16,18 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+# Entries of Spark's generated-code cache (spark.sql.codegen.cache.maxEntries,
+# a static SQL conf, default 100).  One graph build generates ~120 distinct
+# classes, so at the default every later build in the session evicts and
+# recompiles most of them: on the 50-conversation test corpus (local[8],
+# 4-core host) the 2nd and 3rd KgPipeline.run in a process compiled 93 and
+# 93 classes (CodegenMetrics compile count), and 0 and 0 at 1000.  With the
+# cache alone, kgbench graph-build (10k turns, 4 cores, seed 1, 4
+# alternating pairs) went from a turns_per_s median of 1773 to 2169 and a
+# batch_s_p50 median of 5.66 to 4.64 s; setup_s, peak RSS and stream-drain
+# did not move.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def parallel_gc_threads(cores: int) -> int:
@@ -200,6 +214,7 @@ def get_spark(
         # imposes a core-count-independent I/O floor that distorts local
         # scaling measurements.  tmpfs is the sandbox stand-in.
         .config("spark.local.dir", _local_dir())
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

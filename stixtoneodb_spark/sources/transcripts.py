@@ -24,9 +24,12 @@ import random
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from stixtoneodb_spark.functions.textfns import canonical_name
 
 # ---------------------------------------------------------------------------
 # Gazetteer: vocabulary mirrors the STIX SDO types of the reference corpus
@@ -186,6 +189,11 @@ def truth_triples_df(spark: SparkSession, n_conversations: int, seed: int = 42) 
     return spark.createDataFrame(corpus.truth_triples, TRUTH_TRIPLE_SCHEMA)
 
 
+# The gazetteer's canonical (name_a, name_b) alias pairs, sorted; set by
+# the first ``alias_edges_df`` call in the process.
+_ALIAS_PAIRS: tuple[tuple[str, str], ...] | None = None
+
+
 def alias_edges_df(spark: SparkSession) -> DataFrame:
     """Known-alias edge list from the gazetteer (normalized surface pairs).
 
@@ -193,19 +201,31 @@ def alias_edges_df(spark: SparkSession) -> DataFrame:
     entity's surface variants are linked a priori; canonicalization unions
     these edges with LSH-discovered similarity edges before connected
     components.
-    """
-    from stixtoneodb_spark.functions.textfns import canonical_name  # noqa: PLC0415
 
-    rows = []
-    for canon, (_etype, surfaces) in GAZETTEER.items():
-        forms = list(dict.fromkeys([canon, *surfaces]))
-        rows.extend((forms[0], s) for s in forms[1:])
-    df = spark.createDataFrame(rows, "name_a string, name_b string")
-    return (
-        df.select(
-            canonical_name(F.col("name_a")).alias("name_a"),
-            canonical_name(F.col("name_b")).alias("name_b"),
+    The pairs are ``canonical_name`` of each (canonical form, surface
+    variant), without self-pairs or duplicates.  The gazetteer is a
+    constant, so the first call in a process computes them with Spark and
+    keeps them as plain tuples, tied to no session.  Every call returns
+    them as an Arrow local relation, so collecting it (``canonical_map``
+    does, on every graph build) starts no job.
+    """
+    global _ALIAS_PAIRS
+    if _ALIAS_PAIRS is None:
+        rows = []
+        for canon, (_etype, surfaces) in GAZETTEER.items():
+            forms = list(dict.fromkeys([canon, *surfaces]))
+            rows.extend((forms[0], s) for s in forms[1:])
+        pairs = (
+            spark.createDataFrame(rows, "name_a string, name_b string")
+            .select(
+                canonical_name("name_a").alias("name_a"),
+                canonical_name("name_b").alias("name_b"),
+            )
+            .where(F.col("name_a") != F.col("name_b"))
+            .collect()
         )
-        .where(F.col("name_a") != F.col("name_b"))
-        .distinct()
+        _ALIAS_PAIRS = tuple(sorted({(r["name_a"], r["name_b"]) for r in pairs}))
+    name_a, name_b = zip(*_ALIAS_PAIRS)
+    return spark.createDataFrame(
+        pa.table({"name_a": pa.array(name_a, pa.string()), "name_b": pa.array(name_b, pa.string())})
     )

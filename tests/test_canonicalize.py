@@ -166,6 +166,7 @@ def test_canonical_name_translate_equals_regex_and_array_forms(spark):
     from pyspark.sql import functions as F
 
     from stixtoneodb_spark.functions.textfns import (
+        _PUNCT,
         canonical_name,
         canonical_name_hof,
         canonical_name_regex,
@@ -185,17 +186,21 @@ def test_canonical_name_translate_equals_regex_and_array_forms(spark):
          # these — the operator must route them to the regex form so the
          # documented strip-[^a-z0-9 ] semantics hold for every input
          ("Café Corp",), ("naïve systems",), ("Ωmega-Bank",),
-         ("ACMÉ—Group",), ("日本 acme 株式会社",), ("ascii and émoji 🚀 mix",)],
+         ("ACMÉ—Group",), ("日本 acme 株式会社",), ("ascii and émoji 🚀 mix",),
+         # SQL string-literal hazards: quotes, a backslash, every
+         # translate-alphabet character (control characters included), null
+         ("O'Brien's Group",), ("back\\slash corp",), (f"x{_PUNCT}y",), (None,)],
         "surface string",
     )
     both = surfaces.unionByName(crafted).select(
         "surface",
-        canonical_name(F.col("surface")).alias("tr_form"),
+        canonical_name("surface").alias("tr_form"),
         canonical_name_regex(F.col("surface")).alias("re_form"),
         canonical_name_hof(F.col("surface")).alias("arr_form"),
     )
     bad = both.where(
-        (F.col("tr_form") != F.col("re_form")) | (F.col("tr_form") != F.col("arr_form"))
+        ~F.col("tr_form").eqNullSafe(F.col("re_form"))
+        | ~F.col("tr_form").eqNullSafe(F.col("arr_form"))
     )
     assert bad.count() == 0, bad.limit(5).collect()
 
@@ -332,7 +337,7 @@ def test_tiers_agree_on_benchmark_corpora(spark, monkeypatch, tmp_path, seed):
 def test_s3_stage_job_budget(spark, mentions50, tmp_path):
     """The S3 stage as the pipeline runs it — its map written and read
     back — starts at most five Spark jobs on the driver tier."""
-    aliases = alias_edges_df(spark).cache()
+    aliases = alias_edges_df(spark)
     pipe = KgPipeline(spark, str(tmp_path / "wh"))
     pipe.catalog.overwrite("mentions", mentions50)
     mentions = pipe.catalog.read("mentions")
@@ -344,3 +349,30 @@ def test_s3_stage_job_budget(spark, mentions50, tmp_path):
         lambda: C.canonical_map(mentions, alias_edges=aliases),
     )
     assert jobs <= 5
+
+
+def test_gazetteer_alias_edges_are_a_process_constant(spark):
+    """``alias_edges_df`` computes the gazetteer's pairs once per process:
+    a later call's collect starts no Spark job, and its rows equal
+    ``canonical_name`` over every (canonical form, surface variant) pair,
+    self-pairs dropped, distinct."""
+    from stixtoneodb_spark.functions.textfns import canonical_name
+    from stixtoneodb_spark.sources.transcripts import GAZETTEER
+
+    alias_edges_df(spark).collect()
+    got, jobs = count_jobs(spark, lambda: alias_edges_df(spark).collect())
+    assert jobs == 0
+    raw = [
+        (canon, s)
+        for canon, (_etype, surfaces) in GAZETTEER.items()
+        for s in surfaces
+    ]
+    want = (
+        spark.createDataFrame(raw, "name_a string, name_b string")
+        .select(canonical_name("name_a").alias("name_a"), canonical_name("name_b").alias("name_b"))
+        .where(F.col("name_a") != F.col("name_b"))
+        .distinct()
+        .collect()
+    )
+    assert len(got) == len({tuple(r) for r in got})
+    assert {tuple(r) for r in got} == {tuple(r) for r in want}

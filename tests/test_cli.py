@@ -99,6 +99,23 @@ def test_cli_stream_mode(spark, corpus_path, tmp_path, capsys):
     assert _data_files(catalog._path(MENTION_TABLE)) == files
 
 
+@pytest.mark.parametrize("flag", ["--export-graphml", "--export-cypher"])
+def test_cli_stream_mode_rejects_export_flags(tmp_path, capsys, monkeypatch, flag):
+    """Stream mode builds no graph, so an export flag with it is a usage
+    error: argparse exits 2 naming the flag before any session starts."""
+    import stixtoneodb_spark.session as session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    argv = ["--input", "in", "--warehouse", str(tmp_path / "wh"), "--mode", "stream"]
+    with pytest.raises(SystemExit) as exit_:
+        main([*argv, flag, str(tmp_path / "out")])
+    assert exit_.value.code == 2
+    assert flag in capsys.readouterr().err
+
+
 def test_spark_submit_py_files_end_to_end(tmp_path):
     """REAL ``spark-submit --py-files stixtoneodb_spark.zip`` launch (the
     north rule's mandated invocation): the package is zipped, the job runs

@@ -52,7 +52,7 @@ def stage_rows(metrics: dict) -> set[str]:
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    return transcripts_df(spark, N_CONV).cache(), alias_edges_df(spark).cache()
+    return transcripts_df(spark, N_CONV).cache(), alias_edges_df(spark)
 
 
 def run_counting_reads(spark, pipe, tr, aliases):

@@ -43,7 +43,7 @@ def corpus(spark):
     return (
         transcripts_df(spark, N_CONV).cache(),
         truth_triples_df(spark, N_CONV).cache(),
-        alias_edges_df(spark).cache(),
+        alias_edges_df(spark),
     )
 
 
@@ -203,6 +203,25 @@ def test_graph_matches_pinned_rows(spark, result):
     values recorded before the dataflow was rewritten."""
     pipe, _ = result
     assert graph_signature(pipe.catalog) == PINNED_GRAPH
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    metrics = getattr(spark.sparkContext._jvm.org.apache.spark.metrics.source, "CodegenMetrics$")
+    return metrics.__getattr__("MODULE$").METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_build_compiles_no_generated_code(spark, corpus, tmp_path_factory):
+    """A second graph build in the session finds every generated class of
+    the first in Spark's codegen cache (session.CODEGEN_CACHE_ENTRIES), so
+    it compiles none; at Spark's 100-entry default it recompiles most."""
+    tr, _, aliases = corpus
+    for i in range(2):
+        before = codegen_compiles(spark)
+        KgPipeline(spark, str(tmp_path_factory.mktemp(f"wh_codegen{i}")), run_id="t1").run(
+            tr, alias_edges=aliases
+        )
+    assert codegen_compiles(spark) - before == 0
 
 
 def test_append_equals_union_build(spark, corpus, tmp_path_factory):
