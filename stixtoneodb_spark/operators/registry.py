@@ -24,7 +24,6 @@ from stixtoneodb_spark.operators import (
     evals,
     graph,
     multimodal,
-    pandas_surface,
     relational,
     similarity,
     text,
@@ -1122,31 +1121,6 @@ SELECT vec_id,
 FROM codes
 """,
     ),
-    # ---- pandas-UDF API completion tier (GROUPED_AGG UDAF + cogroup) ----
-    # Lower median = order statistic at 1-indexed (n+1)//2 after sort:
-    # pure selection, bit-identical across engines (see pandas_surface.py
-    # module docstring for why interpolated medians were rejected).
-    "agg_event_value_spread": (
-        pandas_surface.agg_event_value_spread,
-        """
-WITH s AS (
-  SELECT event_type, list_sort(list(value)) AS vals, COUNT(*) AS n
-  FROM events GROUP BY event_type
-), m AS (
-  SELECT event_type, n, vals[CAST((n + 1) // 2 AS INT)] AS med FROM s
-), d AS (
-  SELECT e.event_type, abs(e.value - m.med) AS dev
-  FROM events e JOIN m USING (event_type)
-), s2 AS (
-  SELECT event_type, list_sort(list(dev)) AS dvals, COUNT(*) AS n
-  FROM d GROUP BY event_type
-)
-SELECT m.event_type, m.n AS n_events,
-  round(m.med, 6) AS med_value,
-  round(s2.dvals[CAST((s2.n + 1) // 2 AS INT)], 6) AS mad_value
-FROM m JOIN s2 USING (event_type)
-""",
-    ),
     # Okapi BM25 with the rational (log-free) Robertson idf and per-term
     # contributions floored to integer micro-units BEFORE the sum — an
     # integer sum is order-independent, so the hash compare is exact (the
@@ -1189,24 +1163,6 @@ SELECT doc_id, n_terms, CAST(score_micro AS BIGINT) AS score_micro, rk FROM (
 ) WHERE rk <= {text.BM25_TOP_K}
 """,
     ),
-    # the sketch is exact in the no-eviction regime (MG_CAPACITY >= corpus
-    # vocabulary), so retained_by_sketch is deterministically TRUE and the
-    # oracle checks that equality; the eviction-regime guarantee is pinned
-    # by planted property tests
-    "agg_heavy_hitters_contract": (
-        pandas_surface.agg_heavy_hitters_contract,
-        f"""
-WITH tok AS (
-  SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents
-), exact AS (
-  SELECT token, COUNT(*) AS freq FROM tok WHERE length(token) > 0
-  GROUP BY token
-)
-SELECT token, freq, TRUE AS retained_by_sketch FROM (
-  SELECT *, ROW_NUMBER() OVER (ORDER BY freq DESC, token) AS rn FROM exact
-) WHERE rn <= {pandas_surface.HH_TOP_J}
-""",
-    ),
     "retention_cohorts": (
         relational.retention_cohorts,
         f"""
@@ -1223,23 +1179,6 @@ SELECT f.cohort_day,
 FROM act a JOIN first f USING (user_id)
 WHERE date_diff('day', f.cohort_day, a.d) <= {relational.RETENTION_MAX_OFFSET}
 GROUP BY f.cohort_day, day_offset
-""",
-    ),
-    "join_cogroup_conversion": (
-        pandas_surface.join_cogroup_conversion,
-        """
-WITH c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
-     p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
-     u AS (SELECT DISTINCT user_id FROM events
-           WHERE event_type IN ('click', 'purchase'))
-SELECT u.user_id,
-  (SELECT COUNT(*) FROM c WHERE c.user_id = u.user_id) AS n_clicks,
-  (SELECT COUNT(*) FROM p WHERE p.user_id = u.user_id) AS n_purchases,
-  (SELECT COUNT(*) FROM p WHERE p.user_id = u.user_id
-     AND EXISTS (SELECT 1 FROM c
-                 WHERE c.user_id = p.user_id AND c.ts <= p.ts))
-    AS n_converted
-FROM u
 """,
     ),
     "kg_pmi_edge_weights": (
@@ -1691,7 +1630,7 @@ WITH m AS (
 )
 SELECT o.a AS src, o.b AS dst,
        COUNT(*) AS n_common,
-       SUM(1000000 // d.deg) AS ra_score_ppm
+       CAST(SUM(1000000 // d.deg) AS BIGINT) AS ra_score_ppm
 FROM open_w o JOIN deg d ON d.z = o.z
 GROUP BY o.a, o.b
 """,
@@ -1820,11 +1759,12 @@ WITH toks AS (
         GROUP BY doc_id, gram)
   GROUP BY doc_id
 )
-SELECT u.doc_id, u.n_tokens,
-       u.top_c * 1000000 // u.n_tokens AS top_token_ppm,
+SELECT u.doc_id, CAST(u.n_tokens AS BIGINT) AS n_tokens,
+       CAST(u.top_c * 1000000 // u.n_tokens AS BIGINT) AS top_token_ppm,
        CAST(coalesce(b.dup_2grams * 1000000 // b.n_2grams, 0) AS BIGINT)
          AS dup_2gram_ppm,
-       u.n_distinct * 1000000 // u.n_tokens AS distinct_ratio_ppm
+       CAST(u.n_distinct * 1000000 // u.n_tokens AS BIGINT)
+         AS distinct_ratio_ppm
 FROM uni u LEFT JOIN bi b ON b.doc_id = u.doc_id
 """,
 )
@@ -1865,7 +1805,8 @@ REGISTRY["window_rolling_range_sum"] = (
     relational.window_rolling_range_sum,
     f"""
 SELECT event_id, user_id,
-       SUM(CAST(floor(value * 100) AS BIGINT)) OVER w AS trailing_cents,
+       CAST(SUM(CAST(floor(value * 100) AS BIGINT)) OVER w AS BIGINT)
+         AS trailing_cents,
        COUNT(*) OVER w AS n_trailing
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)
@@ -1905,7 +1846,7 @@ WITH seq AS (
   SELECT src_type, SUM(n_transitions) AS n_from_src FROM pairs GROUP BY src_type
 )
 SELECT p.src_type, p.dst_type, p.n_transitions,
-       p.n_transitions * 1000000 // t.n_from_src AS prob_ppm
+       CAST(p.n_transitions * 1000000 // t.n_from_src AS BIGINT) AS prob_ppm
 FROM pairs p JOIN totals t USING (src_type)
 """,
 )

@@ -4076,8 +4076,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variance-homogeneity readout: per event type, the F ratio of its
     value variance to the variance of ALL OTHER types pooled — the
-    gate before any pooled-variance test (the A/B z-test included)
-    and the dispersion companion to agg_event_value_spread.
+    gate before any pooled-variance test (the A/B z-test included).
 
     Exact integer moments both sides (n·Σx² − (Σx)² cross-multiplied
     form over floor(value+0.5) ints); the final F is one shared

@@ -94,10 +94,8 @@ def _master_cores(master: str) -> int:
 
 
 def _local_dir() -> str:
-    """Scratch dir for shuffle/spill: tmpfs if present, else /tmp."""
-    override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if override:
-        return override
+    """Scratch dir for shuffle/spill: tmpfs if present, else /tmp.
+    Spark's own ``SPARK_LOCAL_DIRS`` overrides it."""
     if os.path.isdir("/dev/shm"):
         d = "/dev/shm/spark-local"
         os.makedirs(d, exist_ok=True)
