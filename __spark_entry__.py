@@ -53,7 +53,7 @@ _DRIVER_CHECKED_PRIOR = frozenset({
     "text_lang_id", "text_fingerprint", "text_ngram_top",
     "kg_mentions_sql_portable", "kg_cooccurrence", "text_tfidf_top_terms",
     "corpus_sample_stratified", "dedup_cluster_components", "kg_pagerank",
-    "media_decode_stats", "topk_global_sort",
+    "topk_global_sort",
 })
 
 # Flagships worth an official re-check every round.

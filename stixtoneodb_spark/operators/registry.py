@@ -10,7 +10,10 @@ Oracle-parity rules (mirrored in operators/relational.py):
 - identical aliases both sides;
 - money aggregates: exact DECIMAL(18,2) sums → ROUND(.., 2) on the decimal
   → cast DOUBLE (bit-stable across engines and partition orders);
-- ranking windows always carry a unique tie-break column.
+- ranking windows always carry a unique tie-break column;
+- integer sums (and integer arithmetic over them) → CAST(.. AS BIGINT):
+  DuckDB's SUM over integers is HUGEINT (Arrow decimal128(38,0)), which
+  never hashes equal to Spark's int64; the cast raises on overflow.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ from stixtoneodb_spark.operators import (
     dedup,
     evals,
     graph,
-    multimodal,
     relational,
     similarity,
     text,
@@ -922,64 +924,6 @@ SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u
 """,
     ),
     "kg_pagerank": (graph.kg_pagerank, _pagerank_sql()),
-    # ---- multimodal: REAL codec-free decode, closed-form oracle ----
-    # The synthetic decodable payloads are deterministic functions of
-    # doc_id, so DuckDB reproduces the DECODED stats arithmetically —
-    # a true cross-engine check on the numpy BMP/WAV decoders.
-    "media_decode_stats": (
-        multimodal.media_decode_stats,
-        """
-WITH ys AS (SELECT y FROM generate_series(0, 28) AS t(y)),
-img AS (
-  SELECT d.doc_id,
-         CAST(SUM((ys.y * 7 + d.doc_id) % 256) * (23 + d.doc_id % 7) AS BIGINT) AS c0_sum
-  FROM documents d JOIN ys ON ys.y <= 16 + d.doc_id % 13
-  WHERE d.doc_id % 2 = 0
-  GROUP BY d.doc_id
-)
-SELECT d.doc_id,
-  CASE WHEN d.doc_id % 2 = 0 THEN 'bmp' ELSE 'wav' END AS kind,
-  CASE WHEN d.doc_id % 2 = 0 THEN CAST(17 + d.doc_id % 13 AS BIGINT) END AS height,
-  CASE WHEN d.doc_id % 2 = 0 THEN CAST(23 + d.doc_id % 7 AS BIGINT) END AS width,
-  img.c0_sum AS c0_sum,
-  CASE WHEN d.doc_id % 2 = 1 THEN CAST(2000 + d.doc_id % 500 AS BIGINT) END AS n_samples
-FROM documents d LEFT JOIN img ON d.doc_id = img.doc_id
-ORDER BY d.doc_id
-""",
-    ),
-    "media_resize_stats": (
-        multimodal.media_resize_stats,
-        f"""
-WITH d AS (
-  SELECT doc_id, 17 + doc_id % 13 AS h, 23 + doc_id % 7 AS w
-  FROM documents WHERE doc_id % 2 = 0
-), ij AS (
-  SELECT a.i, b.j
-  FROM generate_series(0, {multimodal.RESIZE_STATS_OUT - 1}) a(i),
-       generate_series(0, {multimodal.RESIZE_STATS_OUT - 1}) b(j)
-), px AS (
-  SELECT d.doc_id,
-    (((ij.i * d.h) // {multimodal.RESIZE_STATS_OUT}) * 7 + d.doc_id) % 256 AS c0,
-    (((ij.j * d.w) // {multimodal.RESIZE_STATS_OUT}) * 11) % 256 AS c1,
-    (((ij.i * d.h) // {multimodal.RESIZE_STATS_OUT})
-     + ((ij.j * d.w) // {multimodal.RESIZE_STATS_OUT})) % 256 AS c2
-  FROM d, ij
-)
-SELECT doc_id,
-  CAST({multimodal.RESIZE_STATS_OUT} AS INT) AS out_h,
-  CAST({multimodal.RESIZE_STATS_OUT} AS INT) AS out_w,
-  CAST(SUM(c0) AS BIGINT) AS c0_sum,
-  CAST(SUM(c1) AS BIGINT) AS c1_sum,
-  CAST(SUM(c2) AS BIGINT) AS c2_sum
-FROM px GROUP BY doc_id
-""",
-    ),
-    # ---- multimodal plumbing ----
-    "media_metadata": (
-        multimodal.media_metadata_oracle_view,
-        "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
-        "sha256(text) AS digest FROM documents",
-    ),
     "agg_grouping_sets": (
         relational.agg_grouping_sets,
         """
@@ -1257,64 +1201,6 @@ SELECT doc_id, lang, n_chars,
        CAST(ROW_NUMBER() OVER (ORDER BY priority DESC, doc_id) AS INT)
          AS sample_rank
 FROM scored ORDER BY priority DESC, doc_id LIMIT {text.PRIORITY_SAMPLE_K}
-""",
-    ),
-    # Closed-form replay of the PNG decode stats: height/width from the
-    # synth rule; c0 depends only on y (sum = w * Σ_y) and c1 only on x
-    # (sum = h * Σ_x) — any decode drift breaks these exact integers.
-    "media_decode_stats_png": (
-        multimodal.media_decode_stats_png,
-        """
-WITH ys AS (SELECT y FROM generate_series(0, 18) AS t(y)),
-     xs AS (SELECT x FROM generate_series(0, 22) AS t(x)),
-c0 AS (
-  SELECT d.doc_id,
-         CAST(SUM((ys.y * 5 + d.doc_id) % 256) * (13 + d.doc_id % 11) AS BIGINT)
-           AS c0_sum
-  FROM documents d JOIN ys ON ys.y <= 10 + d.doc_id % 9
-  GROUP BY d.doc_id
-), c1 AS (
-  SELECT d.doc_id,
-         CAST(SUM((xs.x * 3 + 2 * d.doc_id) % 256) * (11 + d.doc_id % 9) AS BIGINT)
-           AS c1_sum
-  FROM documents d JOIN xs ON xs.x <= 12 + d.doc_id % 11
-  GROUP BY d.doc_id
-)
-SELECT d.doc_id,
-  CAST(11 + d.doc_id % 9 AS BIGINT) AS height,
-  CAST(13 + d.doc_id % 11 AS BIGINT) AS width,
-  CAST(d.doc_id % 5 AS BIGINT) AS filter_type,
-  c0.c0_sum AS c0_sum,
-  c1.c1_sum AS c1_sum
-FROM documents d
-JOIN c0 ON c0.doc_id = d.doc_id
-JOIN c1 ON c1.doc_id = d.doc_id
-ORDER BY d.doc_id
-""",
-    ),
-    "media_decode_stats_jpeg": (
-        multimodal.media_decode_stats_jpeg,
-        """
-WITH bi AS (SELECT i FROM generate_series(0, 3) AS t(i)),
-     bj AS (SELECT j FROM generate_series(0, 4) AS t(j)),
-sums AS (
-  -- constant even-valued 8x8 blocks: baseline-JPEG roundtrip is EXACT
-  -- (see media_decode_stats_jpeg docstring), so the decoded pixel sum
-  -- is 64 * sum of block values
-  SELECT d.doc_id,
-         CAST(SUM(64 * (2 * ((d.doc_id + 17 * bi.i + 29 * bj.j) % 128)))
-              AS BIGINT) AS pixel_sum
-  FROM documents d
-  JOIN bi ON bi.i < 2 + d.doc_id % 3
-  JOIN bj ON bj.j < 2 + d.doc_id % 4
-  GROUP BY d.doc_id
-)
-SELECT d.doc_id,
-  CAST((2 + d.doc_id % 3) * 8 AS BIGINT) AS height,
-  CAST((2 + d.doc_id % 4) * 8 AS BIGINT) AS width,
-  s.pixel_sum
-FROM documents d JOIN sums s ON s.doc_id = d.doc_id
-ORDER BY d.doc_id
 """,
     ),
     "layout_zorder_keys": (
@@ -1985,7 +1871,7 @@ WITH p AS (
   FROM embeddings q, cent c, p
   WHERE q.vec_id < {similarity.N_QUERIES}
 ), adc AS (
-  SELECT d.query_id, a1.vec_id, SUM(d.d_micro) AS adc_micro
+  SELECT d.query_id, a1.vec_id, CAST(SUM(d.d_micro) AS BIGINT) AS adc_micro
   FROM a1 JOIN qdt d ON d.m = a1.m AND d.code = a1.code
   WHERE a1.vec_id <> d.query_id
   GROUP BY 1, 2
@@ -2003,9 +1889,9 @@ REGISTRY["corpus_pack_sequences"] = (
 WITH t AS (
   SELECT doc_id, lang,
          len(string_split(lower(text), ' ')) AS n_tokens,
-         SUM(len(string_split(lower(text), ' ')))
+         CAST(SUM(len(string_split(lower(text), ' ')))
            OVER (PARTITION BY lang ORDER BY doc_id
-                 ROWS UNBOUNDED PRECEDING) AS cum
+                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
   FROM documents
 )
 SELECT doc_id, lang, CAST(n_tokens AS INT) AS n_tokens,
@@ -2024,7 +1910,7 @@ WITH per AS (
          CAST(floor(sqrt(COUNT(*))) AS BIGINT) AS isqrt_n
   FROM documents GROUP BY lang
 ), tot AS (
-  SELECT SUM(isqrt_n) AS tot FROM per
+  SELECT CAST(SUM(isqrt_n) AS BIGINT) AS tot FROM per
 )
 SELECT lang, n_docs, isqrt_n, isqrt_n * 1000000 // tot.tot AS weight_ppm
 FROM per, tot
@@ -2034,7 +1920,7 @@ FROM per, tot
 REGISTRY["dq_constraint_violations"] = (
     relational.dq_constraint_violations,
     f"""
-SELECT 'event_id_unique' AS constraint, COALESCE(SUM(c - 1), 0) AS n
+SELECT 'event_id_unique' AS constraint, CAST(COALESCE(SUM(c - 1), 0) AS BIGINT) AS n
 FROM (SELECT event_id, COUNT(*) AS c FROM events GROUP BY event_id)
 UNION ALL
 SELECT 'value_nonnegative', COUNT(CASE WHEN value < 0 THEN 1 END) FROM events
@@ -2072,7 +1958,7 @@ WITH u AS (
   SELECT query_id, neighbor_id, 1000000 // ({k} + rank) FROM ({s_pq})
 ), fused AS (
   SELECT query_id, neighbor_id, COUNT(*) AS n_systems,
-         SUM(contrib) AS rrf_micro
+         CAST(SUM(contrib) AS BIGINT) AS rrf_micro
   FROM u GROUP BY query_id, neighbor_id
 )
 SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -2186,7 +2072,7 @@ WITH params AS (
   JOIN embeddings q ON q.vec_id = pr.query_id,
   pcent b, params p
 ), adc AS (
-  SELECT d.query_id, k.vec_id, SUM(d.d_micro) AS adc_micro
+  SELECT d.query_id, k.vec_id, CAST(SUM(d.d_micro) AS BIGINT) AS adc_micro
   FROM codes k
   JOIN qdt d ON d.cell = k.cell AND d.m = k.m AND d.code = k.code
   WHERE k.vec_id <> d.query_id
@@ -2299,8 +2185,8 @@ WITH per AS (
 )
 SELECT rank, user_id, cnt,
   cnt * 1000000 // total AS share_ppm,
-  SUM(cnt) OVER (ORDER BY cnt DESC, user_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+  CAST(SUM(cnt) OVER (ORDER BY cnt DESC, user_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
     * 1000000 // total AS cum_share_ppm
 FROM top, tot
 """,
@@ -2509,7 +2395,7 @@ WITH g AS (
 )
 SELECT user_id, COUNT(*) AS n_gaps,
        MIN(gap) AS min_gap_us, MAX(gap) AS max_gap_us,
-       SUM(gap) // COUNT(*) AS avg_gap_us
+       CAST(SUM(gap) AS BIGINT) // COUNT(*) AS avg_gap_us
 FROM g WHERE gap IS NOT NULL GROUP BY user_id
 """,
 )
@@ -2522,7 +2408,7 @@ WITH x AS (
          CAST(floor(unnest(embedding)::DOUBLE * 1000000 + 0.5) AS BIGINT) AS m
   FROM embeddings
 ), agg AS (
-  SELECT dim, COUNT(*) AS n, SUM(m) AS s1, SUM(m * m) AS s2
+  SELECT dim, COUNT(*) AS n, CAST(SUM(m) AS BIGINT) AS s1, SUM(m * m) AS s2
   FROM x GROUP BY dim
 )
 SELECT CAST(dim AS BIGINT) AS dim, n,
@@ -2619,7 +2505,7 @@ WITH toks AS (
   FROM toks, slots GROUP BY 1, 2
 ), est AS (
   SELECT x.source AS src_a, y.source AS src_b,
-         SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) AS n_agree
+         CAST(SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
   FROM sig x JOIN sig y ON x.slot = y.slot AND x.source < y.source
   GROUP BY 1, 2
 )
@@ -3094,7 +2980,8 @@ WITH v AS (
   FROM grid
 )
 SELECT ta, tb,
-       (1000000 * MAX(abs(cum_a * nb - cum_b * na))) // (na * nb) AS ks_ppm
+       CAST((1000000 * MAX(abs(cum_a * nb - cum_b * na))) // (na * nb) AS BIGINT)
+         AS ks_ppm
 FROM cum GROUP BY ta, tb, na, nb
 """,
 )
@@ -3174,7 +3061,7 @@ WITH v AS (
 ), obs AS (
   SELECT digit, CAST(COUNT(*) AS BIGINT) AS c FROM v GROUP BY 1
 ), tot AS (
-  SELECT SUM(c) AS n FROM obs
+  SELECT CAST(SUM(c) AS BIGINT) AS n FROM obs
 )
 SELECT digit, c,
        (1000000 * c) // n AS obs_ppm,
@@ -3270,8 +3157,9 @@ WITH v AS (
   FROM grid
 )
 SELECT ta, tb,
-       SUM(ca * dm) - na * (na + 1) AS u2,
-       (1000000 * (SUM(ca * dm) - na * (na + 1))) // (2 * na * nb) AS auc_ppm
+       CAST(SUM(ca * dm) - na * (na + 1) AS BIGINT) AS u2,
+       CAST((1000000 * (SUM(ca * dm) - na * (na + 1))) // (2 * na * nb) AS BIGINT)
+         AS auc_ppm
 FROM mid GROUP BY ta, tb, na, nb
 """,
 )
@@ -3290,7 +3178,7 @@ WITH e AS (
 ), ny AS (
   SELECT y, SUM(nxy) AS ny FROM nxy GROUP BY 1
 ), nn AS (
-  SELECT SUM(nxy) AS n FROM nxy
+  SELECT CAST(SUM(nxy) AS BIGINT) AS n FROM nxy
 )
 SELECT (SELECT n FROM nn) AS n,
        round(SUM((CAST(nxy AS DOUBLE) / (SELECT n FROM nn))
@@ -3331,8 +3219,8 @@ WITH e AS (
                             ORDER BY abs(n * cum - t * total) DESC, t ASC) AS rk
   FROM s
 )
-SELECT event_type, n, t AS t_star, ts AS ts_star, d AS d_max,
-       (1000000 * d) // (n * total) AS mag_ppm
+SELECT event_type, n, t AS t_star, ts AS ts_star, CAST(d AS BIGINT) AS d_max,
+       CAST((1000000 * d) // (n * total) AS BIGINT) AS mag_ppm
 FROM d WHERE rk = 1
 """,
 )
@@ -3383,9 +3271,9 @@ WITH tok AS (
   SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c FROM pt GROUP BY 1, 2
 ), agg AS (
   SELECT doc_id,
-         SUM(c) AS n_tokens,
+         CAST(SUM(c) AS BIGINT) AS n_tokens,
          CAST(COUNT(*) AS BIGINT) AS n_types,
-         SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS n_hapax,
+         CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
          SUM(c * ln(CAST(c AS DOUBLE))) AS sum_clnc
   FROM c GROUP BY 1
 )
@@ -3505,8 +3393,8 @@ WITH tok AS (
   SELECT sh, MIN(doc_id) AS first_doc FROM sh GROUP BY 1
 )
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-       (1000000 * SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END))
-         // COUNT(*) AS novelty_ppm
+       CAST((1000000 * SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END))
+         // COUNT(*) AS BIGINT) AS novelty_ppm
 FROM sh JOIN first USING (sh)
 GROUP BY doc_id
 """
@@ -3524,7 +3412,7 @@ WITH e AS (
   FROM events
 ), base AS (
   SELECT event_type, hr, CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(x) AS s, SUM(x * x) AS sxx
+         CAST(SUM(x) AS BIGINT) AS s, CAST(SUM(x * x) AS BIGINT) AS sxx
   FROM e GROUP BY 1, 2
 )
 SELECT event_id, event_type, hr, x, n,
@@ -3579,12 +3467,12 @@ def _bpe_fertility_sql() -> str:
   FROM w{n}
 ), hist AS (
   SELECT n_symbols, CAST(COUNT(*) AS BIGINT) AS n_words,
-         SUM(cnt) AS n_occurrences
+         CAST(SUM(cnt) AS BIGINT) AS n_occurrences
   FROM enc GROUP BY 1
 )
 SELECT n_symbols, n_words, n_occurrences,
-       (1000000 * n_occurrences) // (SELECT SUM(n_occurrences) FROM hist)
-         AS occ_share_ppm
+       CAST((1000000 * n_occurrences) // (SELECT SUM(n_occurrences) FROM hist)
+         AS BIGINT) AS occ_share_ppm
 FROM hist
 """
 
@@ -3605,7 +3493,7 @@ WITH words AS (
   SELECT w, cnt, {text._soundex_sql_expr("w")} AS code FROM words
 )
 SELECT code, CAST(COUNT(DISTINCT w) AS BIGINT) AS n_spellings,
-       SUM(cnt) AS n_occurrences,
+       CAST(SUM(cnt) AS BIGINT) AS n_occurrences,
        MIN(w) AS spelling_min, MAX(w) AS spelling_max,
        COUNT(DISTINCT w) >= 2 AS collides
 FROM coded GROUP BY 1
@@ -3637,9 +3525,10 @@ WITH e AS (
          lag(sgn) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev
   FROM s
 ), agg AS (
-  SELECT event_type, SUM(sgn) AS n1, SUM(1 - sgn) AS n2,
-         1 + SUM(CASE WHEN prev IS NOT NULL AND sgn <> prev THEN 1 ELSE 0 END)
-           AS runs
+  SELECT event_type,
+         CAST(SUM(sgn) AS BIGINT) AS n1, CAST(SUM(1 - sgn) AS BIGINT) AS n2,
+         1 + CAST(SUM(CASE WHEN prev IS NOT NULL AND sgn <> prev THEN 1 ELSE 0 END)
+                  AS BIGINT) AS runs
   FROM lg GROUP BY 1
 )
 SELECT event_type, n1, n2, runs,
@@ -3669,7 +3558,7 @@ WITH e AS (
 ), ny AS (
   SELECT y, SUM(nxy) AS ny FROM nxy GROUP BY 1
 ), dims AS (
-  SELECT SUM(nxy) AS n, CAST(COUNT(DISTINCT x) AS BIGINT) AS r,
+  SELECT CAST(SUM(nxy) AS BIGINT) AS n, CAST(COUNT(DISTINCT x) AS BIGINT) AS r,
          CAST(COUNT(DISTINCT y) AS BIGINT) AS c
   FROM nxy
 )
@@ -3761,7 +3650,7 @@ SELECT event_type,
        MAX(hour_id) AS burst_end,
        CAST(COUNT(*) AS BIGINT) AS n_hours_burst,
        MAX(c) AS peak_per_hour,
-       SUM(c) AS n_events_burst
+       CAST(SUM(c) AS BIGINT) AS n_events_burst
 FROM fh WHERE hour_id >= first_hi
 GROUP BY event_type, first_hi
 """,
@@ -3807,7 +3696,7 @@ WITH e AS (
          CAST(floor(value + 0.5) AS BIGINT) AS v
   FROM events
 ), prof AS (
-  SELECT event_type, x, (1000000 * SUM(v)) // COUNT(*) AS y
+  SELECT event_type, x, CAST((1000000 * SUM(v)) // COUNT(*) AS BIGINT) AS y
   FROM e GROUP BY 1, 2
 ), pairs AS (
   SELECT a.event_type, b.y - a.y AS num, b.x - a.x AS den
@@ -3904,9 +3793,9 @@ scored AS (
   FROM topk t JOIN embeddings e ON e.vec_id = t.neighbor_id
   JOIN disc ON disc.rank = t.rank
 ), perq AS (
-  SELECT query_id, qlabel, SUM(rel) AS n_rel,
+  SELECT query_id, qlabel, CAST(SUM(rel) AS BIGINT) AS n_rel,
          MIN(CASE WHEN rel = 1 THEN rank END) AS first_rel_rank,
-         SUM(rel * wgt) AS dcg_micro
+         CAST(SUM(rel * wgt) AS BIGINT) AS dcg_micro
   FROM scored GROUP BY 1, 2
 ), labn AS (
   SELECT label AS qlabel, CAST(COUNT(*) - 1 AS BIGINT) AS r_total
@@ -3945,9 +3834,10 @@ WITH attempts AS (
            ((10-c)*(9-c)*(8-c)*(7-c)*(6-c)) // 120 END))) // 252 AS pass5_micro
   FROM per_doc
 )
-SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tasks, SUM(c) AS total_passes,
-       SUM(pass1_micro) // COUNT(*) AS mean_pass1_micro,
-       SUM(pass5_micro) // COUNT(*) AS mean_pass5_micro
+SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tasks,
+       CAST(SUM(c) AS BIGINT) AS total_passes,
+       CAST(SUM(pass1_micro) // COUNT(*) AS BIGINT) AS mean_pass1_micro,
+       CAST(SUM(pass5_micro) // COUNT(*) AS BIGINT) AS mean_pass5_micro
 FROM est GROUP BY source
 """,
 )
@@ -3967,10 +3857,10 @@ WITH scored AS (
   FROM scored
 ), agg AS (
   SELECT p_milli // 100 AS bin, CAST(COUNT(*) AS BIGINT) AS n,
-         (1000 * SUM(p_milli)) // COUNT(*) AS mean_pred_micro,
-         (1000000 * SUM(y)) // COUNT(*) AS emp_rate_micro,
-         SUM((p_milli - 1000 * y) * (p_milli - 1000 * y)) // COUNT(*)
-           AS brier_micro
+         CAST((1000 * SUM(p_milli)) // COUNT(*) AS BIGINT) AS mean_pred_micro,
+         CAST((1000000 * SUM(y)) // COUNT(*) AS BIGINT) AS emp_rate_micro,
+         CAST(SUM((p_milli - 1000 * y) * (p_milli - 1000 * y)) // COUNT(*)
+           AS BIGINT) AS brier_micro
   FROM sy GROUP BY 1
 )
 SELECT bin, n, mean_pred_micro, emp_rate_micro, brier_micro,
@@ -4031,7 +3921,9 @@ WITH seq AS (
 ), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM items)
 , p0 AS (SELECT i, CAST({sc} AS BIGINT) AS p FROM items)
 {iters}
-SELECT r.i AS event_type, r.wins, r.battles, p{last}.p AS bt_score_micro,
+SELECT r.i AS event_type, CAST(r.wins AS BIGINT) AS wins,
+       CAST(r.battles AS BIGINT) AS battles,
+       CAST(p{last}.p AS BIGINT) AS bt_score_micro,
        ROW_NUMBER() OVER (ORDER BY p{last}.p DESC, r.i) AS bt_rank
 FROM r{last} r JOIN p{last} ON p{last}.i = r.i
 """
@@ -4128,9 +4020,9 @@ WITH tagged AS (
   FROM pos
 )
 SELECT event_type AS channel, CAST(COUNT(*) AS BIGINT) AS n_touches,
-       SUM(CASE WHEN pos = 1 THEN 1 ELSE 0 END) AS n_first,
-       SUM(CASE WHEN pos = m THEN 1 ELSE 0 END) AS n_last,
-       SUM(credit_micro) AS credit_micro_total
+       CAST(SUM(CASE WHEN pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_first,
+       CAST(SUM(CASE WHEN pos = m THEN 1 ELSE 0 END) AS BIGINT) AS n_last,
+       CAST(SUM(credit_micro) AS BIGINT) AS credit_micro_total
 FROM cr GROUP BY 1
 UNION ALL
 SELECT '(direct)' AS channel, CAST(COUNT(*) AS BIGINT) AS n_touches,
@@ -4225,10 +4117,10 @@ WITH scored AS (
   FROM scored WHERE w > 0
 )
 SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       SUM(fre_milli) // COUNT(*) AS mean_fre_milli,
+       CAST(SUM(fre_milli) // COUNT(*) AS BIGINT) AS mean_fre_milli,
        MIN(fre_milli) AS min_fre_milli,
        MAX(fre_milli) AS max_fre_milli,
-       (1000 * SUM(syl)) // SUM(w) AS syll_per_kword
+       CAST((1000 * SUM(syl)) // SUM(w) AS BIGINT) AS syll_per_kword
 FROM fre GROUP BY source
 """,
 )
@@ -4238,17 +4130,20 @@ REGISTRY["layout_compaction_bins"] = (
     relational.layout_compaction_bins,
     f"""
 WITH tot AS (
-  SELECT SUM(n_chars) // {relational.COMPACT_BINS} + 1 AS target FROM documents
+  SELECT CAST(SUM(n_chars) AS BIGINT) // {relational.COMPACT_BINS} + 1 AS target
+  FROM documents
 ), binned AS (
   SELECT doc_id, n_chars, target,
-         (SUM(n_chars) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_chars)
+         (CAST(SUM(n_chars) OVER (ORDER BY doc_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+           - n_chars)
            // target AS bin
   FROM documents, tot
 )
-SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_files, SUM(n_chars) AS bytes,
+SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_files,
+       CAST(SUM(n_chars) AS BIGINT) AS bytes,
        MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id,
-       (1000000 * SUM(n_chars)) // MAX(target) AS fill_ppm
+       CAST((1000000 * SUM(n_chars)) // MAX(target) AS BIGINT) AS fill_ppm
 FROM binned GROUP BY bin
 """,
 )
@@ -4258,8 +4153,9 @@ def _random_projection_sql() -> str:
     s = similarity.GRAM_SCALE
     k = similarity.RP_K
     p_cols = ",\n         ".join(
-        f"SUM(q * (CASE WHEN ('0x' || substr(md5('rp:' || d || ':' || {j}), 1, 1))"
-        f"::BIGINT % 2 = 0 THEN 1 ELSE -1 END)) AS p{j}"
+        f"CAST(SUM(q * (CASE WHEN"
+        f" ('0x' || substr(md5('rp:' || d || ':' || {j}), 1, 1))"
+        f"::BIGINT % 2 = 0 THEN 1 ELSE -1 END)) AS BIGINT) AS p{j}"
         for j in range(k)
     )
     proj_sq = " + ".join(f"p{j} * p{j}" for j in range(k))
@@ -4272,7 +4168,7 @@ WITH comp AS (
 ), proj AS (
   SELECT vec_id,
          {p_cols},
-         SUM(q * q) AS orig_sq
+         CAST(SUM(q * q) AS BIGINT) AS orig_sq
   FROM comp GROUP BY vec_id
 )
 SELECT *, {proj_sq} AS proj_sq,
@@ -4304,9 +4200,10 @@ WITH exact AS ({s_exact}
   SELECT id_b AS query_id, id_a AS neighbor_id FROM lsh
 )
 SELECT e.query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       SUM(CASE WHEN n.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS n_hits,
-       (1000000 * SUM(CASE WHEN n.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS recall_micro
+       CAST(SUM(CASE WHEN n.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_hits,
+       CAST((1000000 * SUM(CASE WHEN n.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
+         // COUNT(*) AS BIGINT) AS recall_micro
 FROM exact e
 LEFT JOIN nbrs n
   ON n.query_id = e.query_id AND n.neighbor_id = e.neighbor_id
@@ -4338,10 +4235,10 @@ WITH rated AS (
   SELECT doc_id, cat, CAST(COUNT(*) AS BIGINT) AS nij
   FROM rated GROUP BY 1, 2
 ), a_n AS (
-  SELECT SUM(sq) AS a, CAST(COUNT(*) AS BIGINT) AS n_items FROM (
+  SELECT CAST(SUM(sq) AS BIGINT) AS a, CAST(COUNT(*) AS BIGINT) AS n_items FROM (
     SELECT doc_id, SUM(nij * nij) AS sq FROM cell GROUP BY 1)
 ), b_agg AS (
-  SELECT SUM(cj * cj) AS b FROM (
+  SELECT CAST(SUM(cj * cj) AS BIGINT) AS b FROM (
     SELECT cat, SUM(nij) AS cj FROM cell GROUP BY 1)
 )
 SELECT n_items, CAST({relational.FLEISS_RATERS} AS BIGINT) AS n_raters,
@@ -4445,8 +4342,10 @@ WITH e AS (
   SELECT *, n // {relational.WINSOR_TRIM_DECI} AS k FROM ranked
 ), agg AS (
   SELECT event_type, MAX(n) AS n_rows, MAX(k) AS n_trimmed_each,
-         SUM(CASE WHEN rn > k AND rn <= n - k THEN v_milli END) AS sum_mid,
-         SUM(CASE WHEN rn > k AND rn <= n - k THEN 1 ELSE 0 END) AS cnt_mid,
+         CAST(SUM(CASE WHEN rn > k AND rn <= n - k THEN v_milli END) AS BIGINT)
+           AS sum_mid,
+         CAST(SUM(CASE WHEN rn > k AND rn <= n - k THEN 1 ELSE 0 END) AS BIGINT)
+           AS cnt_mid,
          MAX(CASE WHEN rn = k + 1 THEN v_milli END) AS lo_clamp_milli,
          MAX(CASE WHEN rn = n - k THEN v_milli END) AS hi_clamp_milli
   FROM kd GROUP BY 1
@@ -4522,9 +4421,9 @@ WITH trans AS (
     FROM events)
   WHERE dst IS NOT NULL GROUP BY 1, 2
 ), ni AS (
-  SELECT src, SUM(nij) AS n_out, CAST(COUNT(*) AS BIGINT) AS n_dst
+  SELECT src, CAST(SUM(nij) AS BIGINT) AS n_out, CAST(COUNT(*) AS BIGINT) AS n_dst
   FROM trans GROUP BY 1
-), tot AS (SELECT SUM(nij) AS n_total FROM trans)
+), tot AS (SELECT CAST(SUM(nij) AS BIGINT) AS n_total FROM trans)
 SELECT src AS event_type, n_out, n_dst,
        (1000000 * n_out) // n_total AS pi_ppm,
        round(SUM((CAST(nij AS DOUBLE) / n_out)
@@ -4587,11 +4486,11 @@ WITH words AS (
   FROM words LEFT JOIN vocab v ON v.w = words.w
 ), tok AS (
   SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         SUM(in_vocab) AS n_covered
+         CAST(SUM(in_vocab) AS BIGINT) AS n_covered
   FROM marked GROUP BY 1
 ), typ AS (
   SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_types,
-         SUM(in_vocab) AS n_types_covered
+         CAST(SUM(in_vocab) AS BIGINT) AS n_types_covered
   FROM (SELECT DISTINCT lang, w, in_vocab FROM marked) GROUP BY 1
 )
 SELECT lang, n_tokens, n_covered,
@@ -4660,9 +4559,10 @@ WITH act AS (
          row_number() OVER (PARTITION BY event_type ORDER BY x, user_id) AS i
   FROM act
 )
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_users, SUM(x) AS n_events,
-       (1000000 * (2 * SUM(i * x) - (COUNT(*) + 1) * SUM(x)))
-         // (COUNT(*) * SUM(x)) AS gini_ppm
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_users,
+       CAST(SUM(x) AS BIGINT) AS n_events,
+       CAST((1000000 * (2 * SUM(i * x) - (COUNT(*) + 1) * SUM(x)))
+         // (COUNT(*) * SUM(x)) AS BIGINT) AS gini_ppm
 FROM ranked GROUP BY 1
 """,
 )
@@ -4681,10 +4581,10 @@ WITH seq AS (
 )
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
        MAX(s) - MIN(s) AS span_s,
-       (1000 * SUM(CASE WHEN next_s IS NOT NULL
+       CAST((1000 * SUM(CASE WHEN next_s IS NOT NULL
                         THEN v_milli * (next_s - s) END))
-         // (MAX(s) - MIN(s)) AS twap_micro,
-       (1000 * SUM(v_milli)) // COUNT(*) AS row_mean_micro
+         // (MAX(s) - MIN(s)) AS BIGINT) AS twap_micro,
+       CAST((1000 * SUM(v_milli)) // COUNT(*) AS BIGINT) AS row_mean_micro
 FROM seq GROUP BY 1 HAVING MAX(s) - MIN(s) > 0
 """,
 )
@@ -4757,8 +4657,8 @@ WITH trans AS (
 ns AS (SELECT COUNT(*)::DOUBLE AS k FROM states),
 pi0 AS (SELECT state, (SELECT 1.0 / k FROM ns) AS pi FROM states)
 {iters},
-emp AS (SELECT src, SUM(nij) AS n_src FROM trans GROUP BY 1),
-tot AS (SELECT SUM(nij) AS n_total FROM trans)
+emp AS (SELECT src, CAST(SUM(nij) AS BIGINT) AS n_src FROM trans GROUP BY 1),
+tot AS (SELECT CAST(SUM(nij) AS BIGINT) AS n_total FROM trans)
 SELECT pi{last}.state AS event_type, round(pi{last}.pi, 6) AS pi_stationary,
        (1000000 * emp.n_src) // (SELECT n_total FROM tot) AS pi_empirical_ppm
 FROM pi{last} JOIN emp ON emp.src = pi{last}.state
@@ -4858,9 +4758,10 @@ WITH tagged AS (
 SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,
        (1000000 * COUNT(*)) // (SELECT t FROM tot) AS share_ppm,
        CAST(COUNT(DISTINCT th) AS BIGINT) AS n_distinct_texts,
-       SUM(CASE WHEN n_splits > 1 THEN 1 ELSE 0 END) AS n_leaked_docs,
-       (1000000 * SUM(CASE WHEN n_splits > 1 THEN 1 ELSE 0 END)) // COUNT(*)
-         AS leak_ppm
+       CAST(SUM(CASE WHEN n_splits > 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_leaked_docs,
+       CAST((1000000 * SUM(CASE WHEN n_splits > 1 THEN 1 ELSE 0 END)) // COUNT(*)
+         AS BIGINT) AS leak_ppm
 FROM tagged JOIN spans USING (th)
 GROUP BY split
 """,
@@ -4888,10 +4789,10 @@ probed AS (
   SELECT CAST(SUM(CASE WHEN is_member THEN 1 ELSE 0 END) AS BIGINT)
            AS n_members,
          CAST((SELECT COUNT(*) FROM bits) AS BIGINT) AS n_bits_set,
-         SUM(CASE WHEN is_member AND n_hit = {relational.BLOOM_K}
-                  THEN 1 ELSE 0 END) AS true_positives,
-         SUM(CASE WHEN NOT is_member AND n_hit = {relational.BLOOM_K}
-                  THEN 1 ELSE 0 END) AS false_positives,
+         CAST(SUM(CASE WHEN is_member AND n_hit = {relational.BLOOM_K}
+                  THEN 1 ELSE 0 END) AS BIGINT) AS true_positives,
+         CAST(SUM(CASE WHEN NOT is_member AND n_hit = {relational.BLOOM_K}
+                  THEN 1 ELSE 0 END) AS BIGINT) AS false_positives,
          CAST(SUM(CASE WHEN NOT is_member THEN 1 ELSE 0 END) AS BIGINT)
            AS n_non_members
   FROM probed
@@ -4922,9 +4823,9 @@ WITH e AS (
   FROM prof a JOIN prof b ON a.event_type = b.event_type AND a.x < b.x
 ), agg AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n0,
-         SUM(CASE WHEN y2 > y1 THEN 1 ELSE 0 END) AS n_concordant,
-         SUM(CASE WHEN y2 < y1 THEN 1 ELSE 0 END) AS n_discordant,
-         SUM(CASE WHEN y2 = y1 THEN 1 ELSE 0 END) AS n_tied_y
+         CAST(SUM(CASE WHEN y2 > y1 THEN 1 ELSE 0 END) AS BIGINT) AS n_concordant,
+         CAST(SUM(CASE WHEN y2 < y1 THEN 1 ELSE 0 END) AS BIGINT) AS n_discordant,
+         CAST(SUM(CASE WHEN y2 = y1 THEN 1 ELSE 0 END) AS BIGINT) AS n_tied_y
   FROM pairs GROUP BY 1
 ), np_ AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_points
@@ -4961,8 +4862,8 @@ pu AS (
 ), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM pu)
 SELECT CAST(100 * r_score + 10 * f_score + m_score AS BIGINT) AS segment,
        CAST(COUNT(*) AS BIGINT) AS n_users,
-       (1000 * SUM(f)) // COUNT(*) AS mean_f_milli,
-       (1000 * SUM(m_milli)) // COUNT(*) AS mean_m_micro,
+       CAST((1000 * SUM(f)) // COUNT(*) AS BIGINT) AS mean_f_milli,
+       CAST((1000 * SUM(m_milli)) // COUNT(*) AS BIGINT) AS mean_m_micro,
        (1000000 * COUNT(*)) // (SELECT t FROM tot) AS share_ppm
 FROM scored GROUP BY 1
 """,
@@ -4999,11 +4900,11 @@ WITH tot AS (
   FROM tot, (SELECT unnest(range(0, {relational.ZONE_PROBES} + 1)) AS k) t
 )
 SELECT layout, probe_value, CAST(COUNT(*) AS BIGINT) AS n_bins,
-       SUM(CASE WHEN probe_value BETWEEN zmin AND zmax THEN 1 ELSE 0 END)
-         AS n_candidate_bins,
-       (1000000 * (COUNT(*) - SUM(CASE WHEN probe_value BETWEEN zmin AND zmax
+       CAST(SUM(CASE WHEN probe_value BETWEEN zmin AND zmax THEN 1 ELSE 0 END)
+         AS BIGINT) AS n_candidate_bins,
+       CAST((1000000 * (COUNT(*) - SUM(CASE WHEN probe_value BETWEEN zmin AND zmax
                                        THEN 1 ELSE 0 END))) // COUNT(*)
-         AS pruned_ppm
+         AS BIGINT) AS pruned_ppm
 FROM zones CROSS JOIN probes GROUP BY 1, 2
 """,
 )
@@ -5066,7 +4967,7 @@ WITH per AS (
 ), tot AS (
   SELECT SUM(n) AS tn, SUM(sx) AS tsx, SUM(sxx) AS tsxx FROM per
 )
-SELECT event_type, n, tn - n AS n_rest,
+SELECT event_type, n, CAST(tn - n AS BIGINT) AS n_rest,
        round(CASE WHEN n < 2 OR tn - n < 2
                        OR (tn - n) * (tsxx - sxx) = (tsx - sx) * (tsx - sx)
              THEN NULL ELSE
@@ -5095,7 +4996,7 @@ WITH days AS (
   SELECT user_id, isl, CAST(COUNT(*) AS BIGINT) AS len
   FROM isl GROUP BY 1, 2
 )
-SELECT user_id, SUM(len) AS n_active_days,
+SELECT user_id, CAST(SUM(len) AS BIGINT) AS n_active_days,
        CAST(COUNT(*) AS BIGINT) AS n_streaks,
        MAX(len) AS longest_streak_days
 FROM per_isl GROUP BY 1
@@ -5147,8 +5048,8 @@ WITH hist AS ({hist}
 )
 SELECT COALESCE(prior_state, '(none)') AS prior_state,
        CAST(COUNT(*) AS BIGINT) AS n_purchases,
-       (1000 * SUM(COALESCE(n_events, 0))) // COUNT(*)
-         AS mean_run_events_milli
+       CAST((1000 * SUM(COALESCE(n_events, 0))) // COUNT(*)
+         AS BIGINT) AS mean_run_events_milli
 FROM j GROUP BY 1
 """
 
@@ -5216,12 +5117,12 @@ WITH first AS (
 ), grid AS (
   SELECT cohort_week, age_weeks,
          CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_buyers,
-         SUM(v_milli) AS period_value_milli
+         CAST(SUM(v_milli) AS BIGINT) AS period_value_milli
   FROM buys GROUP BY 1, 2
 ), cum AS (
-  SELECT *, SUM(period_value_milli) OVER (PARTITION BY cohort_week
+  SELECT *, CAST(SUM(period_value_milli) OVER (PARTITION BY cohort_week
              ORDER BY age_weeks
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
            AS cum_value_milli
   FROM grid
 )
@@ -5242,12 +5143,12 @@ WITH bounds AS (
   FROM events
 ), agg AS (
   SELECT event_type,
-         SUM(CASE WHEN epoch_us(ts) // 1000000 < t0 + (t1 - t0) // 2
-                  THEN 1 ELSE 0 END) AS c1,
+         CAST(SUM(CASE WHEN epoch_us(ts) // 1000000 < t0 + (t1 - t0) // 2
+                  THEN 1 ELSE 0 END) AS BIGINT) AS c1,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM events, bounds GROUP BY 1
 )
-SELECT event_type, CAST(c1 AS BIGINT) AS c1, n - c1 AS c2,
+SELECT event_type, c1, n - c1 AS c2,
        CASE WHEN c1 > 0 THEN (1000000 * (n - c1)) // c1 ELSE NULL END
          AS rate_ratio_ppm,
        round(CASE WHEN n = 0 THEN NULL ELSE
@@ -5369,12 +5270,12 @@ WITH pu AS (
          SUM(v_milli) OVER () AS total
   FROM pu
 )
-SELECT MAX(n) AS n_buyers, MAX(total) AS total_value_milli,
+SELECT MAX(n) AS n_buyers, CAST(MAX(total) AS BIGINT) AS total_value_milli,
        MIN(CASE WHEN 5 * cum >= 4 * total THEN rn END) AS n_users_for_80pct,
        (1000000 * MIN(CASE WHEN 5 * cum >= 4 * total THEN rn END)) // MAX(n)
          AS share_users_for_80pct_ppm,
-       (1000000 * MAX(CASE WHEN rn = (n + 99) // 100 THEN cum END))
-         // MAX(total) AS top1pct_value_share_ppm
+       CAST((1000000 * MAX(CASE WHEN rn = (n + 99) // 100 THEN cum END))
+         // MAX(total) AS BIGINT) AS top1pct_value_share_ppm
 FROM ranked
 """,
 )
@@ -5451,8 +5352,8 @@ WITH hourly AS (
                         AND CURRENT ROW)
 )
 SELECT event_type, h, y,
-       (1000000 * (n * sty - st * sy)) // (n * stt - st * st)
-         AS slope_micro_per_hour
+       CAST((1000000 * (n * sty - st * sy)) // (n * stt - st * st)
+         AS BIGINT) AS slope_micro_per_hour
 FROM rolled WHERE n = {relational.ROLLREG_W}
 """,
 )
@@ -5469,7 +5370,7 @@ def _path_counts_sql() -> str:
         for k in range(1, relational.WALK_STEPS + 1)
     )
     sel = ", ".join(
-        f"COALESCE(w{k}.w, 0) AS walks{k}"
+        f"CAST(COALESCE(w{k}.w, 0) AS BIGINT) AS walks{k}"
         for k in range(1, relational.WALK_STEPS + 1)
     )
     joins = "".join(
@@ -5525,10 +5426,10 @@ WITH sess AS (
   GROUP BY 1, 2
 )
 SELECT entry AS entry_type, CAST(COUNT(*) AS BIGINT) AS n_sessions,
-       SUM(CASE WHEN len = 1 THEN 1 ELSE 0 END) AS n_bounces,
-       (1000000 * SUM(CASE WHEN len = 1 THEN 1 ELSE 0 END)) // COUNT(*)
-         AS bounce_ppm,
-       (1000 * SUM(len)) // COUNT(*) AS mean_len_milli
+       CAST(SUM(CASE WHEN len = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounces,
+       CAST((1000000 * SUM(CASE WHEN len = 1 THEN 1 ELSE 0 END)) // COUNT(*)
+         AS BIGINT) AS bounce_ppm,
+       CAST((1000 * SUM(len)) // COUNT(*) AS BIGINT) AS mean_len_milli
 FROM per_sess GROUP BY 1
 """,
 )

@@ -1,7 +1,8 @@
 """Query entry points of ``__spark_entry__.py``: the flagship rows are
-pinned, its DuckDB oracle agrees with Spark on them, and no oracle in the
-driver's 50-query window emits a type its hash cannot match.  The rest of
-the registry is compared against DuckDB by ``tools/check_oracles.py``."""
+pinned, its DuckDB oracle agrees with Spark on them, every flagship the
+driver re-checks is registered, and no oracle emits a type the driver's
+hash cannot match.  Values across the registry are compared against
+DuckDB by ``tools/check_oracles.py``."""
 
 from __future__ import annotations
 
@@ -67,16 +68,21 @@ def test_oracle_sql_matches_spark(spark, contract):
     assert len(srows) > 0
 
 
-def test_driver_window_oracles_emit_no_hugeint(contract):
-    """The driver hashes the first 50 queries' results, and DuckDB's HUGEINT
-    (Arrow decimal128(38,0)) never hashes equal to Spark's int64.  DESCRIBE
-    binds each oracle without running it."""
-    oracles = contract.oracle_sql()
+def test_flagship_rechecks_are_registered(contract):
+    """``_rotated_names`` skips a flagship missing from the registry, so a
+    deletion would shrink the driver's re-check without this test."""
+    assert set(contract._FLAGSHIP_RECHECK) <= set(contract.REGISTRY)
+
+
+def test_every_oracle_emits_no_hugeint(contract):
+    """DuckDB's HUGEINT (Arrow decimal128(38,0)) never hashes equal to
+    Spark's int64, and the driver checks a window of ``queries()`` that
+    moves whenever an entry is deleted, so no oracle may emit it.
+    DESCRIBE binds each oracle without running it."""
     hugeint = {}
     with _load("check_oracles", "tools/check_oracles.py").duckdb_views() as con:
-        for name in list(contract.queries())[:50]:
-            if name in oracles:
-                cols = con.execute(f"DESCRIBE {oracles[name]}").fetchall()
-                hugeint[name] = [c[0] for c in cols if "HUGEINT" in c[1]]
+        for name, sql in contract.oracle_sql().items():
+            cols = con.execute(f"DESCRIBE {sql}").fetchall()
+            hugeint[name] = [c[0] for c in cols if "HUGEINT" in c[1]]
     assert hugeint
     assert {n: c for n, c in hugeint.items() if c} == {}
