@@ -1,17 +1,10 @@
-"""Pure-numpy decoders for library-free media formats (BMP / PPM / WAV /
-PNG / baseline JPEG).
+"""Pure-numpy codecs for header-plus-raw-samples media formats (BMP /
+PPM / WAV), a magic-byte sniff and a nearest-neighbour resize.
 
 The container ships no image/audio codec libraries (PIL, cv2, librosa,
-ffmpeg), but these formats need none: BMP/PPM/WAV carry raw samples
-behind a fixed header, and PNG — a genuinely COMPRESSED format — only
-needs stdlib zlib for its DEFLATE stream plus numpy for scanline
-unfiltering.  The multimodal operators therefore run a REAL decode end
-to end: bytes → numpy array → transform → bytes, all inside
-Arrow-batched ``mapInPandas`` workers.
-
-Everything here is per-payload CPU work with no Spark dependency; the
-operators in ``operators/multimodal.py`` call it from worker-side UDF
-bodies, so it distributes trivially (one payload never spans workers).
+ffmpeg), and these formats need none: each carries raw samples behind a
+fixed header.  No KG path calls this module; it is kept only until its
+tests can be retired (ROADMAP item 8, step 2b).
 """
 
 from __future__ import annotations
@@ -149,614 +142,28 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
 
 
 def sniff(b: bytes) -> str | None:
-    """Cheap magic-byte format sniff; None when no codec-free decoder
-    applies (the operators then fall back to the declared stub path)."""
+    """Cheap magic-byte format sniff; None for an unknown payload.  PNG
+    and JPEG are recognised but have no decoder here."""
     if b[:2] == b"BM":
         return "bmp"
     if b[:2] == b"P6":
         return "ppm"
     if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
         return "wav"
-    if b.startswith(_PNG_SIG):
+    if b.startswith(b"\x89PNG\r\n\x1a\n"):
         return "png"
     if b[:3] == b"\xff\xd8\xff":
         return "jpeg"
     return None
 
 
-def decode_image(b: bytes) -> np.ndarray:
-    kind = sniff(b)
-    if kind == "bmp":
-        return decode_bmp(b)
-    if kind == "ppm":
-        return decode_ppm(b)
-    if kind == "png":
-        return decode_png(b)
-    if kind == "jpeg":
-        arr = decode_jpeg(b)
-        return np.stack([arr] * 3, axis=-1) if arr.ndim == 2 else arr
-    raise ValueError("no codec-free image decoder for payload")
-
-
 def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     """Nearest-neighbor resample (H, W, 3) → (height, width, 3).
 
     Pure index-gather (two take()s), the standard pre-embedding resize;
-    deterministic and allocation-bounded — right for a per-worker UDF.
+    deterministic and allocation-bounded.
     """
     h, w = arr.shape[:2]
     rows = (np.arange(height) * h // height).clip(0, h - 1)
     cols = (np.arange(width) * w // width).clip(0, w - 1)
     return arr[rows][:, cols]
-
-
-# ---------------------------------------------------------------- PNG ----
-#
-# PNG is a genuinely COMPRESSED format (DEFLATE inside IDAT), decodable
-# with zero external codec libraries: stdlib zlib inflates, numpy
-# unfilters.  Supports the baseline profile: 8-bit depth, color types
-# 0 (gray) / 2 (RGB) / 6 (RGBA), no interlace — which covers every PNG
-# a synthetic or screenshot-style corpus emits.  CRCs are verified.
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 6: 4}
-
-
-def _paeth_vec(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Vectorized Paeth predictor (PNG spec 9.4) over int32 arrays."""
-    p = a + b - c
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-
-
-def decode_png(b: bytes) -> np.ndarray:
-    """Decode a baseline PNG → (H, W, channels) uint8 array.
-
-    Chunk walk with CRC verification, zlib inflate of concatenated IDATs,
-    then scanline unfiltering: None/Up/Sub vectorized (Sub is a per-lane
-    modular cumsum), Average/Paeth sequential per byte (their recurrence
-    is inherently serial; rows are short relative to inflate cost).
-    Raises ValueError on non-baseline profiles.
-    """
-    import zlib  # noqa: PLC0415
-
-    if not b.startswith(_PNG_SIG):
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat = len(_PNG_SIG), None, []
-    while pos + 8 <= len(b):
-        (length,) = struct.unpack_from(">I", b, pos)
-        if pos + 12 + length > len(b):
-            raise ValueError("truncated PNG chunk")
-        ctype = b[pos + 4 : pos + 8]
-        data = b[pos + 8 : pos + 8 + length]
-        (crc,) = struct.unpack_from(">I", b, pos + 8 + length)
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk CRC mismatch in {ctype!r}")
-        if ctype == b"IHDR":
-            if len(data) != 13:
-                raise ValueError("bad IHDR length")
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if ihdr is None or not idat:
-        raise ValueError("missing IHDR/IDAT")
-    w, h, depth, color, comp, filt, interlace = ihdr
-    if depth != 8 or color not in _PNG_CHANNELS or comp or filt or interlace:
-        raise ValueError(
-            f"unsupported PNG (depth={depth}, color={color}, interlace={interlace})"
-        )
-    ch = _PNG_CHANNELS[color]
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as ex:  # truncated/garbled DEFLATE must not escape
-        raise ValueError(f"PNG inflate failed: {ex}") from ex
-    n = w * ch
-    if len(raw) != h * (1 + n):
-        raise ValueError("PNG scanline payload has wrong length")
-    raw_rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + n)
-    out = np.zeros((h, n), dtype=np.int32)
-    prev = np.zeros(n, dtype=np.int32)
-    for y in range(h):
-        f = int(raw_rows[y, 0])
-        row = raw_rows[y, 1:].astype(np.int32)
-        if f == 0:
-            cur = row
-        elif f == 1:  # Sub: per-lane modular prefix sum
-            cur = row.copy()
-            for k in range(ch):
-                cur[k::ch] = np.cumsum(cur[k::ch], dtype=np.int64) % 256
-        elif f == 2:  # Up
-            cur = (row + prev) % 256
-        elif f in (3, 4):  # Average / Paeth: serial recurrence
-            cur = np.zeros(n, dtype=np.int32)
-            for i in range(n):
-                left = cur[i - ch] if i >= ch else 0
-                up = prev[i]
-                ul = prev[i - ch] if i >= ch else 0
-                if f == 3:
-                    pred = (left + up) // 2
-                else:
-                    pred = int(_paeth_vec(np.int32(left), np.int32(up), np.int32(ul)))
-                cur[i] = (row[i] + pred) % 256
-        else:
-            raise ValueError(f"bad PNG filter byte {f}")
-        out[y] = cur
-        prev = cur
-    return out.astype(np.uint8).reshape(h, w, ch)
-
-
-def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
-    """(H, W[, channels]) uint8 → baseline PNG bytes, every scanline
-    filtered with ``filter_type`` (0..4).  Forward filtering has no
-    serial dependency, so all five filters are pure shifted-array
-    arithmetic — which makes the encoder the adversarial test rig for
-    the decoder's serial unfilter paths (round-trip per filter type).
-    """
-    import zlib  # noqa: PLC0415
-
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, ch = arr.shape
-    color = {1: 0, 3: 2, 4: 6}[ch]
-    cur = arr.reshape(h, w * ch).astype(np.int32)
-    prev = np.vstack([np.zeros((1, w * ch), np.int32), cur[:-1]])
-    left = np.zeros_like(cur)
-    left[:, ch:] = cur[:, :-ch]
-    upleft = np.zeros_like(prev)
-    upleft[:, ch:] = prev[:, :-ch]
-    if filter_type == 0:
-        filtered = cur
-    elif filter_type == 1:
-        filtered = cur - left
-    elif filter_type == 2:
-        filtered = cur - prev
-    elif filter_type == 3:
-        filtered = cur - (left + prev) // 2
-    elif filter_type == 4:
-        filtered = cur - _paeth_vec(left, prev, upleft)
-    else:
-        raise ValueError(f"bad PNG filter type {filter_type}")
-    lines = np.hstack(
-        [np.full((h, 1), filter_type, np.uint8), (filtered % 256).astype(np.uint8)]
-    )
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(lines.tobytes()))
-        + chunk(b"IEND", b"")
-    )
-
-
-# --------------------------------------------------------------- JPEG ----
-# Baseline (non-progressive) JFIF, pure numpy: FDCT/IDCT, Annex-K
-# quantization + Huffman tables, canonical code construction, zigzag,
-# DC prediction, run-length AC coding, 0xFF byte stuffing.  Grayscale
-# core (1 component) + a 4:4:4 YCbCr color wrapper.  Coefficient-level
-# entry points (`encode_jpeg_from_coeffs` / `decode_jpeg_coeffs`) expose
-# the LOSSLESS entropy layer for integer-exact tests; the float DCT
-# layer is validated separately against the naive O(n^4) definition
-# (tests/test_codecs.py).
-
-# ITU-T T.81 Annex K.1 — luminance quantization table, natural order.
-JPEG_QTABLE = np.array(
-    [
-        [16, 11, 10, 16, 24, 40, 51, 61],
-        [12, 12, 14, 19, 26, 58, 60, 55],
-        [14, 13, 16, 24, 40, 57, 69, 56],
-        [14, 17, 22, 29, 51, 87, 80, 62],
-        [18, 22, 37, 56, 68, 109, 103, 77],
-        [24, 35, 55, 64, 81, 104, 113, 92],
-        [49, 64, 78, 87, 103, 121, 120, 101],
-        [72, 92, 95, 98, 112, 100, 103, 99],
-    ],
-    dtype=np.int64,
-)
-
-# Annex K.3 — DC/AC luminance Huffman specs: (BITS[1..16], HUFFVAL).
-JPEG_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-JPEG_DC_VALS = list(range(12))
-JPEG_AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-JPEG_AC_VALS = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41, 0x06,
-    0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-    0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72,
-    0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-    0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75,
-    0x76, 0x77, 0x78, 0x79, 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-    0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-    0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-# zigzag scan order: ZIGZAG[k] = (row, col) of the k-th coefficient.
-def _zigzag_order() -> list[tuple[int, int]]:
-    order = sorted(
-        ((r, c) for r in range(8) for c in range(8)),
-        key=lambda rc: (rc[0] + rc[1], rc[1] if (rc[0] + rc[1]) % 2 else rc[0]),
-    )
-    return order
-
-
-JPEG_ZIGZAG = _zigzag_order()
-
-_DCT_M = None
-
-
-def _dct_matrix() -> np.ndarray:
-    global _DCT_M
-    if _DCT_M is None:
-        u = np.arange(8).reshape(-1, 1)
-        x = np.arange(8).reshape(1, -1)
-        m = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-        m[0, :] *= 1 / np.sqrt(2)
-        _DCT_M = m
-    return _DCT_M
-
-
-def jpeg_fdct(block: np.ndarray) -> np.ndarray:
-    """8x8 forward DCT (T.81 A.3.3 normalization): constant block c → DC 8c."""
-    m = _dct_matrix()
-    return m @ block.astype(np.float64) @ m.T
-
-
-def jpeg_idct(coeffs: np.ndarray) -> np.ndarray:
-    m = _dct_matrix()
-    return m.T @ coeffs.astype(np.float64) @ m
-
-
-def _build_huffman(bits: list[int], vals: list[int]):
-    """Canonical JPEG codes: {symbol: (code, length)} and the inverse."""
-    enc, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            enc[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    dec = {(c, l): s for s, (c, l) in enc.items()}
-    return enc, dec
-
-
-_DC_ENC, _DC_DEC = _build_huffman(JPEG_DC_BITS, JPEG_DC_VALS)
-_AC_ENC, _AC_DEC = _build_huffman(JPEG_AC_BITS, JPEG_AC_VALS)
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            byte = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
-            self.n -= 8
-        self.acc &= (1 << self.n) - 1
-
-    def flush(self) -> bytes:
-        if self.n:
-            pad = 8 - self.n
-            self.write((1 << pad) - 1, pad)  # 1-fill per spec
-        return bytes(self.out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read_bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("jpeg: entropy stream exhausted")
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def read_bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def read_symbol(self, dec: dict) -> int:
-        code, length = 0, 0
-        while length < 16:
-            code = (code << 1) | self.read_bit()
-            length += 1
-            s = dec.get((code, length))
-            if s is not None:
-                return s
-        raise ValueError("jpeg: invalid Huffman code")
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """(size category, appended bits) for a DC diff / AC value."""
-    if v == 0:
-        return 0, 0
-    size = int(abs(v)).bit_length()
-    bits = v if v >= 0 else v + (1 << size) - 1  # one's complement form
-    return size, bits
-
-
-def _extend(bits: int, size: int) -> int:
-    if size == 0:
-        return 0
-    return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
-
-
-def encode_jpeg_from_coeffs(qcoeffs: np.ndarray, h: int, w: int,
-                            n_comp: int = 1) -> bytes:
-    """Serialize quantized coefficients → baseline JFIF bytes.
-
-    ``qcoeffs``: (n_blocks_total, 8, 8) int array in MCU order (for
-    color: Y,Cb,Cr interleaved per MCU).  The LOSSLESS entropy layer:
-    zigzag + run-length + Huffman + DC prediction + byte stuffing; all
-    components share the Annex-K luminance tables (legal and exact).
-    """
-    bw = _BitWriter()
-    pred = [0] * n_comp
-    n_mcu = qcoeffs.shape[0] // n_comp
-    for m_i in range(n_mcu):
-        for c in range(n_comp):
-            blk = qcoeffs[m_i * n_comp + c]
-            dc = int(blk[0, 0])
-            size, bits = _magnitude(dc - pred[c])
-            pred[c] = dc
-            code, length = _DC_ENC[size]
-            bw.write(code, length)
-            bw.write(bits, size)
-            zz = [int(blk[r, cc]) for (r, cc) in JPEG_ZIGZAG[1:]]
-            run = 0
-            for v in zz:
-                if v == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    zc, zl = _AC_ENC[0xF0]  # ZRL
-                    bw.write(zc, zl)
-                    run -= 16
-                size, bits = _magnitude(v)
-                sc, sl = _AC_ENC[(run << 4) | size]
-                bw.write(sc, sl)
-                bw.write(bits, size)
-                run = 0
-            if run:
-                ec, el = _AC_ENC[0x00]  # EOB
-                bw.write(ec, el)
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qt_zz = bytes(
-        int(JPEG_QTABLE[r, c]) for (r, c) in JPEG_ZIGZAG
-    )
-    dqt = seg(0xFFDB, b"\x00" + qt_zz)
-    comps = b"".join(
-        struct.pack("BBB", ci + 1, 0x11, 0) for ci in range(n_comp)
-    )
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, n_comp) + comps)
-    dht = seg(
-        0xFFC4,
-        b"\x00" + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-        + b"\x10" + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS),
-    )
-    sos_comps = b"".join(struct.pack("BB", ci + 1, 0x00) for ci in range(n_comp))
-    sos = (
-        struct.pack(">HHB", 0xFFDA, 6 + 2 * n_comp, n_comp)
-        + sos_comps
-        + b"\x00\x3f\x00"
-    )
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def _parse_jpeg_segments(b: bytes):
-    """Walk markers → (sof, dqt_tables, huffman_tables, scan_bytes)."""
-    try:
-        return _parse_jpeg_segments_inner(b)
-    except (IndexError, struct.error) as e:  # truncated payload
-        raise ValueError(f"jpeg: truncated stream ({e})") from e
-
-
-def _parse_jpeg_segments_inner(b: bytes):
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("jpeg: missing SOI")
-    i = 2
-    qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple[int, int], dict] = {}
-    sof = None
-    while i < len(b):
-        if b[i] != 0xFF:
-            raise ValueError(f"jpeg: expected marker at {i}")
-        marker = b[i + 1]
-        if marker == 0xD9:  # EOI
-            break
-        ln = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        payload = b[i + 4 : i + 2 + ln]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise ValueError("jpeg: only 8-bit quant tables")
-                q = np.zeros((8, 8), dtype=np.int64)
-                for k, (r, c) in enumerate(JPEG_ZIGZAG):
-                    q[r, c] = payload[p + 1 + k]
-                qtabs[tq] = q
-                p += 65
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                _, dec = _build_huffman(bits, vals)
-                htabs[(tc, th)] = dec
-                p += 17 + nv
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, h, w = payload[0], *struct.unpack(">HH", payload[1:5])
-            n_comp = payload[5]
-            comps = []
-            for c in range(n_comp):
-                cid, samp, tq = payload[6 + 3 * c : 9 + 3 * c]
-                if samp != 0x11:
-                    raise ValueError("jpeg: only 4:4:4 (no subsampling)")
-                comps.append((cid, tq))
-            if prec != 8:
-                raise ValueError("jpeg: only 8-bit precision")
-            sof = (h, w, comps)
-        elif marker in (0xC1, 0xC2, 0xC3):
-            raise ValueError("jpeg: only baseline SOF0 supported")
-        elif marker == 0xDA:  # SOS — entropy data follows until EOI
-            n_comp = payload[0]
-            sel = []
-            for c in range(n_comp):
-                cid, tt = payload[1 + 2 * c : 3 + 2 * c]
-                sel.append((cid, tt >> 4, tt & 0xF))
-            j = i + 2 + ln
-            # de-stuff: 0xFF 0x00 → 0xFF; stop at any real marker
-            scan = bytearray()
-            while j < len(b) - 1:
-                byte = b[j]
-                if byte == 0xFF:
-                    nxt = b[j + 1]
-                    if nxt == 0x00:
-                        scan.append(0xFF)
-                        j += 2
-                        continue
-                    break  # marker (EOI) — scan over
-                scan.append(byte)
-                j += 1
-            return sof, qtabs, htabs, sel, bytes(scan)
-        i += 2 + ln
-    raise ValueError("jpeg: no SOS segment")
-
-
-def decode_jpeg_coeffs(b: bytes):
-    """Entropy-decode only → (quantized coeff blocks (n,8,8) in MCU
-    order, (h, w, n_comp), per-component quant tables).  The exact
-    inverse of ``encode_jpeg_from_coeffs`` — integer-lossless."""
-    sof, qtabs, htabs, sel, scan = _parse_jpeg_segments(b)
-    if sof is None:
-        raise ValueError("jpeg: SOS before SOF")
-    h, w, comps = sof
-    n_comp = len(comps)
-    bh, bw_ = (h + 7) // 8, (w + 7) // 8
-    br = _BitReader(scan)
-    pred = [0] * n_comp
-    blocks = []
-    for _ in range(bh * bw_):
-        for c in range(n_comp):
-            _, dc_t, ac_t = sel[c]
-            size = br.read_symbol(htabs[(0, dc_t)])
-            diff = _extend(br.read_bits(size), size)
-            pred[c] += diff
-            blk = np.zeros((8, 8), dtype=np.int64)
-            blk[0, 0] = pred[c]
-            k = 1
-            while k < 64:
-                s = br.read_symbol(htabs[(1, ac_t)])
-                if s == 0x00:  # EOB
-                    break
-                run, size = s >> 4, s & 0xF
-                if s == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                k += run
-                if k >= 64:
-                    raise ValueError("jpeg: AC index overflow")
-                r, cc = JPEG_ZIGZAG[k]
-                blk[r, cc] = _extend(br.read_bits(size), size)
-                k += 1
-            blocks.append(blk)
-    qsel = [qtabs[tq] for (_cid, tq) in comps]
-    return np.stack(blocks), (h, w, n_comp), qsel
-
-
-def decode_jpeg(b: bytes) -> np.ndarray:
-    """Full baseline decode: entropy → dequant → IDCT → level shift
-    (+ YCbCr→RGB for 3-component streams).  Returns (H, W) uint8 for
-    grayscale, (H, W, 3) uint8 RGB for color."""
-    blocks, (h, w, n_comp), qsel = decode_jpeg_coeffs(b)
-    bh, bw_ = (h + 7) // 8, (w + 7) // 8
-    planes = np.zeros((n_comp, bh * 8, bw_ * 8), dtype=np.float64)
-    bi = 0
-    for m_i in range(bh * bw_):
-        by, bx = divmod(m_i, bw_)
-        for c in range(n_comp):
-            deq = blocks[bi] * qsel[c]
-            planes[c, by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = jpeg_idct(deq)
-            bi += 1
-    planes = np.clip(np.round(planes + 128.0), 0, 255)[:, :h, :w]
-    if n_comp == 1:
-        return planes[0].astype(np.uint8)
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    bch = y + 1.772 * cb
-    rgb = np.stack([r, g, bch], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def encode_jpeg(arr: np.ndarray) -> bytes:
-    """Full baseline encode: level shift → FDCT → Annex-K quantization →
-    entropy layer.  (H, W) grayscale or (H, W, 3) RGB (YCbCr 4:4:4)."""
-    if arr.ndim == 2:
-        planes = [arr.astype(np.float64)]
-    else:
-        rf = arr[..., 0].astype(np.float64)
-        gf = arr[..., 1].astype(np.float64)
-        bf = arr[..., 2].astype(np.float64)
-        y = 0.299 * rf + 0.587 * gf + 0.114 * bf
-        cb = -0.168736 * rf - 0.331264 * gf + 0.5 * bf + 128.0
-        cr = 0.5 * rf - 0.418688 * gf - 0.081312 * bf + 128.0
-        planes = [y, cb, cr]
-    h, w = arr.shape[:2]
-    n_comp = len(planes)
-    bh, bw_ = (h + 7) // 8, (w + 7) // 8
-    padded = []
-    for p in planes:
-        pp = np.empty((bh * 8, bw_ * 8), dtype=np.float64)
-        pp[:h, :w] = p
-        pp[h:, :w] = p[-1:, :]  # edge-replicate padding
-        pp[:, w:] = pp[:, w - 1 : w]
-        padded.append(pp)
-    qblocks = []
-    for m_i in range(bh * bw_):
-        by, bx = divmod(m_i, bw_)
-        for p in padded:
-            blk = p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-            coeffs = jpeg_fdct(blk)
-            qblocks.append(
-                np.round(coeffs / JPEG_QTABLE.astype(np.float64)).astype(np.int64)
-            )
-    return encode_jpeg_from_coeffs(np.stack(qblocks), h, w, n_comp)

@@ -74,11 +74,11 @@ def test_flagship_rechecks_are_registered(contract):
     assert set(contract._FLAGSHIP_RECHECK) <= set(contract.REGISTRY)
 
 
-def test_every_oracle_emits_no_hugeint(contract):
+def test_driver_window_oracles_emit_no_hugeint(contract):
     """DuckDB's HUGEINT (Arrow decimal128(38,0)) never hashes equal to
-    Spark's int64, and the driver checks a window of ``queries()`` that
-    moves whenever an entry is deleted, so no oracle may emit it.
-    DESCRIBE binds each oracle without running it."""
+    Spark's int64.  The driver hashes a window of ``queries()`` that moves
+    whenever an entry is deleted, so every oracle is checked, not only the
+    current window.  DESCRIBE binds each oracle without running it."""
     hugeint = {}
     with _load("check_oracles", "tools/check_oracles.py").duckdb_views() as con:
         for name, sql in contract.oracle_sql().items():
