@@ -81,8 +81,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """ANSI-SQL oracles (DuckDB dialect) for every SQL-expressible query;
-    hash-seeded LSH/MinHash structures are rows-only by design."""
+    """ANSI-SQL oracles (DuckDB dialect), one per query of ``queries()``
+    and in its order: every registry entry has one."""
     return {
         name: REGISTRY[name][1]
         for name in _rotated_names()

@@ -1,10 +1,8 @@
-"""Registry: operator name → (Spark query fn, DuckDB oracle SQL | None).
+"""Registry: operator name → (Spark query fn, DuckDB oracle SQL).
 
 This is the driver-contract surface (``__spark_entry__.py``): every
-operator claimed in SURVEY §2 has an entry; oracle SQL is ANSI/DuckDB
-dialect over the pre-registered parquet views.  Entries with ``None``
-oracle are genuinely non-SQL-expressible (hash-seeded LSH structures) and
-get the driver's rows-only check.
+operator claimed in SURVEY §2 has an entry, and every entry has oracle
+SQL in ANSI/DuckDB dialect over the pre-registered parquet views.
 
 Oracle-parity rules (mirrored in operators/relational.py):
 - identical aliases both sides;

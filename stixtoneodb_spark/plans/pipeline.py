@@ -20,29 +20,47 @@ and read back, so every stage table doubles as a resume point:
   name universe and the exception set (``canonical_label != name``) of the
   canonical map, persisted once, both tables written from it;
 - S5 ``s5_nodes`` / ``s5_edges`` → ``nodes`` / ``edges``: insert-if-absent
-  MERGE, so appending a run adds to the graph.
+  MERGE, so appending a run adds to the graph.  ``edges`` reads S4's
+  persisted join, not the ``linked_triples`` table.
 
-Resume contract: every stage writes its output table plus a
-``_checkpoints`` row (run_id, stage, part, status, rows, wall_s).  ``run()``
-with the same run_id skips stages whose checkpoint row is 'done' and whose
-table exists — kill-and-resume yields identical outputs because all keys
-are content-derived (functions.ids).  The checkpoint and ``_metrics``
-tables are a ledger of driver-written parquet files, one per appended row
-(a run's ``_metrics`` rows share one file), renamed into place after the
-stage's own table: bookkeeping runs no Spark job.  The checkpoint ledger is
-read once per run with pyarrow; row counts ride the stage writes as
-Observations.  Every frame a run persists is released before it returns,
+The stages form a DAG, and the ones that do not read each other's output
+run as one wave of concurrent Spark jobs, one driver thread per stage
+(``_wave``), so the driver does not wait on one job while cores sit idle:
+
+1. ``turns``;
+2. ``mentions`` ∥ ``triples_raw``, both from the persisted fused frame;
+3. ``canonical_map``;
+4. ``linked_triples`` ∥ ``dropped_triples`` ∥ ``nodes`` ∥ ``edges``, from
+   the canonical map, the S2 tables and the persisted S4 join.
+
+Each stage thread inherits the caller's job group, local properties and
+tags.  A wave returns once all of its stages have ended; a failed stage's
+error is re-raised then, and no sibling job is left running.
+
+Resume contract: every stage writes its output table, then appends its own
+``_checkpoints`` row (run_id, stage, part, status, rows, wall_s), so a
+sibling's failure does not cost a finished stage its resume point.
+``run()`` with the same run_id skips stages whose checkpoint row is 'done'
+and whose table exists — kill-and-resume yields identical outputs because
+all keys are content-derived (functions.ids).  The checkpoint and
+``_metrics`` tables are a ledger of driver-written parquet files, one per
+appended row (a run's ``_metrics`` rows share one file), renamed into place
+after the stage's own table: bookkeeping runs no Spark job.  The checkpoint
+ledger is read once per run with pyarrow; row counts ride the stage writes
+as Observations.  Every frame a run persists is released before it returns,
 so no cache keyed on a warehouse path outlives the run that wrote the path.
 """
 
 from __future__ import annotations
 
-import functools
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from stixtoneodb_spark.plans import assemble, canonicalize, extract, link, materialize
 from stixtoneodb_spark.plans.catalog import ParquetMergeCatalog
@@ -111,6 +129,9 @@ class KgPipeline:
         self.ingest_buckets = ingest_buckets
         self.metrics: dict[str, float] = {}
         self._done: dict[tuple[str, int], int] | None = None
+        # guards ``_done`` and ``metrics``: the stages of a wave mark
+        # themselves done from their own threads
+        self._lock = threading.Lock()
 
     # The ledger tables (driver-written rows, see ``catalog.append``).
     CKPT_TABLE = "_checkpoints"
@@ -162,10 +183,11 @@ class KgPipeline:
             [(self.run_id, stage, part, "done", rows, float(wall_s))],
             self.CKPT_SCHEMA,
         )
-        self._finished()[(stage, part)] = rows
         suffix = f"_p{part}" if part >= 0 else ""
-        self.metrics[f"{stage}{suffix}_rows"] = rows
-        self.metrics[f"{stage}{suffix}_wall_s"] = wall_s
+        with self._lock:
+            self._finished()[(stage, part)] = rows
+            self.metrics[f"{stage}{suffix}_rows"] = rows
+            self.metrics[f"{stage}{suffix}_wall_s"] = wall_s
 
     # -- per-partition (conv_id-bucket) ingest ----------------------------
     def ingest_partitioned(
@@ -217,6 +239,27 @@ class KgPipeline:
         self._mark(name, int(obs.get["rows"]), time.time() - t0)
         return self.catalog.read(table)
 
+    def _wave(self, *stages: tuple) -> list[DataFrame]:
+        """Run independent ``_stage`` calls (one argument tuple each) as
+        concurrent Spark jobs, one driver thread per stage, and return
+        their read-back frames in order.  Each thread inherits the
+        caller's job group, local properties and tags.  Every stage marks
+        itself done as soon as its own write lands, and the wave returns
+        only once every stage has ended, so a failed stage leaves no
+        sibling job running; its error is re-raised."""
+        with ThreadPoolExecutor(len(stages)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(self._stage), *args)
+                for args in stages
+            ]
+        frames = [f.result() for f in futures]
+        # metrics in stage order, whatever order the writes finished in
+        for name, *_ in stages:
+            for key in (f"{name}_rows", f"{name}_wall_s"):
+                if key in self.metrics:
+                    self.metrics[key] = self.metrics.pop(key)
+        return frames
+
     # -- the pipeline -----------------------------------------------------
     def run(
         self, transcripts: DataFrame, alias_edges: DataFrame | None = None
@@ -248,8 +291,10 @@ class KgPipeline:
             # persisted tagged stream feeds both table writes.
             fused = keep(extract.extract_fused(turns))
             f_mentions, f_triples = extract.split_fused(fused)
-            mentions = self._stage("s2_mentions", "mentions", lambda: f_mentions)
-            triples_raw = self._stage("s2_triples", "triples_raw", lambda: f_triples)
+            mentions, triples_raw = self._wave(
+                ("s2_mentions", "mentions", lambda: f_mentions),
+                ("s2_triples", "triples_raw", lambda: f_triples),
+            )
 
             # S3: canonical map (its connected-components loop runs
             # eagerly inside the call).  S4 and S5 resolve names through
@@ -271,27 +316,23 @@ class KgPipeline:
 
             # S4: join strategy from the measured vocabulary (the S3 row
             # count, no extra job); the hot-name set exists only for the
-            # shuffle plan, whose salting it drives.
-            @functools.cache
-            def resolved() -> link.LinkResult:
-                broadcast = self._finished()[("s3_canonical_map", -1)] <= BROADCAST_UNIVERSE_MAX
-                hot = None
-                if not broadcast:
-                    hot = keep(hot_names(name_type_counts))
-                    if hot.limit(1).count() == 0:
-                        hot = None
-                lr = link.link_triples(
-                    triples_raw,
-                    name_universe=canon.select("name"),
-                    exceptions=exceptions,
-                    hot_names=hot,
-                    n_salt=SALT_BUCKETS,
-                    broadcast_universe=broadcast,
-                )
-                return link.LinkResult(keep(lr.joined))
-
-            linked = self._stage("s4_link", "linked_triples", lambda: resolved().linked)
-            dropped = self._stage("s4_dropped", "dropped_triples", lambda: resolved().dropped)
+            # shuffle plan, whose salting it drives.  The persisted join
+            # feeds both S4 tables and the S5 triple edges.
+            broadcast = self._finished()[("s3_canonical_map", -1)] <= BROADCAST_UNIVERSE_MAX
+            hot = None
+            if not broadcast:
+                hot = keep(hot_names(name_type_counts))
+                if hot.limit(1).count() == 0:
+                    hot = None
+            joined = link.link_triples(
+                triples_raw,
+                name_universe=canon.select("name"),
+                exceptions=exceptions,
+                hot_names=hot,
+                n_salt=SALT_BUCKETS,
+                broadcast_universe=broadcast,
+            ).joined
+            resolved = link.LinkResult(keep(joined))
 
             # S5: nodes from vocabulary-scale type counts; provenance edges
             # resolve each mention name inline (exception join + sha2).
@@ -309,12 +350,18 @@ class KgPipeline:
                 mentions_canon = canonicalize.attach_canonical(
                     named.select("name", "conv_id", "turn_idx"), exceptions
                 )
-                return materialize.triple_edges(linked).unionByName(
+                return materialize.triple_edges(resolved.linked).unionByName(
                     materialize.mention_edges(mentions_canon)
                 )
 
-            nodes = self._stage("s5_nodes", "nodes", _nodes, key_col="id")
-            edges = self._stage("s5_edges", "edges", _edges, key_col="id")
+            # S4 and S5 read only S3's outputs and the persisted join, so
+            # their four writes run as one wave.
+            _, dropped, nodes, edges = self._wave(
+                ("s4_link", "linked_triples", lambda: resolved.linked),
+                ("s4_dropped", "dropped_triples", lambda: resolved.dropped),
+                ("s5_nodes", "nodes", _nodes, "id"),
+                ("s5_edges", "edges", _edges, "id"),
+            )
         finally:
             for df in cached:
                 df.unpersist()

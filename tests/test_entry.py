@@ -49,6 +49,8 @@ def test_entry_rows_are_pinned(spark, contract):
 def test_oracle_sql_matches_spark(spark, contract):
     assert "kg_cooccurrence" in contract.oracle_sql()
     assert set(contract.oracle_sql()) <= set(contract.queries())
+    # every query has an oracle: none is left to a rows-only check
+    assert len(contract.oracle_sql()) == len(contract.queries())
 
     sdf = contract.entry(spark)
     # the oracle reads the very parquet files the Spark plan scans

@@ -208,3 +208,17 @@ def test_spark_written_ledger_resumes_without_rerun(spark, corpus, built, tmp_pa
     resumed._mark("extra", 1, 0.0)
     done = KgPipeline(spark, wh, run_id=RUN_ID)._finished()
     assert done == {**{(r[1], r[2]): r[4] for r in rows}, ("extra", -1): 1}
+
+
+def test_every_job_of_a_run_is_in_the_callers_job_group(spark, corpus, tmp_path):
+    """Stages that run on pipeline threads inherit the caller's job group,
+    so ``count_jobs`` sees every job a run starts: job ids are handed out
+    in sequence, and the group must hold the whole range."""
+    tr, aliases = corpus
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    pipe = KgPipeline(spark, str(tmp_path / "wh"), run_id="group")
+    first = int(dag.nextJobId())
+    _, counted = count_jobs(spark, pipe.run, tr, aliases)
+    started = int(dag.nextJobId()) - first
+    assert started > 0 and counted == started, (counted, started)

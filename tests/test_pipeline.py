@@ -243,6 +243,102 @@ def test_append_equals_union_build(spark, corpus, tmp_path_factory):
         assert got == want, (table, len(got), len(want))
 
 
+def test_wave_writes_overlap_and_a_failed_stage_resumes_alone(
+    spark, corpus, tmp_path_factory, monkeypatch
+):
+    """S4 and S5 write as one wave of concurrent jobs: the ``nodes`` write
+    overlaps the ``linked_triples`` one.  When the ``nodes`` job fails,
+    ``run()`` re-raises once no sibling job is left running, each sibling
+    that finished keeps its checkpoint row, and a resume under the same
+    run_id re-runs ``s5_nodes`` alone, sweeps every staging leftover and
+    gives the id sets of a fresh build."""
+    import os
+    import time
+
+    from stixtoneodb_spark.plans import catalog as C
+    from stixtoneodb_spark.plans import materialize
+
+    tr, _, aliases = corpus
+    spans: dict[str, tuple[float, float]] = {}
+    for method in ("overwrite", "merge_upsert"):
+
+        def timed(cat, table, *args, _orig=getattr(C.ParquetMergeCatalog, method), **kwargs):
+            t0 = time.perf_counter()
+            try:
+                return _orig(cat, table, *args, **kwargs)
+            finally:
+                spans[table] = (t0, time.perf_counter())
+
+        monkeypatch.setattr(C.ParquetMergeCatalog, method, timed)
+    fresh = KgPipeline(spark, str(tmp_path_factory.mktemp("wh_wave")), run_id="wave").run(
+        tr, alias_edges=aliases
+    )
+    (n0, n1), (l0, l1) = spans["nodes"], spans["linked_triples"]
+    assert n0 < l1 and l0 < n1, spans
+    want = {t: {r.id for r in getattr(fresh, t).select("id").collect()} for t in ("nodes", "edges")}
+    monkeypatch.undo()
+
+    real_nodes = materialize.entity_nodes_from_type_counts
+
+    def failing_nodes(type_counts):
+        return real_nodes(type_counts).withColumn(
+            "label", F.raise_error(F.lit("nodes build failed")).cast("string")
+        )
+
+    monkeypatch.setattr(materialize, "entity_nodes_from_type_counts", failing_nodes)
+    wh = str(tmp_path_factory.mktemp("wh_wave_fail"))
+    pipe = KgPipeline(spark, wh, run_id="wave")
+    with pytest.raises(Exception, match="nodes build failed"):
+        pipe.run(tr, alias_edges=aliases)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    done = {r["stage"] for r in pipe.catalog.read_rows(KgPipeline.CKPT_TABLE, ["stage"])}
+    assert {"s4_link", "s4_dropped", "s5_edges"} <= done and "s5_nodes" not in done, done
+    monkeypatch.undo()
+
+    res = KgPipeline(spark, wh, run_id="wave").run(tr, alias_edges=aliases)
+    assert {k for k in res.metrics if k.endswith("_rows")} == {"s5_nodes_rows"}, res.metrics
+    staged = [
+        e
+        for _, dirs, files in os.walk(os.path.join(wh, "_staging"))
+        for e in files + [d for d in dirs if ".tmp-" in d]
+    ]
+    assert staged == [], staged
+    for t in ("nodes", "edges"):
+        assert {r.id for r in getattr(res, t).select("id").collect()} == want[t], t
+
+
+def test_wave_marks_every_stage_in_stage_order(spark, tmp_path):
+    """Stress the shared bookkeeping of a wave: more stage threads than
+    cores, with a short switch interval, each marking itself done.  Every
+    stage keeps its checkpoint row and its metrics, and the metrics stay in
+    stage order whatever order the writes finished in."""
+    import sys
+    import threading
+
+    pipe = KgPipeline(spark, str(tmp_path / "wh"), run_id="stress")
+    pipe._finished()
+    stages = [
+        (f"s{i:02d}", f"t{i:02d}", lambda i=i: spark.range(i + 1).toDF("id"))
+        for i in range(12)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        runner = threading.Thread(target=pipe._wave, args=stages)
+        runner.start()
+        runner.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not runner.is_alive()
+    names = [name for name, *_ in stages]
+    assert list(pipe.metrics) == [f"{n}_{m}" for n in names for m in ("rows", "wall_s")]
+    assert [pipe.metrics[f"{n}_rows"] for n in names] == list(range(1, 13))
+    ledger = pipe.catalog.read_rows(KgPipeline.CKPT_TABLE, ["stage", "rows"])
+    assert sorted((r["stage"], r["rows"]) for r in ledger) == list(zip(names, range(1, 13)))
+
+
 def test_combined_mention_pass_equals_per_type(spark):
     """The single-pass combined gazetteer regex must emit exactly the
     per-type multi-pass mentions (surfaces are disjoint across types)."""

@@ -124,9 +124,6 @@ def main() -> int:
             print(f"FAIL {name}: spark error {str(ex)[:200]}")
             n_fail += 1
             continue
-        if sql is None:
-            print(f"ok   {name}: rows-only ({len(srows)} rows)")
-            continue
         try:
             rel = con.sql(sql)
             ocols = rel.columns
